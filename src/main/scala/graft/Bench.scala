@@ -61,7 +61,9 @@ object Bench {
     // Sorted by name: Map iteration order reshuffles whenever a query is
     // added, which silently re-attributes shared costs across rounds.
     // SPARK_GRAFT_BENCH_ONLY=q25,q26 restricts to a comma-separated subset
-    // (prefix match) — the iteration loop while tuning one query's plan.
+    // — the iteration loop while tuning one query's plan. It matches by
+    // PREFIX: q16 also selects q160-q169; name the full key
+    // (q16_asof_join) to select one query.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)

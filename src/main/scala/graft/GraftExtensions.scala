@@ -17,25 +17,8 @@ import graft.functions.{BloomAgg, BloomMightContain, CmsEstimate, CmsJoinSize, C
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.tokenizeS3Log)
-    e.injectFunction(GraftExtensions.ipv4ToLong)
-    e.injectFunction(GraftExtensions.cosineSimilarity)
-    e.injectFunction(GraftExtensions.intDot)
-    e.injectFunction(GraftExtensions.rollingHash64)
-    e.injectFunction(GraftExtensions.winnowFingerprints)
-    e.injectFunction(GraftExtensions.substrWindowHashes)
-    e.injectFunction(GraftExtensions.acCounts)
-    e.injectFunction(GraftExtensions.cmsSketch)
-    e.injectFunction(GraftExtensions.cmsEstimate)
-    e.injectFunction(GraftExtensions.topK)
-    e.injectFunction(GraftExtensions.bloomAgg)
-    e.injectFunction(GraftExtensions.bloomMightContain)
-    e.injectFunction(GraftExtensions.cmsJoinSize)
-    e.injectFunction(GraftExtensions.hllSketch)
-    e.injectFunction(GraftExtensions.hllUnion)
-    e.injectFunction(GraftExtensions.hllEstimate)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
 }
 
 object GraftExtensions {
@@ -242,15 +225,17 @@ object GraftExtensions {
       info("hll_estimate", "hll_estimate(sketch) - Cardinality estimate from an hll_sketch/hll_union binary."),
       (children: Seq[Expression]) => HllEstimate(children.head))
 
+  /** Every SQL function the engine adds, for `apply` and `register`. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(tokenizeS3Log, ipv4ToLong, cosineSimilarity, intDot, rollingHash64,
+      winnowFingerprints, substrWindowHashes, acCounts, cmsSketch, cmsEstimate,
+      topK, bloomAgg, bloomMightContain, cmsJoinSize, hllSketch, hllUnion,
+      hllEstimate)
+
   /** Register on an existing session (for sessions not built with
     * `withExtensions`). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    Seq(tokenizeS3Log, ipv4ToLong, cosineSimilarity, intDot, rollingHash64,
-        winnowFingerprints, substrWindowHashes, acCounts, cmsSketch, cmsEstimate,
-        topK, bloomAgg, bloomMightContain, cmsJoinSize, hllSketch, hllUnion,
-        hllEstimate).foreach {
-      case (id, inf, builder) => reg.registerFunction(id, inf, builder)
-    }
+    functions.foreach { case (id, inf, builder) => reg.registerFunction(id, inf, builder) }
   }
 }

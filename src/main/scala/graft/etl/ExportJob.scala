@@ -179,16 +179,14 @@ object ExportJob {
         val obs = org.apache.spark.sql.Observation(s"graft-export-$hour")
         write(parsed.observe(obs, count(lit(1)).as("rows")), dst, tasks)
         val n = obs.get("rows").asInstanceOf[Long]
-        // Reference file-name parity (s3access/parquet.py:89-92) is the
-        // DEFAULT: each partition dir's single file becomes
+        // Reference file-name parity (s3access/parquet.py:89-92): each
+        // partition dir's single file becomes
         // {bucket}-{op}-{y}-{m}-{d}-{h}.parquet. Only valid in
         // one-file-per-combo mode (tasks=0); multi-task exports keep
         // Spark's part-* names (several files would collide on one
-        // target). SPARK_GRAFT_REFERENCE_NAMES=0 opts out. Runs before
-        // the marker so a crash mid-rename leaves the hour unmarked.
-        if (tasks == 0 &&
-            sys.env.getOrElse("SPARK_GRAFT_REFERENCE_NAMES", "1") != "0")
-          renameToReferenceLayout(spark, dst, Some(hour))
+        // target). Runs before the marker so a crash mid-rename leaves
+        // the hour unmarked.
+        if (tasks == 0) renameToReferenceLayout(spark, dst, Some(hour))
         Tracking.mark(spark, trackingDst, hour, s"exported hour=$hour rows=$n")
         n
     }

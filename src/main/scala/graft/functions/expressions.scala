@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{array, array_compact, array_distinct, array_join, lit, sequence, size, slice, transform, when}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -337,43 +336,11 @@ object exprs {
   def ac_counts(c: Column, patterns: Seq[String]): Column =
     column(AcCounts(expression(c), patterns))
   def int_sqdist(a: Column, b: Column): Column =
-    // GRAFT_BENCH_HOF_SQDIST=1 swaps back the HOF chain — the pricing
-    // knob (call sites add their own outer coalesce, as before)
-    if (sys.env.contains("GRAFT_BENCH_HOF_SQDIST")) {
-      import org.apache.spark.sql.functions.{aggregate, zip_with, coalesce}
-      aggregate(
-        zip_with(a, b, (p, q) => coalesce((p - q) * (p - q), lit(0L))),
-        lit(0L), (acc, e) => acc + e)
-    } else column(IntSqDist(expression(a), expression(b)))
+    column(IntSqDist(expression(a), expression(b)))
   def dec_dot(a: Column, b: Column, scale: Int): Column =
-    // GRAFT_BENCH_HOF_DECDOT=1 swaps back the aggregate/zip_with HOF
-    // chain — the kernel-vs-HOF pricing knob (same contract as
-    // GRAFT_BENCH_HOF_NGRAMS; bit parity spec-asserted in Wave29Spec)
-    if (sys.env.contains("GRAFT_BENCH_HOF_DECDOT")) {
-      import org.apache.spark.sql.functions.{aggregate, zip_with}
-      aggregate(
-        zip_with(a, b, (p, q) =>
-          (p.cast("double") * q.cast("double")).cast(s"decimal(28,$scale)")),
-        lit(java.math.BigDecimal.ZERO).cast(s"decimal(28,$scale)"),
-        (acc, e) => (acc + e).cast(s"decimal(28,$scale)"))
-    } else column(DecDot(expression(a), expression(b), scale))
+    column(DecDot(expression(a), expression(b), scale))
   def word_ngrams(c: Column, n: Int, distinct: Boolean = false): Column =
-    // GRAFT_BENCH_HOF_NGRAMS=1 swaps in the HOF formulation the kernel
-    // replaced — a plan-construction-time switch (zero runtime cost when
-    // unset) kept ONLY so kernel-vs-HOF cost can be re-measured in one
-    // host phase (BENCHLOG "WordNGrams per-site pricing"). Bit-parity of
-    // the two forms is spec-asserted in Wave20Spec.
-    if (sys.env.contains("GRAFT_BENCH_HOF_NGRAMS")) {
-      // compact nulls BEFORE windowing, like the kernel — slicing the
-      // original positions would shift windows and array_join would drop
-      // nulls inside a gram, breaking the bit-parity contract
-      val cc = array_compact(c)
-      val raw = when(size(cc) >= n,
-        transform(sequence(lit(1), size(cc) - (n - 1)),
-          i => array_join(slice(cc, i, lit(n)), " ")))
-        .otherwise(array().cast("array<string>"))
-      if (distinct) array_distinct(raw) else raw
-    } else column(WordNGrams(expression(c), n, distinct))
+    column(WordNGrams(expression(c), n, distinct))
   def cms_sketch(c: Column, depth: Int = 5, width: Int = 2048): Column =
     column(CountMinSketchAgg(expression(c), depth, width).toAggregateExpression())
   def cms_estimate(sketch: Column, item: Column): Column =

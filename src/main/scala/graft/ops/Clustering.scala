@@ -351,7 +351,7 @@ object Clustering {
     * Shape at 100 TB: the q81 narrow assignment pass + ONE map-combined
     * (cluster × label) aggregate; everything downstream operates on the
     * ≤ k·|labels| grid — broadcast-scale, no second corpus pass.
-    * PlanAudit's BNLJ|SinglePartition flags here are the standing 1-row
+    * `Diag plan`'s BNLJ|SinglePartition flags here are the standing 1-row
     * scalar-attach idiom (six 1-row aggregate frames cross-joined). */
   def q208ClusteringAgreement(s: SparkSession, dir: String,
                               k: Int = 8): DataFrame = {

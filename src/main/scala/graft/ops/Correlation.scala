@@ -158,7 +158,7 @@ object Correlation {
     *
     * Shape at 100 TB: ONE map-combined per-source moment aggregate
     * (4 scalars per source), a 1-row pooled reduction of THAT frame,
-    * one broadcast join (PlanAudit's BNLJ|SinglePartition flags = the
+    * one broadcast join (`Diag plan`'s BNLJ|SinglePartition flags = the
     * standing 1-row scalar-attach idiom). */
   def q221SimpsonAudit(s: SparkSession, dir: String): DataFrame = {
     val nTok = TextAnalysis.tokenCount(col("text"))

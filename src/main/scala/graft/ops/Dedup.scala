@@ -936,7 +936,7 @@ object Dedup {
     * Shape at 100 TB: one (md5 → min doc_id) aggregate (map-side
     * combined; the fingerprint is 32 bytes/doc on the wire), one
     * equi-join back, one ≤|batches| aggregate; the cumulative window
-    * runs over the bounded batch frame (PlanAudit's SinglePartition
+    * runs over the bounded batch frame (`Diag plan`'s SinglePartition
     * flag here is that ≤|batches|-row frame — the tier-funnel idiom,
     * bounded by construction). Determinism: everything is exact
     * integers until the two round-6 rates. */

@@ -183,7 +183,7 @@ object Quantize {
     * for this corpus ([[AnnTuner.tuneSemDedupCells]]: 64 split most
     * near-dup pairs, 8 keeps them co-located at recall ≥ 0.7).
     *
-    * PlanAudit note: the BroadcastNestedLoopJoin it flags here is
+    * `Diag plan` note: the BroadcastNestedLoopJoin it flags here is
     * [[Clustering.assignByJoin]]'s `crossJoin(broadcast(centroids))` —
     * nCells bounded model rows broadcast against one narrow corpus
     * scan, linear in n·c (the standing bounded-model-attach idiom). */

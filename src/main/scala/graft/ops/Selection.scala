@@ -390,6 +390,9 @@ object Selection {
     // covered had NO rows in the old gains frame and has gain 0 here —
     // it can win neither argmax while any positive gain remains, and a
     // 0-gain best stops the loop before picking in both forms.
+    // TextAnalysis.tokens maps a null text to an empty array, so ws is
+    // never null: a doc without shingles has gain 0, never a null gain
+    // for getLong below (Wave36Spec pins an all-null-text corpus).
     val docsArr = Par.widen(graft.Tables.documents(s, dir))
       .select(col("doc_id"),
         graft.functions.exprs.word_ngrams(

@@ -199,8 +199,9 @@ object StreamingGates {
     * hourly window: (window_start_us, n_stream, n_batch,
     * n_dropped_late).
     *
-    * What the oracle pins (Spark's exact drop rule, discovered by the
-    * ProbeLate experiment and asserted here): the watermark DURING
+    * What the oracle pins (Spark's exact drop rule, found by a
+    * three-batch late-row experiment and asserted here and in
+    * Wave40Spec): the watermark DURING
     * batch i is (max event-time ms over batches < i) − delay ms,
     * scaled to µs, and a batch-i row is dropped iff its WINDOW END ≤
     * the PREVIOUS batch's watermark — i.e. iff its window was already

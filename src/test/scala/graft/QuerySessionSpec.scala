@@ -39,6 +39,13 @@ class QuerySessionSpec extends SparkSpec {
     assert(cidr == 1L)
   }
 
+  test("register makes every engine SQL function resolvable") {
+    GraftExtensions.register(spark)
+    val names = GraftExtensions.functions.map(_._1.funcName)
+    assert(names.size == 17 && names.distinct.size == 17)
+    names.foreach(n => assert(spark.catalog.functionExists(n), n))
+  }
+
   test("top_k callable from SQL matches the window formulation") {
     GraftExtensions.register(spark)
     val viaSql = spark.sql(

@@ -34,7 +34,7 @@ class ExportJobSpec extends SparkSpec {
       s"$dst/bucket_name=awsexamplebucket1/operation=REST.GET.LOGGING_STATUS/year=2021/month=7/day=18/hour=5").isDirectory)
 
     // reference-parity file names (s3access/parquet.py:89-92) come out of
-    // runHour itself — SPARK_GRAFT_REFERENCE_NAMES defaults on
+    // runHour itself
     assert(new java.io.File(
       s"$dst/bucket_name=awsexamplebucket1/operation=REST.GET.OBJECT/year=2021/month=7/day=18/hour=5/" +
         "awsexamplebucket1-REST.GET.OBJECT-2021-7-18-5.parquet").isFile)

@@ -74,8 +74,8 @@ class ScaleOpsSpec extends SparkSpec {
     new java.io.File(src).mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-AAAA"),
       (graft.Fixtures.happyLine + "\n" + graft.Fixtures.dashLine).getBytes)
-    // the rename is wired into runHour itself (SPARK_GRAFT_REFERENCE_NAMES
-    // defaults on) — no manual renameToReferenceLayout call
+    // the rename is wired into runHour itself — no manual
+    // renameToReferenceLayout call
     graft.etl.ExportJob.runHour(spark, src, dst, s"$base/track", "2021-07-18-05")
     assert(new java.io.File(
       s"$dst/bucket_name=awsexamplebucket1/operation=REST.GET.OBJECT/year=2021/month=7/day=18/hour=5/" +

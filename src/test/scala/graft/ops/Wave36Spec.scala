@@ -65,4 +65,14 @@ class Wave36Spec extends SparkSpec {
       gains.mkString(","))
     assert(out.map(_.getLong(2)).sum == out.last.getLong(3))
   }
+
+  test("q243: documents whose text is all null pick nothing and do not throw") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-q243-null")
+      .toFile.getAbsolutePath
+    (1L to 5L).map(i => (i, null: String, "en", "web", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(Selection.q243CoverageSelect(spark, dir).collect().isEmpty)
+  }
 }
