@@ -35,6 +35,9 @@ object GraftSession {
       // events.ts is parquet TIMESTAMP(NANOS) — unreadable as Spark's µs
       // TimestampType; surface it as epoch-nanos LongType (Tables scaladoc).
       .config(Tables.NanosAsLongKey, "true")
+      // local files get their permissions without a forked `chmod` per
+      // file, .crc and dir (graft.io.LocalFs scaladoc)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
     // spark-submit --master (or spark.master in a cluster deploy) wins;
     // the local[] default only applies when launched standalone (sbt/tests)
     if (sys.props.contains("spark.master")) b else b.master(master)

@@ -51,7 +51,9 @@ object Compaction {
     val obs = org.apache.spark.sql.Observation("graft-compact")
     df.observe(obs, count(lit(1)).as("rows"))
       .repartition(nFiles, LogSchema.partitionCols.map(col): _*)
-      .sortWithinPartitions(LogSchema.rowGroupCols.map(col): _*)
+      // partition cols first, else the write's planned sort drops this one
+      // (ExportJob.write scaladoc)
+      .sortWithinPartitions((LogSchema.partitionCols ++ LogSchema.rowGroupCols).map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .option("compression", "snappy")
       .partitionBy(LogSchema.partitionCols: _*)

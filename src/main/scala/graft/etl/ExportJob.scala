@@ -38,13 +38,18 @@ object ExportJob {
     *     one-file-per-partition-combo layout (each combo hashes to one
     *     task — at 100 TB swap for `repartition(n, cols)` or drop it and
     *     accept multiple files per partition);
-    *   - `sortWithinPartitions(rowGroupCols)` clusters rows so Parquet
-    *     row-group min/max stats are tight on the common predicates —
-    *     the Spark equivalent of the reference's per-key-combo
-    *     `write_table` loop (parquet.py:20-21);
+    *   - `sortWithinPartitions(partitionCols ++ rowGroupCols)` clusters
+    *     each file's rows on `rowGroupCols` so Parquet row-group min/max
+    *     stats are tight on the common predicates — the Spark equivalent
+    *     of the reference's per-key-combo `write_table` loop
+    *     (parquet.py:20-21). The partition columns lead because the
+    *     planned write requires its input sorted on them: a sort on
+    *     `rowGroupCols` alone gets a `Sort(partitionCols)` planned above
+    *     it, and the optimizer then drops the inner sort as redundant,
+    *     leaving files unclustered. The combined sort satisfies the
+    *     write's ordering, so the plan keeps exactly this one sort;
     *   - Hive `col=value/` dirs + partition-column dropping are built into
-    *     `partitionBy`. File names are Spark's `part-*` (documented
-    *     divergence, SURVEY.md §7.4#1).
+    *     `partitionBy`.
     */
   def write(df: DataFrame, dst: String, tasksPerHour: Int = 0): Unit = {
     import LogSchema._
@@ -57,7 +62,7 @@ object ExportJob {
       if (tasksPerHour > 0) df.repartition(tasksPerHour, partitionCols.map(col): _*)
       else df.repartition(partitionCols.map(col): _*)
     partitioned
-      .sortWithinPartitions(rowGroupCols.map(col): _*)
+      .sortWithinPartitions((partitionCols ++ rowGroupCols).map(col): _*)
       .write
       .mode(SaveMode.Append)
       .option("compression", "snappy")

@@ -81,4 +81,32 @@ class ExportJobSpec extends SparkSpec {
       .collect()(0).getString(0)
     assert(ft == "2021-07-18 05:00:12")
   }
+
+  test("each exported file is sorted on rowGroupCols") {
+    val base = Files.createTempDirectory("graft-cluster").toFile.getAbsolutePath
+    val src = s"$base/in"; val dst = s"$base/out"
+    new java.io.File(src).mkdirs()
+    // 60 rows in one partition combo, requesters and IPs in scrambled order,
+    // plus the dash line's anonymous rows in a second combo
+    val lines = (0 until 60).map { i =>
+      val k = (i * 37) % 60
+      Fixtures.happyLine
+        .replace("user/alice", f"user/u${k % 7}%02d")
+        .replace("192.0.2.3", s"192.0.2.${(k * 11) % 250}")
+    } ++ Seq.fill(3)(Fixtures.dashLine)
+    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-ABCDEF0123456789"),
+      lines.mkString("\n").getBytes)
+    assert(ExportJob.runHour(spark, src, dst, s"$base/track", "2021-07-18-05") == 63L)
+
+    val files = Files.walk(java.nio.file.Paths.get(dst)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(files.size == 2)
+    val keys = LogSchema.rowGroupCols.map(org.apache.spark.sql.functions.col)
+    for (f <- files) {
+      val inFileOrder = spark.read.parquet(f).select(keys: _*).collect().toSeq
+      assert(inFileOrder == spark.read.parquet(f).select(keys: _*).sort(keys: _*).collect().toSeq, f)
+    }
+    val big = spark.read.parquet(files.filter(_.contains("REST.GET.OBJECT")): _*)
+    assert(big.select("requester").distinct().count() == 7)
+  }
 }
