@@ -27,6 +27,10 @@ export: $(JAR) ## Export one hour of access logs to partitioned Parquet (env: SR
 test: ## Run the ScalaTest suite
 	sbt -batch test
 
+.PHONY: test-etl
+test-etl: ## Run only the export-path specs (parse, export, compaction, sources, streaming)
+	sbt -batch "testOnly graft.functions.ParseSpec graft.etl.ExportJobSpec graft.etl.CompactionSpec graft.sources.SourcesSpec graft.streaming.StreamingSpec"
+
 .PHONY: verify
 verify: ## Dump every declared query at sf0.01 for the DuckDB oracle compare
 	sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"

@@ -1,54 +1,35 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.exprs
+import graft.functions.{S3LogParse, exprs}
 
 /** Projection + derived columns (reference s3access/normalize.py:18-83),
   * expressed as a single narrow `select` over the tokenized line — one
-  * whole-stage-codegen span, no shuffle.
+  * whole-stage-codegen span, no shuffle. The per-row work is three
+  * byte-level kernels in `graft.functions`: the tokenizer, the request
+  * time (all eight time fields from one read of the token) and the
+  * numeric fields; each hands the inputs it cannot decide to the regex or
+  * to Spark's own formatter.
   */
 object Enrich {
-
-  /** `"-"` → 0, else cast to long (reference `field_to_int`,
-    * s3access/normalize.py:9-15 — sentinel erases the null/zero
-    * distinction deliberately, for parity). Non-numeric garbage → NULL:
-    * under ANSI mode a bare cast would throw and one corrupt line would
-    * kill a 100 TB job (the reference does crash there — divergence as
-    * with IPv4, SURVEY §1.4#5). */
-  def dashToLong(c: Column): Column =
-    when(c === "-", lit(0L))
-      .when(c.rlike("^\\d+$"), c.cast("long"))
-      .otherwise(lit(null).cast("long"))
-
-  /** Event timestamp: `18/Jul/2021:05:00:01 +0000`
-    * (reference s3access/normalize.py:53, strptime `%d/%b/%Y:%H:%M:%S %z`). */
-  val TsPattern = "dd/MMM/yyyy:HH:mm:ss xx"
 
   /** From a DataFrame with a `tokens: array<string>` column, produce the
     * full 35-column log schema (LogSchema.schema ordering).
     *
-    * Calendar parts are extracted in session-UTC; the reference extracts
-    * in the event's own offset, which for S3 logs is always +0000
-    * (SURVEY.md §2.2 note). */
+    * Calendar parts are extracted in the session zone (UTC in every engine
+    * session); the reference extracts in the event's own offset, which for
+    * S3 logs is always +0000 (SURVEY.md §2.2 note). An unparseable request
+    * time nulls all eight time fields. */
   def fromTokens(df: DataFrame): DataFrame = {
     val raw = LogSchema.rawNames.zipWithIndex.map { case (name, i) =>
       val tok = get(col("tokens"), lit(i))
-      if (LogSchema.longFields(name)) dashToLong(tok).as(name) else tok.as(name)
+      if (LogSchema.longFields(name)) exprs.dash_to_long(tok).as(name) else tok.as(name)
     }
-    // try_: an unparseable timestamp nulls the derived columns instead of
-    // throwing under ANSI mode (same hostile-input stance as dashToLong)
-    val t = try_to_timestamp(get(col("tokens"), lit(2)), lit(TsPattern))
-    val derived = Seq(
-      unix_timestamp(t).as("ts"),
-      year(t).cast("long").as("year"),
-      month(t).as("month"),
-      dayofmonth(t).as("day"),
-      hour(t).as("hour"),
-      minute(t).as("minute"),
-      second(t).as("second"),
-      // matches Python datetime.isoformat() for +00:00 inputs
-      date_format(t, "yyyy-MM-dd'T'HH:mm:ssxxx").as("datetime"),
+    // one struct, read eight times: subexpression elimination evaluates it once
+    val t = exprs.s3_request_time(get(col("tokens"), lit(2)))
+    val time = S3LogParse.RequestTimeType.fieldNames.toSeq.map(f => t.getField(f).as(f))
+    val derived = time ++ Seq(
       exprs.ipv4_to_long(get(col("tokens"), lit(3))).as("remoteip_int"),
       get(col("tokens"), lit(4)).contains("assumed-role").as("is_assumed_role"),
       get(col("tokens"), lit(4)).contains("user").as("is_user"))

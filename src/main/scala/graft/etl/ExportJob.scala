@@ -35,9 +35,10 @@ object ExportJob {
   /** Partitioned, clustered, Snappy parquet sink (reference
     * s3access/parquet.py:31-112):
     *   - `repartition(partitionCols)` gives the reference's
-    *     one-file-per-partition-combo layout (each combo hashes to one
-    *     task — at 100 TB swap for `repartition(n, cols)` or drop it and
-    *     accept multiple files per partition);
+    *     one-file-per-partition-combo layout: every row of a combo hashes
+    *     to the same task, whatever the task count. A hot combo therefore
+    *     lands on one task; spreading it needs a salt in the partitioning
+    *     key (and then several files per dir);
     *   - `sortWithinPartitions(partitionCols ++ rowGroupCols)` clusters
     *     each file's rows on `rowGroupCols` so Parquet row-group min/max
     *     stats are tight on the common predicates — the Spark equivalent
@@ -51,17 +52,9 @@ object ExportJob {
     *   - Hive `col=value/` dirs + partition-column dropping are built into
     *     `partitionBy`.
     */
-  def write(df: DataFrame, dst: String, tasksPerHour: Int = 0): Unit = {
+  def write(df: DataFrame, dst: String): Unit = {
     import LogSchema._
-    // tasksPerHour = 0 reproduces the reference's one-file-per-partition-
-    // combo layout (each combo hashes to one task). At 100 TB an hour's
-    // hot (bucket, operation) can exceed one task: pass an explicit task
-    // count and the same combo spreads over many tasks/files while the
-    // directory layout and row-group clustering are unchanged.
-    val partitioned =
-      if (tasksPerHour > 0) df.repartition(tasksPerHour, partitionCols.map(col): _*)
-      else df.repartition(partitionCols.map(col): _*)
-    partitioned
+    df.repartition(partitionCols.map(col): _*)
       .sortWithinPartitions((partitionCols ++ rowGroupCols).map(col): _*)
       .write
       .mode(SaveMode.Append)
@@ -171,10 +164,6 @@ object ExportJob {
       case None => -1L
       case Some(lines) =>
         val parsed = Enrich.parseLines(lines)
-        // SPARK_GRAFT_EXPORT_TASKS>0 spreads hot partition combos over
-        // that many write tasks (multiple files per partition dir) —
-        // default 0 keeps reference one-file-per-combo parity
-        val tasks = sys.env.getOrElse("SPARK_GRAFT_EXPORT_TASKS", "0").toInt
         // observe() counts the rows that flow through THIS write — no
         // post-write re-scan of dst (which accumulates across hours under
         // SaveMode.Append: a year in, that scan reads ~8,760 hours to
@@ -182,16 +171,13 @@ object ExportJob {
         // per-hour). The metric is only published once the write commits,
         // so the marker still reflects committed rows.
         val obs = org.apache.spark.sql.Observation(s"graft-export-$hour")
-        write(parsed.observe(obs, count(lit(1)).as("rows")), dst, tasks)
+        write(parsed.observe(obs, count(lit(1)).as("rows")), dst)
         val n = obs.get("rows").asInstanceOf[Long]
         // Reference file-name parity (s3access/parquet.py:89-92): each
         // partition dir's single file becomes
-        // {bucket}-{op}-{y}-{m}-{d}-{h}.parquet. Only valid in
-        // one-file-per-combo mode (tasks=0); multi-task exports keep
-        // Spark's part-* names (several files would collide on one
-        // target). Runs before the marker so a crash mid-rename leaves
-        // the hour unmarked.
-        if (tasks == 0) renameToReferenceLayout(spark, dst, Some(hour))
+        // {bucket}-{op}-{y}-{m}-{d}-{h}.parquet. Runs before the marker so
+        // a crash mid-rename leaves the hour unmarked.
+        renameToReferenceLayout(spark, dst, Some(hour))
         Tracking.mark(spark, trackingDst, hour, s"exported hour=$hour rows=$n")
         n
     }

@@ -1,16 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{DateTimeConstants, DateTimeUtils, LegacyDateFormats, TimestampFormatter}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the two operations the reference
-  * implements in Python and Spark lacks as builtins (SURVEY.md §2.2):
-  * the access-log tokenizer and IPv4→int. Both implement `doGenCode` so
-  * they stay inside whole-stage codegen — no UDF serialization, no
-  * row-at-a-time boxing beyond the unavoidable string work.
+/** Custom Catalyst expressions. The access-log parse (SURVEY.md §2.2) is
+  * four of them: the tokenizer, the request-time fields, the numeric
+  * fields and IPv4→int. Each implements `doGenCode` so it stays inside
+  * whole-stage codegen — no UDF serialization, no row-at-a-time boxing
+  * beyond the unavoidable string work.
   */
 
 /** Splits one S3 access-log line into its fields.
@@ -30,6 +32,94 @@ case class TokenizeS3Log(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): TokenizeS3Log =
     copy(child = newChild)
   override def prettyName: String = "tokenize_s3_log"
+}
+
+/** The eight fields derived from an access-log request time (reference
+  * s3access/normalize.py:53-66) as one `S3LogParse.RequestTimeType`
+  * struct, NULL when the token does not parse. Equal, field by field, to
+  * `try_to_timestamp(child, RequestTimePattern)` followed by
+  * `unix_timestamp`, `year` (as long), `month`, `dayofmonth`, `hour`,
+  * `minute`, `second` and `date_format(DatetimePattern)` in the session
+  * zone. A UTC session reads canonical tokens by arithmetic
+  * (`S3LogParse.requestTimeUtc`); every other token, and every token in
+  * another zone, goes through Spark's own `TimestampFormatter`. */
+case class S3RequestTime(child: Expression, timeZoneId: Option[String] = None)
+  extends UnaryExpression with TimeZoneAwareExpression {
+  override def dataType: DataType = S3LogParse.RequestTimeType
+  override def nullable: Boolean = true
+  override def checkInputDataTypes() = {
+    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"s3_request_time requires STRING, got ${child.dataType.sql}")
+  }
+  override def withTimeZone(tz: String): S3RequestTime = copy(timeZoneId = Option(tz))
+
+  @transient private lazy val utc = zoneId.normalized() == java.time.ZoneOffset.UTC
+  @transient private lazy val parser = TimestampFormatter(S3LogParse.RequestTimePattern, zoneId,
+    LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = true)
+  @transient private lazy val printer = TimestampFormatter(S3LogParse.DatetimePattern, zoneId,
+    LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false)
+
+  /** Spark's formatter path: what `try_to_timestamp` and the extractors
+    * compute, NULL where `try_to_timestamp` gives NULL. */
+  def viaFormatter(s: UTF8String): InternalRow = {
+    val micros =
+      try parser.parse(s.toString)
+      catch { case _: java.time.DateTimeException | _: java.text.ParseException => return null }
+    val days = DateTimeUtils.microsToDays(micros, zoneId)
+    new GenericInternalRow(Array[Any](
+      Math.floorDiv(micros, DateTimeConstants.MICROS_PER_SECOND),
+      DateTimeUtils.getYear(days).toLong, DateTimeUtils.getMonth(days),
+      DateTimeUtils.getDayOfMonth(days), DateTimeUtils.getHours(micros, zoneId),
+      DateTimeUtils.getMinutes(micros, zoneId), DateTimeUtils.getSeconds(micros, zoneId),
+      UTF8String.fromString(printer.format(micros))))
+  }
+
+  override def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    val fast = if (utc) S3LogParse.requestTimeUtc(s) else null
+    if (fast != null) fast else viaFormatter(s)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("requestTime", this)
+    nullSafeCodeGen(ctx, ev, c => {
+      val fast = if (utc) s"graft.functions.S3LogParse.requestTimeUtc($c)" else "null"
+      s"""${ev.value} = $fast;
+         |if (${ev.value} == null) ${ev.value} = $self.viaFormatter($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin
+    })
+  }
+  override protected def withNewChildInternal(newChild: Expression): S3RequestTime =
+    copy(child = newChild)
+  override def prettyName: String = "s3_request_time"
+}
+
+/** A numeric access-log field as a long (S3LogParse.dashToLong): `-` → 0,
+  * digits → their value (reference `field_to_int`, s3access/normalize.py:9-15
+  * — the sentinel erases the null/zero distinction deliberately, for
+  * parity). Non-numeric garbage, and a digit run above Long.MaxValue,
+  * → NULL, never an error: one corrupt line must not kill a 100 TB job
+  * (the reference does crash there — divergence as with IPv4, SURVEY
+  * §1.4#5). */
+case class DashToLong(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def checkInputDataTypes() = {
+    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"dash_to_long requires STRING, got ${child.dataType.sql}")
+  }
+  override def nullSafeEval(input: Any): Any = {
+    val r = S3LogParse.dashToLong(input.asInstanceOf[UTF8String])
+    if (r >= 0L) java.lang.Long.valueOf(r) else null
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.S3LogParse.dashToLong($c);
+         |${ev.isNull} = ${ev.value} < 0L;""".stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): DashToLong =
+    copy(child = newChild)
+  override def prettyName: String = "dash_to_long"
 }
 
 /** Dotted-quad IPv4 string → its unsigned 32-bit value as a long.
@@ -322,6 +412,8 @@ object exprs {
   import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 
   def tokenize_s3_log(c: Column): Column = column(TokenizeS3Log(expression(c)))
+  def s3_request_time(c: Column): Column = column(S3RequestTime(expression(c)))
+  def dash_to_long(c: Column): Column = column(DashToLong(expression(c)))
   def ipv4_to_long(c: Column): Column = column(Ipv4ToLong(expression(c)))
   def ipv4_to_long_strict(c: Column): Column = column(Ipv4ToLong(expression(c), strict = true))
   def cosine_similarity(a: Column, b: Column): Column =

@@ -10,10 +10,15 @@ import graft.etl.Enrich
   * The driver's tables are TPC-H-ish, not raw log files, so this query
   * synthesizes a real S3 access-log line per event row (quoted URI and
   * user-agent, bracketed timestamp, dash sentinels, ARN requesters),
-  * pushes it through the production path — TokenizeS3Log → Enrich.fromTokens
-  * — and emits the parsed+derived fields keyed by requestid. The DuckDB
-  * oracle recomputes every field directly from the source columns, so any
-  * tokenizer/projection/derivation bug breaks the hash match.
+  * pushes it through the production path — `Enrich.parseLines`: the
+  * byte-level TokenizeS3Log, then Enrich.fromTokens with its S3RequestTime
+  * and DashToLong kernels — and emits the parsed+derived fields keyed by
+  * requestid. The DuckDB oracle recomputes every field directly from the
+  * source columns, so any tokenizer/projection/derivation bug breaks the
+  * hash match. Every synthesized request time is canonical (`+0000`,
+  * English month, four-digit year), so q20 exercises the kernels' fast
+  * paths; their fallbacks are pinned against the old formulations in
+  * ParseSpec's differential tests.
   */
 object LogParsing {
 
