@@ -31,6 +31,10 @@ test: ## Run the ScalaTest suite
 test-etl: ## Run only the export-path specs (parse, export, compaction, sources, streaming)
 	sbt -batch "testOnly graft.functions.ParseSpec graft.etl.ExportJobSpec graft.etl.CompactionSpec graft.sources.SourcesSpec graft.streaming.StreamingSpec"
 
+.PHONY: test-stream
+test-stream: ## Run only the streaming specs (driver, streamed gates q152/q169/q256, Diag profile)
+	sbt -batch "testOnly graft.streaming.StreamingSpec graft.ops.Wave14Spec graft.ops.Wave16Spec graft.ops.Wave40Spec graft.tools.DiagSpec"
+
 .PHONY: verify
 verify: ## Dump every declared query at sf0.01 for the DuckDB oracle compare
 	sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"

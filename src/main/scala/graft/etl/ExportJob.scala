@@ -221,6 +221,7 @@ object ExportJob {
       prev.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd-HH"))
     })
     val spark = graft.GraftSession.create()
+    S3Config.applyFromEnv(spark, dst)
     val watchdog = startWatchdog(spark, sys.env.getOrElse("TIMEOUT", "0").toInt)
     try {
       val t0 = System.nanoTime()

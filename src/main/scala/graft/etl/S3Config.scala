@@ -20,12 +20,23 @@ import org.apache.spark.sql.SparkSession
   */
 object S3Config {
 
-  def applyFromEnv(spark: SparkSession, env: Map[String, String] = sys.env): Unit = {
+  /** Apply the env contract to the session's Hadoop configuration. The
+    * default endpoint is INPUT_S3_ENDPOINT (falling back to
+    * OUTPUT_S3_ENDPOINT); when OUTPUT_S3_ENDPOINT is set and `dst` is an
+    * `s3a://` URI, DST's bucket gets the output endpoint through
+    * [[forBucket]], so input and output may sit on different
+    * endpoints. */
+  def applyFromEnv(spark: SparkSession, dst: String,
+                   env: Map[String, String] = sys.env): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     env.get("INPUT_S3_ENDPOINT").orElse(env.get("OUTPUT_S3_ENDPOINT"))
       .foreach(hc.set("fs.s3a.endpoint", _))
     env.get("OUTPUT_S3_ENDPOINT_REGION").foreach(hc.set("fs.s3a.endpoint.region", _))
     env.get("S3_ACL").foreach(hc.set("fs.s3a.acl.default", _))
+    val uri = new java.net.URI(dst)
+    for (endpoint <- env.get("OUTPUT_S3_ENDPOINT")
+         if uri.getScheme == "s3a"; bucket <- Option(uri.getAuthority))
+      forBucket(spark, bucket, endpoint)
   }
 
   /** Per-bucket endpoint override (input and output roots on different

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Stream-stream attribution, promoted to the driver's oracle gate —
   * the q145 pattern applied to the JOIN half of the streaming surface:
@@ -94,15 +93,7 @@ object Attribution {
     // 8 state partitions: the join buffers KB-scale state per side —
     // 32 partitions × 2 sides × batches of state-store commits was
     // measured as ~half of q146's bench time (StreamingGates scaladoc)
-    StreamingGates.withShufflePartitions(s, 8) {
-      joined.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$StreamedAttrPath/cp")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start(sink)
-        .awaitTermination()
-    }
+    StreamingGates.runStatefulToParquet(joined, sink, s"$StreamedAttrPath/cp")
 
     s.read.parquet(sink)
       .select(col("user_id"),

@@ -127,7 +127,8 @@ object Boilerplate {
     * distinct-gram document frequencies (`df/`) and the batch doc count
     * (`docs/`) — O(batch) work, append-only, mergeable by SUM (df over
     * disjoint doc sets adds exactly), the q141/q107 partials pattern
-    * for the boilerplate bar. */
+    * for the boilerplate bar. df partials are counts: a replayed batch
+    * double-counts (checkpoint the stream). */
   def appendGramDf(batch: DataFrame, store: String, n: Int): Unit = {
     val toks = tokenized(batch)
     toks.select(explode(array_distinct(gramArrCol(col("l"), n))).as("g"))
@@ -174,7 +175,7 @@ object Boilerplate {
   val StreamedGramDfPath = graft.Sidecars.path("graft_streamed_gramdf")
 
   /** q159: q158's store built through the STRUCTURED STREAMING
-    * maintenance path (`Streaming.gramDfStream`) — documents staged as
+    * maintenance path (`Streaming.appendEachBatch`) — documents staged as
     * three doc-sliced files ingested at one file per trigger, each
     * micro-batch appending its df partials; the serve + rewrite are
     * q158's unchanged, and the oracle stays q149's from-scratch
@@ -187,15 +188,8 @@ object Boilerplate {
     val stream = StreamingGates.stagedFileStream(StreamedGramDfPath,
       (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i)))
     val store = s"$StreamedGramDfPath/store"
-    // micro-batch pin (8 partitions + AQE off): each batch's append is a
-    // KB-scale df-partial aggregate — at session width (32) the per-batch
-    // jobs pay 4× the tasks and AQE re-planning for no data (the
-    // StreamingGates.withMicroBatchConfs rationale; this gate was the one
-    // stateless stream still running bare — BENCH_r14's largest line)
-    StreamingGates.withMicroBatchConfs(s) {
-      graft.streaming.Streaming.gramDfStream(stream, store, 3)
-        .awaitTermination()
-    }
+    graft.streaming.Streaming.appendEachBatch(stream)((b, _) =>
+      appendGramDf(b, store, 3)).awaitTermination()
     rewriteWithFrequent(tokenized(docs), frequentFromStore(s, store, 1), 3)
   }
 

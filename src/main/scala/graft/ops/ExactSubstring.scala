@@ -153,7 +153,9 @@ object ExactSubstring {
   /** Incremental append — the daily-ingest path: the batch's window
     * hashes and text land as extra part files under their buckets
     * (`appendToPostings` contract: untouched buckets keep their exact
-    * file sets; `newDocs` must be NEW doc_ids). O(batch). */
+    * file sets; `newDocs` must be NEW doc_ids). O(batch). A replayed
+    * batch breaks that contract and duplicates its rows (checkpoint a
+    * stream that feeds this). */
   def appendToWindowHashLayout(newDocs: DataFrame, dst: String): Long = {
     val s = newDocs.sparkSession
     val meta = s.read.parquet(dst + "_meta").head()
@@ -332,9 +334,9 @@ object ExactSubstring {
       dst, L, nBuckets = 16)
     val stream = StreamingGates.stagedFileStream(rootStr,
       Seq(4, 9).map(i => docs.filter(pmod(col("doc_id"), lit(10)) === i)))
+    graft.streaming.Streaming.appendEachBatch(stream)((b, _) =>
+      appendToWindowHashLayout(b, dst)).awaitTermination()
     StreamingGates.withMicroBatchConfs(s) {
-      graft.streaming.Streaming.windowHashAppendStream(stream, dst)
-        .awaitTermination()
       probeExactSubstringSpans(s, dst, docs.filter(pmod(col("doc_id"), lit(5)) === 0))
     }
   }

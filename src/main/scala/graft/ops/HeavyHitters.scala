@@ -120,8 +120,11 @@ object HeavyHitters {
 
   /** One micro-batch's SpaceSaving summary, appended to the store as
     * ≤ `capacity` (item, cnt, err) rows — the streaming maintenance
-    * step behind [[graft.streaming.Streaming.heavyHitterStream]]. The
-    * batch frame must expose a single `item` string column. */
+    * step q152 runs through
+    * [[graft.streaming.Streaming.appendEachBatch]]. The batch frame
+    * must expose a single `item` string column. Summaries
+    * are counts, so unlike KMV this store is NOT idempotent: a replayed
+    * batch double-counts, and a stream feeding it needs a checkpoint. */
   def appendBatchSummary(batch: org.apache.spark.sql.DataFrame,
                          dst: String, capacity: Int): Unit = {
     import batch.sparkSession.implicits._
@@ -163,13 +166,8 @@ object HeavyHitters {
         (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i)))
       .select(col("user_id").cast("string").as("item"))
     val store = s"$StreamedStorePath/store"
-    // micro-batch pin: each batch reduces to ONE capacity-bounded
-    // summary — session-width shuffles + AQE re-planning are pure
-    // overhead per batch (StreamingGates.withMicroBatchConfs)
-    StreamingGates.withMicroBatchConfs(s) {
-      graft.streaming.Streaming.heavyHitterStream(stream, store, capacity)
-        .awaitTermination()
-    }
+    graft.streaming.Streaming.appendEachBatch(stream)((b, _) =>
+      appendBatchSummary(b, store, capacity)).awaitTermination()
 
     serveHeavyUsers(s, store, s.read.parquet(watched), k, capacity)
   }

@@ -144,7 +144,12 @@ object KmvSketch {
       .withColumnRenamed("key", "day")
 
   /** Append a batch's partials to the standing store (`day=` dirs give
-    * range serves partition pruning). */
+    * range serves partition pruning). Because min-k merge is EXACT,
+    * [[serveRangeDistinct]] answers identically from backfill or a
+    * stream's micro-batches. Unlike the counting stores this one is
+    * IDEMPOTENT under replay — re-appending the same partial cannot
+    * change the merged min-k (a set-union order statistic, not a sum) —
+    * so a stream's checkpoint protects store size, not correctness. */
   def appendDailySketches(events: DataFrame, dst: String, k: Int): Unit =
     dailySketchRows(events, k)
       .write.mode(org.apache.spark.sql.SaveMode.Append)
@@ -203,7 +208,7 @@ object KmvSketch {
   val StreamedSketchPath = graft.Sidecars.path("graft_streamed_kmv")
 
   /** q145: the q141 store built through the STRUCTURED STREAMING
-    * maintenance path ([[graft.streaming.Streaming.kmvDailyStream]])
+    * maintenance path ([[graft.streaming.Streaming.appendEachBatch]])
     * instead of batch appends — the missing half of the q107/q141
     * pattern: q141 hash-proves batch maintenance, q145 hash-proves
     * stream maintenance. The events table is staged as three
@@ -224,15 +229,8 @@ object KmvSketch {
     val stream = StreamingGates.stagedFileStream(StreamedSketchPath,
       (0 until 3).map(i => ev.filter(pmod(col("user_id"), lit(3)) === i)))
     val store = s"$StreamedSketchPath/store"
-    // full micro-batch pin (8 shuffle partitions + AQE off) while the
-    // stream runs: each micro-batch's per-day partial aggregate is
-    // ≤ span_days rows (StreamingGates scaladoc on state-commit churn;
-    // this sink is stateless-foreachBatch, so AQE is NOT auto-disabled
-    // and only adds per-batch re-planning)
-    StreamingGates.withMicroBatchConfs(s) {
-      graft.streaming.Streaming.kmvDailyStream(stream, store, k)
-        .awaitTermination()
-    }
+    graft.streaming.Streaming.appendEachBatch(stream)((b, _) =>
+      appendDailySketches(b, store, k)).awaitTermination()
     val fortnightly = serveRangeDistinct(s, store, k,
       expr("CAST(day AS BIGINT) DIV 14")).withColumnRenamed("grp", "fortnight")
     val total = serveRangeDistinct(s, store, k, lit(-1L))

@@ -410,7 +410,9 @@ object NearDupIndex {
     * against corpus+batch df, exactly as a probe of the same batch
     * would be. The report's `capCrossed`/`rewriteRecommended` mirror
     * the IVF store's occupancy refit signal: they flag appends that
-    * left OLDER docs' arrays stale against the new df totals. */
+    * left OLDER docs' arrays stale against the new df totals. df
+    * segments are counts: a replayed batch double-counts (checkpoint a
+    * stream that feeds this). */
   def appendToMinhashLayout(newDocs: DataFrame, dst: String): MinhashAppendReport = {
     val s = newDocs.sparkSession
     val meta = s.read.parquet(dst + "_meta").head()
@@ -588,16 +590,12 @@ object NearDupIndex {
       nBuckets = 16, maxDocFreq = 10000L)
     val stream = StreamingGates.stagedFileStream(rootStr,
       Seq(4, 9).map(i => docs.filter(pmod(col("doc_id"), lit(10)) === i)))
-    // micro-batch confs (8 shuffle partitions, AQE off) for the
-    // appends: each is ~16 tiny shuffles over a 1/10 slice, where
-    // 32-task stages and AQE's per-shuffle re-planning are pure
-    // scheduling overhead (StreamingGates.withMicroBatchConfs note)
+    graft.streaming.Streaming.appendEachBatch(stream)((b, _) =>
+      appendToMinhashLayout(b, dst)).awaitTermination()
+    // the probe's eager pins (batch sets, bands, candidates) are
+    // micro-batch-sized too — build them under the same confs; the
+    // returned frame itself is ≤ candidate-pairs rows
     StreamingGates.withMicroBatchConfs(s) {
-      graft.streaming.Streaming.minhashAppendStream(stream, dst)
-        .awaitTermination()
-      // the probe's eager pins (batch sets, bands, candidates) are
-      // micro-batch-sized too — build them inside the scope; the
-      // returned frame itself is ≤ candidate-pairs rows
       probeNearDup(s, dst, docs.filter(pmod(col("doc_id"), lit(5)) === 0))
         .orderBy(col("d1"), col("d2"))
     }

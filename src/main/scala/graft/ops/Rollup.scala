@@ -56,7 +56,12 @@ object Rollup {
         hll_sketch_agg(col("user_id")).as("users_hll"))
 
   /** Append a batch's partials to the standing store — O(batch) work,
-    * no existing file touched. */
+    * no existing file touched. The same reducer serves backfill batches
+    * and a live stream's micro-batches
+    * ([[graft.streaming.Streaming.appendEachBatch]]), so [[mergedDaily]]
+    * answers identically from either. Partials are counts: a replayed
+    * batch double-counts, so a stream feeding this store needs a
+    * checkpoint. */
   def appendPartials(events: DataFrame, dst: String): Unit =
     partialRows(events)
       .repartition(col("day"))
@@ -97,7 +102,10 @@ object Rollup {
       .groupBy(col("day"), col("bin"))
       .agg(count(lit(1)).as("c"))
 
-  /** Append a batch's histogram partials — O(batch), no rewrite. */
+  /** Append a batch's histogram partials — O(batch), no rewrite; from
+    * backfill or a stream, [[servedQuantiles]] answers identically.
+    * Bins are counts: a replayed batch double-counts (checkpoint the
+    * stream). */
   def appendHistograms(events: DataFrame, dst: String): Unit =
     histogramRows(events)
       .repartition(col("day"))

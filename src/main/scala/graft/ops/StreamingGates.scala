@@ -20,36 +20,40 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   */
 object StreamingGates {
 
-  /** Run `f` with the session's shuffle-partition count pinned to `n`,
-    * restoring the old value after. Streaming queries freeze the count
-    * into their checkpoint at start — 32 state partitions × sides ×
-    * micro-batches of KB-scale state is pure commit overhead for the
-    * gate fixtures (measured: q146 10.5 s → with 8 partitions the
-    * state-store file churn drops 4×). At 100 TB you size this to state
-    * volume; these gate queries stage their own bounded inputs. */
-  private[ops] def withShufflePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, old)
-  }
-
-  /** Run `f` with the session tuned for MICRO-BATCH maintenance work:
-    * few shuffle partitions AND adaptive execution off. AQE earns its
-    * keep on corpus-scale shuffles (runtime coalescing, skew splits);
-    * on a maintenance unit whose every stage is KB-scale it only adds
-    * per-shuffle re-planning jobs — measured on the minhash append: 29
-    * jobs/3.6 s with AQE vs 16 jobs/2.9 s without, identical results
-    * (the md5-determinism discipline makes every op partitioning-
-    * independent). Production sizes these per stream; the gates pin
-    * them so the bench prices the operator, not the planner. */
-  private[graft] def withMicroBatchConfs[A](s: SparkSession, n: Int = 8)(f: => A): A = {
-    val settings = Seq("spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.adaptive.enabled" -> "false")
+  /** Run `f` with the session under the micro-batch confs
+    * ([[graft.streaming.Streaming.MicroBatchConfs]]: 8 shuffle
+    * partitions, AQE off), restoring the old values after. A stateful
+    * stream freezes the partition count into its checkpoint at start —
+    * 32 state partitions × sides × micro-batches of KB-scale state is
+    * pure commit overhead for the gate fixtures (measured: q146 10.5 s
+    * → with 8 partitions the state-store file churn drops 4×); Spark
+    * plans a stateful stream without AQE whatever the session says.
+    * The q169/q248 probes run in the caller's session after their
+    * stream ends, so they take the same confs here. At 100 TB you size
+    * these to state volume; these gates stage their own bounded
+    * inputs. */
+  private[ops] def withMicroBatchConfs[A](s: SparkSession)(f: => A): A = {
+    val settings = graft.streaming.Streaming.MicroBatchConfs
     val olds = settings.map { case (k, _) => k -> s.conf.get(k) }
     settings.foreach { case (k, v) => s.conf.set(k, v) }
     try f finally olds.foreach { case (k, v) => s.conf.set(k, v) }
   }
+
+  /** Run a STATEFUL streaming frame to completion into a parquet sink:
+    * append mode, a checkpoint at `checkpoint`, `AvailableNow`, under
+    * [[withMicroBatchConfs]] — the sink every stateful gate
+    * (q146–q148, q256) reads back. */
+  private[ops] def runStatefulToParquet(df: DataFrame, sink: String,
+                                        checkpoint: String): Unit =
+    withMicroBatchConfs(df.sparkSession) {
+      df.writeStream
+        .outputMode(OutputMode.Append)
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .format("parquet")
+        .start(sink)
+        .awaitTermination()
+    }
 
   /** The shared staging kernel of every streamed gate (q145–q169):
     * write each slice as ONE coalesced parquet part, move it into
@@ -169,19 +173,11 @@ object StreamingGates {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,6)")).as("sv"))
     val sink = s"$root/sessions"
-    withShufflePartitions(s, 8) {
-      agg.select(col("user_id"),
-          unix_micros(col("session_window.start")).as("session_start_us"),
-          unix_micros(col("session_window.end")).as("session_end_us"),
-          col("n_events"), col("sv"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start(sink)
-        .awaitTermination()
-    }
+    runStatefulToParquet(agg.select(col("user_id"),
+        unix_micros(col("session_window.start")).as("session_start_us"),
+        unix_micros(col("session_window.end")).as("session_end_us"),
+        col("n_events"), col("sv")),
+      sink, s"$root/cp")
     require(sentinelTs > 0, "sentinel must have staged")
     s.read.parquet(sink)
       .filter(col("user_id") =!= -1L)
@@ -213,6 +209,10 @@ object StreamingGates {
     * append mode flushes them all. */
   def q256LateDataAudit(s: SparkSession, dir: String): DataFrame = {
     val root = graft.Sidecars.path("graft_streamed_late")
+    // a fresh root: a checkpoint left by an earlier run in this JVM marks
+    // the re-staged files as seen, so the stream would skip them all
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    rootP.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rootP, true)
     val ev = graft.Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"))
     val b = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
@@ -236,17 +236,10 @@ object StreamingGates {
       .groupBy(window(col("t"), "1 hour"))
       .agg(count(lit(1)).as("n_stream"))
     val sink = s"$root/win"
-    withMicroBatchConfs(s) {
+    runStatefulToParquet(
       stream.select(unix_micros(col("window.start")).as("window_start_us"),
-          col("n_stream"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start(sink)
-        .awaitTermination()
-    }
+        col("n_stream")),
+      sink, s"$root/cp")
     val streamed = s.read.parquet(sink)
       .filter(col("window_start_us") <= hi / 1000L) // drop the sentinel window
     val batch = ev
@@ -291,17 +284,10 @@ object StreamingGates {
       .withWatermark("t", "60 days")
       .dropDuplicatesWithinWatermark("user_id")
     val sink = s"$root/firsts"
-    withShufflePartitions(s, 8) {
+    runStatefulToParquet(
       stream.select(col("user_id"), col("event_id").as("first_event_id"),
-          unix_micros(col("t")).as("first_us"), col("event_type"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start(sink)
-        .awaitTermination()
-    }
+        unix_micros(col("t")).as("first_us"), col("event_type")),
+      sink, s"$root/cp")
     s.read.parquet(sink)
       .orderBy(col("user_id"))
   }

@@ -32,7 +32,7 @@ import graft.Tables
   * is exact and associative, so gap fill and anomaly scoring served
   * from the store are IDENTICAL to a fresh scan of raw history
   * (spec-asserted), while costing O(user-hours), not O(events).
-  * `Streaming.userHourlyStream` maintains the same store live.
+  * `Streaming.appendEachBatch` maintains the same store live.
   *
   * Event time is epoch-nanos integer arithmetic throughout
   * ([[Tables.events]]); the hour index is `ts DIV 3.6e12` in exact
@@ -61,7 +61,9 @@ object TimeSeries {
 
   /** Append a batch's partials to the standing store — O(batch) work,
     * no existing file touched; `day=` dirs give the serve path
-    * partition pruning. */
+    * partition pruning. From backfill or a stream, the serve paths over
+    * [[mergedUserHourly]] answer identically. Partials are counts: a
+    * replayed batch double-counts its hours (checkpoint the stream). */
   def appendUserHourly(events: DataFrame, dst: String): Unit =
     userHourlyRows(events)
       .repartition(col("day"))

@@ -41,7 +41,9 @@ object VectorStore {
   val StreamStoreRoot = graft.Sidecars.path("graft_ivf_stream")
 
   /** One micro-batch into the store: assign against the broadcast
-    * centroid array, append partitioned by cell. O(batch). */
+    * centroid array, append partitioned by cell. O(batch). Rows are
+    * per-vector facts: a replayed batch duplicates them (the object's
+    * replay rule). */
   def appendAssignments(batch: DataFrame, centroids: Array[Array[Long]],
                         dst: String): Unit =
     Clustering.assign(batch, centroids)
@@ -62,12 +64,8 @@ object VectorStore {
     val stream = StreamingGates.stagedFileStream(StreamStoreRoot,
       (0 until 3).map(i => emb.filter(pmod(col("vec_id"), lit(3)) === i)))
     val store = s"$StreamStoreRoot/store"
-    // micro-batch pin: assignment is a broadcast map + cell-partitioned
-    // append per batch (StreamingGates.withMicroBatchConfs)
-    StreamingGates.withMicroBatchConfs(s) {
-      graft.streaming.Streaming.ivfAssignStream(stream, store, centroids)
-        .awaitTermination()
-    }
+    graft.streaming.Streaming.appendEachBatch(stream)((b, _) =>
+      appendAssignments(b, centroids, store)).awaitTermination()
     serveAssignments(s, store)
   }
 

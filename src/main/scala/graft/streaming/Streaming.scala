@@ -83,6 +83,45 @@ object Streaming {
         graft.ops.Bpe.bpeIds(col("text"), merges, vocab))
       .withColumn("n_tokens", size(col("token_ids")).cast("long"))
 
+  /** Session confs every micro-batch's maintenance runs under: few
+    * shuffle partitions and adaptive execution off. AQE earns its keep
+    * on corpus-scale shuffles (runtime coalescing, skew splits); on a
+    * maintenance unit whose every stage is KB-scale it only adds
+    * per-shuffle re-planning jobs — measured on the minhash append: 29
+    * jobs/3.6 s with AQE vs 16 jobs/2.9 s without, identical results
+    * (the md5-determinism discipline makes every op partitioning-
+    * independent). Production sizes these per stream. */
+  val MicroBatchConfs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.enabled" -> "false")
+
+  /** Run `append` on every micro-batch of `df` — the one `foreachBatch`
+    * driver behind each streamed store maintenance step. Each batch
+    * runs under [[MicroBatchConfs]], set on the batch's own session
+    * (the stream's clone of the caller's, so the caller's values never
+    * change), is pinned once with `localCheckpoint` (an emptiness probe
+    * and the append must not each re-read its files) and is skipped
+    * when empty; `append` gets the pinned batch and its id.
+    *
+    * Replay: without a `checkpoint` a restart re-reads the whole
+    * source. A store whose appends are counts or per-row facts then
+    * double-counts, so production runs of such a store pass a
+    * checkpoint; an idempotent store only grows. Each append function
+    * says which kind it is. */
+  def appendEachBatch(df: DataFrame, checkpoint: Option[String] = None,
+                      trigger: Trigger = Trigger.AvailableNow())(
+      append: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = df.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        MicroBatchConfs.foreach { case (k, v) => batch.sparkSession.conf.set(k, v) }
+        val b = batch.localCheckpoint()
+        if (b.limit(1).count() > 0) append(b, batchId)
+      }
+      .trigger(trigger)
+    checkpoint.foreach(c => w.option("checkpointLocation", c))
+    w.start()
+  }
+
   /** Continuous near-dup dedup-on-ingest against a standing
     * [[graft.ops.NearDupIndex]] layout: each micro-batch is PROBED
     * (O(batch) bucket-pruned reads, never a corpus scan), near-dups are
@@ -105,240 +144,31 @@ object Streaming {
   def nearDupIngestStream(docs: DataFrame, indexDst: String,
                           verdictDst: String,
                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-        if (b.limit(1).count() > 0) {
-          val bIds = b.select(col("doc_id"))
-          // membership by join, never a collected id set — a catch-up
-          // micro-batch can be arbitrarily large
-          val m = graft.ops.NearDupIndex.probeNearDup(s, indexDst, b)
-            .join(bIds.select(col("doc_id").as("d1"), lit(true).as("b1")),
-              Seq("d1"), "left")
-            .join(bIds.select(col("doc_id").as("d2"), lit(true).as("b2")),
-              Seq("d2"), "left")
-          // within-batch pair → the greater id drops; cross pair → the
-          // batch side drops (corpus and batch id spaces are disjoint)
-          val drops = m.select(
-              when(col("b1").isNotNull && col("b2").isNotNull, col("d2"))
-                .when(col("b1").isNotNull, col("d1"))
-                .otherwise(col("d2")).as("doc_id"))
-            .distinct().localCheckpoint()
-          val keepers = b.join(drops, Seq("doc_id"), "left_anti")
-          if (keepers.limit(1).count() > 0)
-            graft.ops.NearDupIndex.appendToMinhashLayout(keepers, indexDst)
-          b.join(drops.withColumn("near_dup", lit(true)), Seq("doc_id"), "left")
-            .select(col("doc_id"), lit(batchId).as("batch_id"),
-              coalesce(col("near_dup"), lit(false)).as("near_dup"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(verdictDst)
-        }
-        ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Maintain the q84 rollup partials from a stream: each micro-batch
-    * reduces to its mergeable partial rows and appends — the batch
-    * reducer IS the stream reducer (`Rollup.appendPartials`), so
-    * `Rollup.mergedDaily` serves identically whether the partials came
-    * from backfill batches or a live stream. Per-batch work is O(batch)
-    * with map-side combine; the store grows by O(hours), never
-    * rewritten. */
-  def rollupStream(events: DataFrame, partialsDst: String,
-                   checkpoint: Option[String] = None,
-                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // pin once: the emptiness probe and the partial aggregation must
-        // not each re-read the batch's files (the nearDupIngestStream
-        // pattern)
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.Rollup.appendPartials(b, partialsDst)
-        ()
-      }
-      .trigger(trigger)
-    // duplicates CORRUPT an aggregate store (unlike an idempotent export),
-    // so production restarts need durable offsets: pass a checkpoint dir
-    // or a restart replays the source into double-counted partials
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  /** Maintain the q99 value-histogram partials from a stream — the
-    * [[rollupStream]] contract for exact percentile serving: each
-    * micro-batch reduces to its (day, cent-bin, count) rows and
-    * appends, so `Rollup.servedQuantiles` answers identically from
-    * backfill or live partials. Same duplicate caveat: pass a
-    * checkpoint in production or a restart double-counts bins. */
-  def histogramStream(events: DataFrame, histDst: String,
-                      checkpoint: Option[String] = None,
-                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.Rollup.appendHistograms(b, histDst)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  /** Maintain the per-user-hour partial store behind the q102/q105
-    * serve paths from a stream — the [[rollupStream]] contract at the
-    * (user, hour) grain: each micro-batch reduces to its mergeable
-    * (day, user, hour, count, decimal sum) rows and appends, so
-    * `TimeSeries.gapFillFromHourly` / `anomaliesFromHourly` over
-    * `mergedUserHourly` answer identically from backfill or live
-    * ingest. Same duplicate caveat: pass a checkpoint in production or
-    * a restart double-counts hours. */
-  def userHourlyStream(events: DataFrame, dst: String,
-                       checkpoint: Option[String] = None,
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.TimeSeries.appendUserHourly(b, dst)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  /** Maintain the q141 daily KMV sketch store from a stream — the
-    * [[rollupStream]] contract for the sketch family: each micro-batch
-    * reduces to its per-day min-k partials (O(batch) work, ≤ span_days
-    * rows of k doubles) and appends; because min-k merge is EXACT,
-    * `KmvSketch.serveRangeDistinct` answers identically from backfill
-    * or live ingest. Unlike the counting stores, a KMV store is
-    * IDEMPOTENT under replay — re-appending the same partial cannot
-    * change the merged min-k (it's a set-union order statistic, not a
-    * sum) — so a checkpoint protects store size, not correctness. */
-  /** Maintain q158's gram-df boilerplate store from a document stream:
-    * each micro-batch appends its distinct-gram df partials + doc
-    * count (`Boilerplate.appendGramDf` — O(batch), SUM-mergeable).
-    * NOT idempotent under replay (df partials are counts) — the
-    * counting-store checkpoint rule applies. */
-  def gramDfStream(docs: DataFrame, dst: String, n: Int,
-                   checkpoint: Option[String] = None,
-                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.Boilerplate.appendGramDf(b, dst, n)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  /** Maintain a heavy-hitters summary store from a stream: each
-    * micro-batch reduces to ONE SpaceSaving summary (≤ `capacity`
-    * (item, cnt, err) rows — O(batch) work, capacity-bounded output)
-    * and appends it; `HeavyHitters` serves by sum-combining the
-    * appended summaries (the Aggregator's own merge, expressed
-    * relationally) and exact-verifying the candidates. Unlike KMV this
-    * store is NOT idempotent under replay — summaries are counts, so
-    * re-appending a batch double-counts; production runs pass a
-    * checkpoint (the q84 rollup rule), the gate stages each file
-    * exactly once. */
-  def heavyHitterStream(items: DataFrame, dst: String, capacity: Int,
-                        checkpoint: Option[String] = None,
-                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = items.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.HeavyHitters.appendBatchSummary(b, dst, capacity)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  /** Maintain the q162 IVF vector store from an embedding stream: each
-    * micro-batch is assigned against the broadcast centroid array and
-    * appended cell-partitioned (`VectorStore.appendAssignments` —
-    * O(batch), one narrow pass, standing data untouched). Assignment
-    * rows are per-vector facts, so replaying a batch duplicates them
-    * (counting-store checkpoint rule, not the KMV rule). */
-  def ivfAssignStream(emb: DataFrame, dst: String,
-                      centroids: Array[Array[Long]],
-                      checkpoint: Option[String] = None,
-                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = emb.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.VectorStore.appendAssignments(b, centroids, dst)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  /** Maintain the q89 minhash near-dup index from a document stream:
-    * each micro-batch runs `NearDupIndex.appendToMinhashLayout` —
-    * O(batch) band/docset/df appends against the standing layout, ids
-    * disjoint by the append contract. df segments are counts, so the
-    * counting-store checkpoint rule applies (replay double-counts). */
-  def minhashAppendStream(docs: DataFrame, dst: String,
-                          checkpoint: Option[String] = None,
-                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.NearDupIndex.appendToMinhashLayout(b, dst)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  /** Streamed maintenance of the exact-substring window-hash layout —
-    * each micro-batch appends its window hashes + text (the
-    * minhashAppendStream contract applied to
-    * [[graft.ops.ExactSubstring]]). */
-  def windowHashAppendStream(docs: DataFrame, dst: String,
-                             checkpoint: Option[String] = None,
-                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.ExactSubstring.appendToWindowHashLayout(b, dst)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  def kmvDailyStream(events: DataFrame, dst: String, k: Int = 128,
-                     checkpoint: Option[String] = None,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val w = events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        if (b.limit(1).count() > 0)
-          graft.ops.KmvSketch.appendDailySketches(b, dst, k)
-        ()
-      }
-      .trigger(trigger)
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
+    appendEachBatch(docs.select(col("doc_id"), col("text")), trigger = trigger) {
+      (b, batchId) =>
+        val bIds = b.select(col("doc_id"))
+        // membership by join, never a collected id set — a catch-up
+        // micro-batch can be arbitrarily large
+        val m = graft.ops.NearDupIndex.probeNearDup(b.sparkSession, indexDst, b)
+          .join(bIds.select(col("doc_id").as("d1"), lit(true).as("b1")),
+            Seq("d1"), "left")
+          .join(bIds.select(col("doc_id").as("d2"), lit(true).as("b2")),
+            Seq("d2"), "left")
+        // within-batch pair → the greater id drops; cross pair → the
+        // batch side drops (corpus and batch id spaces are disjoint)
+        val drops = m.select(
+            when(col("b1").isNotNull && col("b2").isNotNull, col("d2"))
+              .when(col("b1").isNotNull, col("d1"))
+              .otherwise(col("d2")).as("doc_id"))
+          .distinct().localCheckpoint()
+        val keepers = b.join(drops, Seq("doc_id"), "left_anti")
+        if (keepers.limit(1).count() > 0)
+          graft.ops.NearDupIndex.appendToMinhashLayout(keepers, indexDst)
+        b.join(drops.withColumn("near_dup", lit(true)), Seq("doc_id"), "left")
+          .select(col("doc_id"), lit(batchId).as("batch_id"),
+            coalesce(col("near_dup"), lit(false)).as("near_dup"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(verdictDst)
+    }
 
   /** Tumbling 1-hour windowed counts per (bucket, operation) with a
     * 2-hour watermark: the streaming analogue of the reference's

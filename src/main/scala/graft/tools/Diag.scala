@@ -115,13 +115,20 @@ object Diag {
     spark.listenerManager.register(c)
     try qs.map { case (name, fn) =>
       spark.catalog.clearCache()
-      val group = s"graft-diag-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(group, name)
+      // a job tag, not a job group: a streaming query's thread inherits
+      // the caller's tags but sets its run id as the job group, so a
+      // group would miss every micro-batch job
+      val tag = s"graft-diag-${java.util.UUID.randomUUID}"
+      sc.addJobTag(tag)
+      sc.setJobDescription(name)
       val t0 = System.nanoTime()
-      try fn(spark, dir).count() finally sc.clearJobGroup()
+      try fn(spark, dir).count() finally {
+        sc.removeJobTag(tag)
+        sc.setJobDescription(null)
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       Bridge.drainListenerBus(sc)
-      val l = Ledger(name, wall, c.jobsOf(group), c.stagesOf(group), c.lastPlan)
+      val l = Ledger(name, wall, c.jobsOf(tag), c.stagesOf(tag), c.lastPlan)
       println(l.report)
       l
     } finally {
@@ -130,30 +137,30 @@ object Diag {
     }
   }
 
-  /** Attributes jobs and completed stages to the job group
-    * (`spark.jobGroup.id`) that started them, and keeps the executed plan
-    * of the last successful action. */
+  /** Attributes jobs and completed stages to each job tag
+    * (`spark.job.tags`) they carry, and keeps the executed plan of the
+    * last successful action. */
   private final class Collector extends SparkListener with QueryExecutionListener {
-    private val groupOf = mutable.HashMap.empty[Int, String]
+    private val tagsOf = mutable.HashMap.empty[Int, Seq[String]]
     private val jobs = mutable.HashMap.empty[String, Int]
     private val stages = mutable.HashMap.empty[String, Vector[StageCost]]
     @volatile var lastPlan = ""
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
-        jobs(g) = jobs.getOrElse(g, 0) + 1
-        e.stageIds.foreach(groupOf(_) = g)
-      }
+      val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+      tags.foreach(t => jobs(t) = jobs.getOrElse(t, 0) + 1)
+      if (tags.nonEmpty) e.stageIds.foreach(tagsOf(_) = tags)
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
       val i = e.stageInfo
-      groupOf.get(i.stageId).foreach { g =>
+      tagsOf.get(i.stageId).foreach(_.foreach { t =>
         val m = Option(i.taskMetrics)
-        stages(g) = stages.getOrElse(g, Vector.empty) :+ StageCost(i.name, i.numTasks,
+        stages(t) = stages.getOrElse(t, Vector.empty) :+ StageCost(i.name, i.numTasks,
           m.fold(0L)(_.executorRunTime), m.fold(0L)(_.executorCpuTime / 1000000L),
           m.fold(0L)(_.jvmGCTime))
-      }
+      })
     }
 
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -161,7 +168,7 @@ object Diag {
 
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
 
-    def jobsOf(group: String): Int = synchronized(jobs.getOrElse(group, 0))
-    def stagesOf(group: String): Seq[StageCost] = synchronized(stages.getOrElse(group, Vector.empty))
+    def jobsOf(tag: String): Int = synchronized(jobs.getOrElse(tag, 0))
+    def stagesOf(tag: String): Seq[StageCost] = synchronized(stages.getOrElse(tag, Vector.empty))
   }
 }

@@ -249,7 +249,8 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(watched.toString)
     val partials = root.resolve("partials").toString
-    Streaming.rollupStream(stream, partials).awaitTermination()
+    Streaming.appendEachBatch(stream)((b, _) => Rollup.appendPartials(b, partials))
+      .awaitTermination()
     // the store holds at least two segments per covered hour-set, and
     // the merged serve equals the batch direct aggregate
     val got = Rollup.mergedDaily(spark, partials).drop("approx_users")
@@ -269,7 +270,8 @@ class StreamingSpec extends SparkSpec {
     val stream2 = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(watched.toString)
     val hist = root.resolve("vhist").toString
-    Streaming.histogramStream(stream2, hist).awaitTermination()
+    Streaming.appendEachBatch(stream2)((b, _) => Rollup.appendHistograms(b, hist))
+      .awaitTermination()
     val oneShot = root.resolve("vhist_batch").toString
     Rollup.appendHistograms(ev, oneShot)
     def served(d: String) = Rollup.servedQuantiles(spark, d)
@@ -285,7 +287,8 @@ class StreamingSpec extends SparkSpec {
     val stream3 = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(watched.toString)
     val uh = root.resolve("user_hourly").toString
-    Streaming.userHourlyStream(stream3, uh).awaitTermination()
+    Streaming.appendEachBatch(stream3)((b, _) => TimeSeries.appendUserHourly(b, uh))
+      .awaitTermination()
     val servedFill = TimeSeries.gapFillFromHourly(
         TimeSeries.mergedUserHourly(spark, uh))
       .collect().map(_.toSeq).toSet
@@ -320,7 +323,8 @@ class StreamingSpec extends SparkSpec {
     def mkStream() = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(watched.toString)
     val store = root.resolve("kmv").toString
-    Streaming.kmvDailyStream(mkStream(), store, k).awaitTermination()
+    Streaming.appendEachBatch(mkStream())((b, _) =>
+      KmvSketch.appendDailySketches(b, store, k)).awaitTermination()
     def weekly(d: String) = KmvSketch.serveRangeDistinct(spark, d, k,
         expr("CAST(day AS BIGINT) DIV 7"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -332,7 +336,8 @@ class StreamingSpec extends SparkSpec {
     // the claimed idempotence: replaying the whole source into the same
     // store (a checkpoint-less restart) must not move any estimate —
     // min-k is a set-union order statistic, not a sum
-    Streaming.kmvDailyStream(mkStream(), store, k).awaitTermination()
+    Streaming.appendEachBatch(mkStream())((b, _) =>
+      KmvSketch.appendDailySketches(b, store, k)).awaitTermination()
     assert(weekly(store) == streamed,
       "replayed append changed a served estimate — idempotence broken")
   }
@@ -444,7 +449,8 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(watched.toString)
     val store = root.resolve("gramdf").toString
-    Streaming.gramDfStream(stream, store, 3).awaitTermination()
+    Streaming.appendEachBatch(stream)((b, _) => Boilerplate.appendGramDf(b, store, 3))
+      .awaitTermination()
     val streamed = Boilerplate.frequentFromStore(spark, store, 1)
       .collect().map(_.getString(0)).toSet
     val batchStore = root.resolve("gramdf_batch").toString
@@ -586,5 +592,56 @@ class StreamingSpec extends SparkSpec {
     assert(batch.nonEmpty, "fixture yields no attribution pairs — test is vacuous")
     assert(streamed === batch,
       s"streamed-only: ${streamed.diff(batch)}; batch-only: ${batch.diff(streamed)}")
+  }
+
+  test("appendEachBatch runs each batch under the micro-batch confs; the caller's session keeps its own") {
+    import spark.implicits._
+    val keys = Streaming.MicroBatchConfs.map(_._1)
+    val before = keys.map(spark.conf.get)
+    assert(before != Streaming.MicroBatchConfs.map(_._2), "the test session must differ from the confs")
+    val watched = Files.createTempDirectory("graft-each-batch").resolve("in").toString
+    (1 to 100).toDF("x").coalesce(1).write.parquet(watched)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Int, Long)]()
+    Streaming.appendEachBatch(spark.readStream.schema("x INT").parquet(watched)) { (b, id) =>
+      // a shuffle planned from the pinned batch: 8 partitions, no AQE
+      val shuffled = b.groupBy(col("x") % 3).count()
+      seen.add((keys.map(b.sparkSession.conf.get), shuffled.rdd.getNumPartitions, id))
+    }.awaitTermination()
+    assert(seen.toArray.toSeq == Seq((Streaming.MicroBatchConfs.map(_._2), 8, 0L)))
+    assert(keys.map(spark.conf.get) == before)
+  }
+
+  test("streaming IVF assignment and window-hash appends ≡ the one-shot batch append") {
+    import graft.ops.{Clustering, ExactSubstring, StreamingGates, VectorStore}
+    val dir = "/root/testdata/sf0.001"
+    def rows(path: String) = spark.read.parquet(path).collect().map(_.toSeq).toSet
+
+    val emb = graft.Tables.embeddings(spark, dir).localCheckpoint()
+    val centroids = Clustering.trainCentroids(emb, 4)
+    val ivf = Files.createTempDirectory("graft-ivf-stream").toString
+    val embStream = StreamingGates.stagedFileStream(ivf,
+      (0 until 3).map(i => emb.filter(pmod(col("vec_id"), lit(3)) === i)))
+    Streaming.appendEachBatch(embStream)((b, _) =>
+      VectorStore.appendAssignments(b, centroids, s"$ivf/store")).awaitTermination()
+    VectorStore.appendAssignments(emb, centroids, s"$ivf/batch")
+    val ivfRows = rows(s"$ivf/store")
+    assert(ivfRows.nonEmpty && ivfRows == rows(s"$ivf/batch"),
+      "streamed cell assignments drifted from the one-shot append")
+
+    val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      .localCheckpoint()
+    val wh = Files.createTempDirectory("graft-winhash-stream").toString
+    val base = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+    val fresh = (0 until 2).map(i => docs.filter(pmod(col("doc_id"), lit(4)) === 2 * i + 1))
+    Seq("store", "batch").foreach(d =>
+      ExactSubstring.writeWindowHashLayout(base, s"$wh/$d", 20, nBuckets = 4))
+    Streaming.appendEachBatch(StreamingGates.stagedFileStream(wh, fresh))((b, _) =>
+      ExactSubstring.appendToWindowHashLayout(b, s"$wh/store")).awaitTermination()
+    ExactSubstring.appendToWindowHashLayout(fresh.reduce(_ union _), s"$wh/batch")
+    Seq("", "_docs").foreach { part =>
+      val streamed = rows(s"$wh/store$part")
+      assert(streamed.nonEmpty && streamed == rows(s"$wh/batch$part"),
+        s"streamed window-hash layout$part drifted from the one-shot append")
+    }
   }
 }

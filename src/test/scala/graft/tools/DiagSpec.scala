@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkSpec
 
@@ -39,5 +40,28 @@ class DiagSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(slow)
     try assert(counts == first) finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("profile counts a streamed query's micro-batch jobs: q256 matches an unscoped listener") {
+    val name = Diag.select(Seq("q256")).head._1
+    // every job from the first one the measured run starts on the
+    // caller's thread (its description is the query name; the warm-up
+    // run has none) to the end of the profile
+    var counting = false
+    var seen = 0
+    val all = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == name))
+          counting = true
+        if (counting) seen += 1
+      }
+    }
+    spark.sparkContext.addSparkListener(all)
+    val ledger = try Diag.profile(spark, Seq("q256"), "/root/testdata/sf0.001") finally {
+      Bridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(all)
+    }
+    assert(ledger.map(_.name) == Seq(name))
+    assert(seen > 0 && ledger.head.jobs == seen, s"profile saw ${ledger.head.jobs} of $seen jobs")
   }
 }
