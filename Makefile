@@ -28,8 +28,8 @@ test: ## Run the ScalaTest suite
 	sbt -batch test
 
 .PHONY: test-etl
-test-etl: ## Run only the export-path specs (parse, export, compaction, sources, streaming)
-	sbt -batch "testOnly graft.functions.ParseSpec graft.etl.ExportJobSpec graft.etl.CompactionSpec graft.sources.SourcesSpec graft.streaming.StreamingSpec"
+test-etl: ## Run only the export-path specs (parse, export, write layout, local fs, compaction, sources, streaming)
+	sbt -batch "testOnly graft.functions.ParseSpec graft.etl.ExportJobSpec graft.io.LayoutSpec graft.io.LocalFsSpec graft.etl.CompactionSpec graft.etl.CompactionSwapSpec graft.sources.SourcesSpec graft.streaming.StreamingSpec"
 
 .PHONY: test-stream
 test-stream: ## Run only the streaming specs (driver, streamed gates q152/q169/q256, Diag profile)

@@ -1,83 +1,82 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Small-file compaction for the partitioned log layout — the operational
   * companion of the hourly export: a year of hourly runs leaves one file
   * per (partition-combo, hour-run); reading a month then touches tens of
   * thousands of small files (S3 LIST + per-file open dominate). Compaction
-  * rewrites a partition subtree into ~`targetBytes` files while keeping
-  * the Hive layout and the row-group clustering contract intact.
+  * rewrites a partition subtree into one file per partition combo while
+  * keeping the Hive layout and the row-group clustering contract intact.
   */
 object Compaction {
 
-  /** Rewrite `root` (or one partition subtree of it) with files sized
-    * toward `targetBytes`. Returns (filesBefore, filesAfter).
-    *
-    * Crash-safety contract: at every instant at least one complete copy of
-    * the data exists on disk, and `recover` restores `root` from any
-    * intermediate state:
-    *   1. write tmp (crash → root untouched, stray tmp);
-    *   2. validate tmp: its row count must equal the rows that flowed
-    *      through the write (observe(), no extra scan of root);
-    *   3. rename root → backup (crash → no root, but backup AND validated
-    *      tmp both complete — `recover` renames backup back);
-    *   4. rename tmp → root (crash → root already complete);
-    *   5. re-read the NEW root and only then delete backup — the old copy
-    *      is never dropped before the new one has passed a read. */
-  def compact(spark: SparkSession, root: String,
-              targetBytes: Long = 128L * 1024 * 1024): (Long, Long) = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def dataFiles(p: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) buf += st
-      }
-      buf.toSeq
-    }
-
-    val before = dataFiles(rootPath)
-    val totalBytes = before.map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-
-    val df = spark.read.parquet(root)
-    val tmp = new Path(rootPath.getParent, rootPath.getName + ".compact-tmp")
+  /** Rewrite `root` (or one partition subtree of it) with one file per
+    * partition combo, clustered on `rowGroupCols`, through [[swap]]: the
+    * new tree's row count must equal the rows that flowed through the
+    * write (observe(), no extra scan of root). Returns (filesBefore,
+    * filesAfter). */
+  def compact(spark: SparkSession, root: String): (Long, Long) = {
+    val before = dataFiles(spark, root)
     val obs = org.apache.spark.sql.Observation("graft-compact")
-    df.observe(obs, count(lit(1)).as("rows"))
-      .repartition(nFiles, LogSchema.partitionCols.map(col): _*)
-      // partition cols first, else the write's planned sort drops this one
-      // (ExportJob.write scaladoc)
-      .sortWithinPartitions((LogSchema.partitionCols ++ LogSchema.rowGroupCols).map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-      .partitionBy(LogSchema.partitionCols: _*)
-      .parquet(tmp.toString)
-    val written = obs.get("rows").asInstanceOf[Long]
-
-    // validate the new tree BEFORE touching the original
-    val tmpRows = spark.read.parquet(tmp.toString).count()
-    require(tmpRows == written,
-      s"compaction aborted: tmp tree has $tmpRows rows, expected $written — original untouched")
-
-    val backup = new Path(rootPath.getParent, rootPath.getName + ".pre-compact")
-    fs.rename(rootPath, backup)
-    fs.rename(tmp, rootPath)
-
-    // validate the swapped-in root before dropping the only other copy
-    val rootRows = spark.read.parquet(root).count()
-    require(rootRows == written,
-      s"compaction: swapped root has $rootRows rows, expected $written — backup retained at $backup")
-    fs.delete(backup, true)
-    (before.size.toLong, dataFiles(rootPath).size.toLong)
+    val rows = spark.read.parquet(root).observe(obs, count(lit(1)).as("rows"))
+    swap(spark, root,
+      tmp => graft.io.Layout.write(rows, tmp, SaveMode.Overwrite,
+        LogSchema.partitionCols, LogSchema.rowGroupCols),
+      _.count(), (_: Long) == obs.get("rows").asInstanceOf[Long])
+    (before, dataFiles(spark, root))
   }
 
-  /** Restore `root` after a crash mid-`compact`. Handles every
+  /** The number of `.parquet` files anywhere under `root`. */
+  def dataFiles(spark: SparkSession, root: String): Long = {
+    val rootPath = new Path(root)
+    val it = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(rootPath, true)
+    var n = 0L
+    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+    n
+  }
+
+  /** Replace `root` with the tree `write` puts at the path it is given,
+    * crash-safely: at every instant at least one complete copy of the
+    * data exists on disk, and [[recover]] restores `root` from any
+    * intermediate state:
+    *   1. write `<root>.compact-tmp` (crash → root untouched, stray tmp);
+    *   2. validate tmp: `ok(measure(tmp))` must hold, else abort with root
+    *      untouched;
+    *   3. rename root → `<root>.pre-compact` (crash → no root, but backup
+    *      AND validated tmp both complete — `recover` renames backup back);
+    *   4. rename tmp → root (crash → root already complete);
+    *   5. validate the NEW root the same way and only then delete the
+    *      backup — the old copy is never dropped before the new one has
+    *      passed a read.
+    * A backup left by an earlier run whose step 5 failed is the only good
+    * copy, so its presence stops the swap before anything is written.
+    * Returns `measure` of the new root. */
+  def swap[A](spark: SparkSession, root: String, write: String => Unit,
+              measure: DataFrame => A, ok: A => Boolean): A = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = tmpPath(rootPath)
+    val backup = backupPath(rootPath)
+    require(!fs.exists(backup),
+      s"compaction refused: $backup holds the last validated copy of $root — inspect it first")
+    write(tmp.toString)
+    val fresh = measure(spark.read.parquet(tmp.toString))
+    require(ok(fresh), s"compaction aborted: $tmp read back $fresh — original untouched")
+    require(fs.rename(rootPath, backup), s"compaction: rename $root -> $backup failed")
+    require(fs.rename(tmp, rootPath), s"compaction: rename $tmp -> $root failed")
+    val swapped = measure(spark.read.parquet(root))
+    require(ok(swapped), s"compaction: swapped $root read back $swapped — backup retained at $backup")
+    fs.delete(backup, true)
+    swapped
+  }
+
+  private def tmpPath(root: Path) = new Path(root.getParent, root.getName + ".compact-tmp")
+  private def backupPath(root: Path) = new Path(root.getParent, root.getName + ".pre-compact")
+
+  /** Restore `root` after a crash mid-[[swap]]. Handles every
     * intermediate state:
     *   - root present → nothing to do (drop any stray tmp; a leftover
     *     backup means the final validation never passed — keep it);
@@ -88,8 +87,8 @@ object Compaction {
   def recover(spark: SparkSession, root: String): Boolean = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(rootPath.getParent, rootPath.getName + ".compact-tmp")
-    val backup = new Path(rootPath.getParent, rootPath.getName + ".pre-compact")
+    val tmp = tmpPath(rootPath)
+    val backup = backupPath(rootPath)
     if (!fs.exists(rootPath) && fs.exists(backup)) fs.rename(backup, rootPath)
     if (fs.exists(rootPath) && fs.exists(tmp)) fs.delete(tmp, true)
     fs.exists(rootPath)

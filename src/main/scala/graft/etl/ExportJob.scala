@@ -33,35 +33,13 @@ object ExportJob {
     to_timestamp(substring(regexp_extract(c, "[^/]+$", 0), 1, 19), "yyyy-MM-dd-HH-mm-ss")
 
   /** Partitioned, clustered, Snappy parquet sink (reference
-    * s3access/parquet.py:31-112):
-    *   - `repartition(partitionCols)` gives the reference's
-    *     one-file-per-partition-combo layout: every row of a combo hashes
-    *     to the same task, whatever the task count. A hot combo therefore
-    *     lands on one task; spreading it needs a salt in the partitioning
-    *     key (and then several files per dir);
-    *   - `sortWithinPartitions(partitionCols ++ rowGroupCols)` clusters
-    *     each file's rows on `rowGroupCols` so Parquet row-group min/max
-    *     stats are tight on the common predicates — the Spark equivalent
-    *     of the reference's per-key-combo `write_table` loop
-    *     (parquet.py:20-21). The partition columns lead because the
-    *     planned write requires its input sorted on them: a sort on
-    *     `rowGroupCols` alone gets a `Sort(partitionCols)` planned above
-    *     it, and the optimizer then drops the inner sort as redundant,
-    *     leaving files unclustered. The combined sort satisfies the
-    *     write's ordering, so the plan keeps exactly this one sort;
-    *   - Hive `col=value/` dirs + partition-column dropping are built into
-    *     `partitionBy`.
-    */
-  def write(df: DataFrame, dst: String): Unit = {
-    import LogSchema._
-    df.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols ++ rowGroupCols).map(col): _*)
-      .write
-      .mode(SaveMode.Append)
-      .option("compression", "snappy")
-      .partitionBy(partitionCols: _*)
-      .parquet(dst)
-  }
+    * s3access/parquet.py:31-112): one file per partition combo, clustered
+    * on `rowGroupCols` — the Spark equivalent of the reference's
+    * per-key-combo `write_table` loop (parquet.py:20-21). The sort rule is
+    * in [[graft.io.Layout.write]]'s scaladoc. */
+  def write(df: DataFrame, dst: String): Unit =
+    graft.io.Layout.write(df, dst, SaveMode.Append,
+      LogSchema.partitionCols, LogSchema.rowGroupCols)
 
   /** Idempotency markers (reference cmd/export.py:158-168, 319-324):
     * presence of `{trackingDst}/{hour}` means the hour is already done. */

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Layout
 import graft.Tables
 
 /** VERIFIED-exact substring dedup at Lee-et-al scale minimum match
@@ -119,8 +120,8 @@ object ExactSubstring {
     pmod(id, lit(nBuckets.toLong)).cast("int")
 
   /** Write the standing layout: `dst` = window-hash postings
-    * (doc_id, pos, h) partitioned by hash bucket and sorted by h within
-    * files (row-group skipping for probe joins); `dst_docs` = the
+    * (doc_id, pos, h) partitioned by hash bucket (probes read their
+    * buckets and join on h, so files are not sorted); `dst_docs` = the
     * corpus text bucketed by doc id (the verify step re-extracts
     * candidate windows from here — the index answers probes without
     * the original table, the `_docs` convention of the minhash
@@ -135,19 +136,11 @@ object ExactSubstring {
       .withColumn("bucket", hashBucketCol(col("h"), nBuckets))
       .localCheckpoint()
     Par.inParallel(
-      () => hashed.repartition(col("bucket"))
-        .sortWithinPartitions(col("h"), col("doc_id"), col("pos"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "snappy")
-        .partitionBy("bucket").parquet(dst),
-      () => t.withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_docs"),
+      () => Layout.write(hashed, dst, SaveMode.Overwrite, Seq("bucket"), Nil),
+      () => Layout.write(t.withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+        dst + "_docs", SaveMode.Overwrite, Seq("dbucket"), Nil),
       () => Seq((nBuckets, L)).toDF("n_buckets", "win_len").coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dst + "_meta"))
+        .write.mode(SaveMode.Overwrite).parquet(dst + "_meta"))
   }
 
   /** Incremental append — the daily-ingest path: the batch's window
@@ -165,16 +158,9 @@ object ExactSubstring {
       .withColumn("bucket", hashBucketCol(col("h"), nBuckets))
       .localCheckpoint()
     Par.inParallel(
-      () => hashed.repartition(col("bucket"))
-        .sortWithinPartitions(col("h"), col("doc_id"), col("pos"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .option("compression", "snappy")
-        .partitionBy("bucket").parquet(dst),
-      () => t.withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_docs"))
+      () => Layout.write(hashed, dst, SaveMode.Append, Seq("bucket"), Nil),
+      () => Layout.write(t.withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+        dst + "_docs", SaveMode.Append, Seq("dbucket"), Nil))
     hashed.count()
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Layout
 
 /** Standing MinHash-LSH near-dup index — the dedup-on-INGEST path.
   * q26 finds near-dup pairs within one corpus scan; a 100 TB standing
@@ -141,20 +142,14 @@ object NearDupIndex {
     // writes (Par.inParallel contract: wall here is serialized job
     // planning + commit latency, not executor CPU)
     Par.inParallel(
-      () => dfG.repartition(col("bucket")).sortWithinPartitions(col("g"))
-        .write.mode(SaveMode.Overwrite).option("compression", "snappy")
-        .partitionBy("bucket").parquet(dst + "_sh_df"),
-      () => capped.groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(col("g"))).as("gs"))
-        .withColumn("dbucket", docBucket(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(SaveMode.Overwrite).option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_docs"),
-      () => bandRows(signatures(capped))
-        .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets))
-        .repartition(col("bucket")).sortWithinPartitions(col("bh"), col("doc_id"))
-        .write.mode(SaveMode.Overwrite).option("compression", "snappy")
-        .partitionBy("bucket").parquet(dst),
+      () => Layout.write(dfG, dst + "_sh_df", SaveMode.Overwrite, Seq("bucket"), Nil),
+      () => Layout.write(capped.groupBy(col("doc_id"))
+          .agg(sort_array(collect_list(col("g"))).as("gs"))
+          .withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
+        dst + "_docs", SaveMode.Overwrite, Seq("dbucket"), Nil),
+      () => Layout.write(bandRows(signatures(capped))
+          .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)),
+        dst, SaveMode.Overwrite, Seq("bucket"), Nil),
       () => Seq((nBuckets, maxDocFreq)).toDF("n_buckets", "max_doc_freq").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(dst + "_meta"))
   }
@@ -261,9 +256,7 @@ object NearDupIndex {
     // partition-aligned write, not coalesce(1): a mass delete (a whole
     // source at once) must not serialize through one task; the sidecar
     // is transient (cleared at purge), so small-file buildup is bounded
-    rows.repartition(col("dbucket"))
-      .write.mode(SaveMode.Append).option("compression", "snappy")
-      .partitionBy("dbucket").parquet(tombPath(dst))
+    Layout.write(rows, tombPath(dst), SaveMode.Append, Seq("dbucket"), Nil)
     rows.count()
   }
 
@@ -320,10 +313,10 @@ object NearDupIndex {
     Par.inParallel(
       () => rewriteBuckets(s, dst, "bucket", bBuckets,
         keep = _.join(dead, Seq("doc_id"), "left_anti"),
-        sortCols = Seq("bh", "doc_id")),
+        sortCols = Nil),
       () => rewriteBuckets(s, dst + "_docs", "dbucket", dBuckets,
         keep = _.join(dead, Seq("doc_id"), "left_anti"),
-        sortCols = Seq("doc_id")))
+        sortCols = Nil))
 
     // negative df segment from the PINNED arrays — probes' sums drop
     // the dead docs' contributions without touching existing segments.
@@ -331,12 +324,10 @@ object NearDupIndex {
     // _docs and finds no dead rows) can never decrement twice; the
     // one crash window (rewrites done, segment unwritten) leaves df
     // conservatively HIGH — caps trigger earlier, never later
-    deadDocs.select(explode(col("gs")).as("g"))
-      .groupBy(col("g")).agg((-count(lit(1))).as("df"))
-      .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets))
-      .repartition(col("bucket")).sortWithinPartitions(col("g"))
-      .write.mode(SaveMode.Append).option("compression", "snappy")
-      .partitionBy("bucket").parquet(dst + "_sh_df")
+    Layout.write(deadDocs.select(explode(col("gs")).as("g"))
+        .groupBy(col("g")).agg((-count(lit(1))).as("df"))
+        .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets)),
+      dst + "_sh_df", SaveMode.Append, Seq("bucket"), Nil)
 
     // clear the sidecar LAST — any crash above leaves probes correct
     val tp = new org.apache.hadoop.fs.Path(tombPath(dst))
@@ -370,12 +361,9 @@ object NearDupIndex {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val tmp = root + ".purge-tmp"
-    keep(s.read.parquet(root)
-        .filter(col(bucketCol).isin(buckets.map(Int.box): _*)))
-      .repartition(col(bucketCol))
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).option("compression", "snappy")
-      .partitionBy(bucketCol).parquet(tmp)
+    Layout.write(keep(s.read.parquet(root)
+        .filter(col(bucketCol).isin(buckets.map(Int.box): _*))),
+      tmp, SaveMode.Overwrite, Seq(bucketCol), sortCols)
     buckets.foreach { b =>
       val live = new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b")
       val bak = new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b.bak")
@@ -431,18 +419,12 @@ object NearDupIndex {
     // three independent appends from the pins — concurrent
     // (Par.inParallel contract)
     Par.inParallel(
-      () => raw.groupBy(col("g")).agg(count(lit(1)).as("df"))
-        .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets))
-        .repartition(col("bucket")).sortWithinPartitions(col("g"))
-        .write.mode(SaveMode.Append).option("compression", "snappy")
-        .partitionBy("bucket").parquet(dst + "_sh_df"),
-      () => newSets.withColumn("dbucket", docBucket(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(SaveMode.Append).option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_docs"),
-      () => bands.repartition(col("bucket")).sortWithinPartitions(col("bh"), col("doc_id"))
-        .write.mode(SaveMode.Append).option("compression", "snappy")
-        .partitionBy("bucket").parquet(dst))
+      () => Layout.write(raw.groupBy(col("g")).agg(count(lit(1)).as("df"))
+          .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets)),
+        dst + "_sh_df", SaveMode.Append, Seq("bucket"), Nil),
+      () => Layout.write(newSets.withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
+        dst + "_docs", SaveMode.Append, Seq("dbucket"), Nil),
+      () => Layout.write(bands, dst, SaveMode.Append, Seq("bucket"), Nil))
     val touched = bands.select(col("bucket")).distinct().collect().map(_.getInt(0))
     // drift signal: shingles whose corpus df sat in (0, max] but whose
     // corpus+batch df crossed the cap. dfc ≤ max implies the shingle
@@ -528,13 +510,13 @@ object NearDupIndex {
         keep = _.join(affIds, Seq("doc_id"), "left_anti")
           .unionByName(newBands.select(col("doc_id"), col("band"),
             col("bh"), col("bucket"))),
-        sortCols = Seq("bh", "doc_id")),
+        sortCols = Nil),
       () => rewriteBuckets(s, dst + "_docs", "dbucket", dBuckets,
         keep = _.join(affIds, Seq("doc_id"), "left_anti")
           .unionByName(recapped
             .withColumn("dbucket", docBucket(col("doc_id"), nBuckets))
             .select(col("doc_id"), col("gs"), col("dbucket"))),
-        sortCols = Seq("doc_id")))
+        sortCols = Nil))
     (nAffected, bBuckets)
   }
 

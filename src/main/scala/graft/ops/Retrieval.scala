@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Layout
 import graft.Tables
 
 /** Full-text retrieval over the corpus — the data-curation tool behind
@@ -419,9 +420,9 @@ object Retrieval {
     * `<dst>_meta` so any later reader derives the same buckets.
     *
     * 100 TB shape: the postings write is ONE shuffle (repartition by
-    * bucket) + a per-task sort; `nBuckets` scales with the cluster (the
-    * per-bucket file count follows shuffle parallelism, so a bucket is
-    * never one giant file). Queries never touch this job again — they
+    * bucket) + a per-task sort; `nBuckets` scales with the cluster (a
+    * write puts one file in each bucket dir, so more buckets keep the
+    * files small). Queries never touch this job again — they
     * read nBuckets⁻¹-ish of the layout per term. */
   def writePostingsBucketed(docs: DataFrame, dst: String,
                             nBuckets: Int = 64): Unit = {
@@ -471,39 +472,22 @@ object Retrieval {
     // map that lets a purge find its touched dirs without scanning the
     // store), plus the 1-row totals/meta frames
     Par.inParallel(
-      () => postings
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "snappy")
-        .partitionBy("bucket")
-        .parquet(dst),
+      () => Layout.write(postings, dst, SaveMode.Overwrite, Seq("bucket"), Seq("term", "doc_id")),
       // df per term, bucketed the same way — the probe reads ≤ |query|
       // rows from the query's buckets
-      () => postings
-        .groupBy(col("term"), col("bucket")).agg(count(lit(1)).as("df"))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(dst + "_df"),
+      () => Layout.write(postings.groupBy(col("term"), col("bucket")).agg(count(lit(1)).as("df")),
+        dst + "_df", SaveMode.Overwrite, Seq("bucket"), Seq("term")),
       () => lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("n_total"))
         .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst + "_totals"),
+        .write.mode(SaveMode.Overwrite).parquet(dst + "_totals"),
       () => Seq(nBuckets).toDF("n_buckets").coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst + "_meta"),
-      () => lens
-        .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_dl"),
-      () => postings.select(col("doc_id"), col("bucket")).distinct()
-        .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_docbuckets"))
+        .write.mode(SaveMode.Overwrite).parquet(dst + "_meta"),
+      () => Layout.write(lens
+          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+        dst + "_dl", SaveMode.Overwrite, Seq("dbucket"), Nil),
+      () => Layout.write(postings.select(col("doc_id"), col("bucket")).distinct()
+          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+        dst + "_docbuckets", SaveMode.Overwrite, Seq("dbucket"), Nil))
   }
 
   /** Doc id → sidecar partition bucket (plain modulo — ids are already
@@ -740,10 +724,7 @@ object Retrieval {
     val nBuckets = s.read.parquet(dst + "_meta").head().getInt(0)
     val rows = ids.select(col("doc_id")).distinct()
       .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-    rows.repartition(col("dbucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("compression", "snappy")
-      .partitionBy("dbucket").parquet(dst + "_tombstones")
+    Layout.write(rows, dst + "_tombstones", SaveMode.Append, Seq("dbucket"), Nil)
     rows.count()
   }
 
@@ -833,20 +814,17 @@ object Retrieval {
       () => NearDupIndex.rewriteBuckets(s, dst, "bucket", touched,
         _.join(dead, Seq("doc_id"), "left_anti"), Seq("term", "doc_id")),
       () => NearDupIndex.rewriteBuckets(s, dst + "_docbuckets", "dbucket", dBuckets,
-        _.join(dead, Seq("doc_id"), "left_anti"), Seq("doc_id")),
+        _.join(dead, Seq("doc_id"), "left_anti"), Nil),
       () => NearDupIndex.rewriteBuckets(s, dst + "_dl", "dbucket", dBuckets,
-        _.join(dead, Seq("doc_id"), "left_anti"), Seq("doc_id")))
+        _.join(dead, Seq("doc_id"), "left_anti"), Nil))
     Par.inParallel(
-      () => deadPost.groupBy(col("term")).agg((-count(lit(1))).as("df"))
-        .withColumn("bucket", termBucketCol(col("term"), nBuckets))
-        .repartition(col("bucket")).sortWithinPartitions(col("term"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .option("compression", "snappy")
-        .partitionBy("bucket").parquet(dst + "_df"),
+      () => Layout.write(deadPost.groupBy(col("term")).agg((-count(lit(1))).as("df"))
+          .withColumn("bucket", termBucketCol(col("term"), nBuckets)),
+        dst + "_df", SaveMode.Append, Seq("bucket"), Seq("term")),
       () => deadDl.agg((-count(lit(1))).as("n_docs"),
           (-coalesce(sum(col("dl")), lit(0L))).as("n_total"))
         .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(dst + "_totals"))
+        .write.mode(SaveMode.Append).parquet(dst + "_totals"))
     // clear the sidecar LAST — any crash above leaves probes correct
     val tp = new org.apache.hadoop.fs.Path(dst + "_tombstones")
     tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
@@ -885,36 +863,19 @@ object Retrieval {
     // concurrently (Par.inParallel contract; the same serialized-small-
     // jobs cut as the build path)
     Par.inParallel(
-      () => postings
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .option("compression", "snappy")
-        .partitionBy("bucket")
-        .parquet(dst),
-      () => postings
-        .groupBy(col("term"), col("bucket")).agg(count(lit(1)).as("df"))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("bucket")
-        .parquet(dst + "_df"),
+      () => Layout.write(postings, dst, SaveMode.Append, Seq("bucket"), Seq("term", "doc_id")),
+      () => Layout.write(postings.groupBy(col("term"), col("bucket")).agg(count(lit(1)).as("df")),
+        dst + "_df", SaveMode.Append, Seq("bucket"), Seq("term")),
       () => dAll.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("n_total"))
         .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(dst + "_totals"),
+        .write.mode(SaveMode.Append).parquet(dst + "_totals"),
       // delete-path sidecars ride the append too
-      () => dAll.select(col("doc_id"), col("dl"))
-        .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_dl"),
-      () => postings.select(col("doc_id"), col("bucket")).distinct()
-        .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-        .repartition(col("dbucket")).sortWithinPartitions(col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .option("compression", "snappy")
-        .partitionBy("dbucket").parquet(dst + "_docbuckets"))
+      () => Layout.write(dAll.select(col("doc_id"), col("dl"))
+          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+        dst + "_dl", SaveMode.Append, Seq("dbucket"), Nil),
+      () => Layout.write(postings.select(col("doc_id"), col("bucket")).distinct()
+          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+        dst + "_docbuckets", SaveMode.Append, Seq("dbucket"), Nil))
     val touched = postings.select(col("bucket")).distinct()
       .as[Int].collect().sorted
     (postings.count(), touched)
@@ -929,7 +890,7 @@ object Retrieval {
     * it is `etl.Compaction`. */
   def compactIndex(s: SparkSession, dst: String): (Long, Long) = {
     val dfStats = SegmentCompaction.compactSegments(s, dst + "_df",
-      keys = Seq("term"), sums = Seq("df"))
+      keys = Seq("term"), sums = Seq("df"), clusterCols = Seq("term"))
     SegmentCompaction.compactSegments(s, dst + "_totals",
       keys = Nil, sums = Seq("n_docs", "n_total"), bucketCol = None)
     dfStats

@@ -63,10 +63,7 @@ object Rollup {
     * batch double-counts, so a stream feeding this store needs a
     * checkpoint. */
   def appendPartials(events: DataFrame, dst: String): Unit =
-    partialRows(events)
-      .repartition(col("day"))
-      .write.mode(SaveMode.Append).option("compression", "snappy")
-      .partitionBy("day").parquet(dst)
+    graft.io.Layout.write(partialRows(events), dst, SaveMode.Append, Seq("day"), Nil)
 
   /** Serve the daily rollup from the partials store: exact n/sum/min/max
     * plus the HLL-union distinct-user estimate. */
@@ -107,10 +104,7 @@ object Rollup {
     * Bins are counts: a replayed batch double-counts (checkpoint the
     * stream). */
   def appendHistograms(events: DataFrame, dst: String): Unit =
-    histogramRows(events)
-      .repartition(col("day"))
-      .write.mode(SaveMode.Append).option("compression", "snappy")
-      .partitionBy("day").parquet(dst)
+    graft.io.Layout.write(histogramRows(events), dst, SaveMode.Append, Seq("day"), Nil)
 
   /** Exact per-day p50/p95 cent bins served from the partials:
     * re-sum the (day, bin) rows (append slices collapse here), one

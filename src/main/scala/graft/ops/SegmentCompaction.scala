@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Segment compaction for the APPEND-ONLY aggregate sidecars (the
@@ -10,29 +9,28 @@ import org.apache.spark.sql.functions._
   * more small file per bucket — and probes sum segments at read time.
   * Correctness never degrades, but read amplification grows with
   * append count; compaction collapses the store back to ONE row per
-  * key (restoring the term-sorted row-group skipping of a fresh
-  * write), summing exactly what the probes sum.
+  * key (for `_df`, restoring the term-sorted row-group skipping of a
+  * fresh write), summing exactly what the probes sum.
   *
-  * Crash-safety follows `etl.Compaction`'s contract and NAMING, so
+  * The rewrite goes through `etl.Compaction.swap`, so
   * `Compaction.recover(root)` restores any intermediate state of this
-  * op too: write tmp → validate → rename root→backup → rename
-  * tmp→root → validate → drop backup. Validation here is
-  * SUM-preservation (the quantity probes consume), not row count —
-  * collapsing rows is the point. */
+  * op too. Validation here is SUM-preservation (the quantity probes
+  * consume), not row count — collapsing rows is the point. */
 object SegmentCompaction {
 
   /** Compact `root` to one row per (`keys`), summing `sums`.
     * `bucketCol` keeps the partition layout (None → a single unsplit
-    * store, for tiny sidecars like `_totals`). Returns (rows before,
-    * rows after). */
+    * store, for tiny sidecars like `_totals`); `clusterCols` sorts each
+    * bucket's file, worth it only where a reader pushes a value filter
+    * on them (the `_df` probe's `term IN`). Returns (rows before, rows
+    * after). */
   def compactSegments(spark: SparkSession, root: String, keys: Seq[String],
                       sums: Seq[String],
-                      bucketCol: Option[String] = Some("bucket")): (Long, Long) = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                      bucketCol: Option[String] = Some("bucket"),
+                      clusterCols: Seq[String] = Nil): (Long, Long) = {
     val df = spark.read.parquet(root)
 
-    def totalsOf(d: org.apache.spark.sql.DataFrame): Seq[Any] = {
+    def totalsOf(d: DataFrame): Seq[Any] = {
       val aggs = count(lit(1)).as("n") +: sums.map(c => sum(col(c)).as(c))
       d.agg(aggs.head, aggs.tail: _*).collect()(0).toSeq
     }
@@ -44,29 +42,12 @@ object SegmentCompaction {
       if (groupCols.isEmpty) df.agg(sumAggs.head, sumAggs.tail: _*)
       else df.groupBy(groupCols: _*).agg(sumAggs.head, sumAggs.tail: _*)
 
-    val tmp = new Path(rootPath.getParent, rootPath.getName + ".compact-tmp")
-    val writer = bucketCol match {
-      case Some(b) =>
-        agg0.repartition(col(b)).sortWithinPartitions(keys.map(col): _*)
-          .write.mode(SaveMode.Overwrite).option("compression", "snappy")
-          .partitionBy(b)
-      case None =>
-        agg0.coalesce(1).write.mode(SaveMode.Overwrite)
-    }
-    writer.parquet(tmp.toString)
-
-    // the quantity probes consume must be identical BEFORE the swap
-    val tmpTotals = totalsOf(spark.read.parquet(tmp.toString))
-    require(tmpTotals.drop(1) == before.drop(1),
-      s"compaction aborted: sums drifted $before -> $tmpTotals — original untouched")
-
-    val backup = new Path(rootPath.getParent, rootPath.getName + ".pre-compact")
-    fs.rename(rootPath, backup)
-    fs.rename(tmp, rootPath)
-    val after = totalsOf(spark.read.parquet(root))
-    require(after.drop(1) == before.drop(1),
-      s"compaction: swapped root sums drifted $before -> $after — backup retained at $backup")
-    fs.delete(backup, true)
+    val after = graft.etl.Compaction.swap(spark, root,
+      tmp => bucketCol match {
+        case Some(b) => graft.io.Layout.write(agg0, tmp, SaveMode.Overwrite, Seq(b), clusterCols)
+        case None => agg0.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+      },
+      totalsOf, (t: Seq[Any]) => t.drop(1) == before.drop(1))
     (before.head.asInstanceOf[Long], after.head.asInstanceOf[Long])
   }
 }

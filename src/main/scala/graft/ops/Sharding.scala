@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -19,8 +19,8 @@ import graft.Tables
   * Scale shape: one hash shuffle on shard_id co-locates each shard's
   * rows in one task (a task may own several shards; `partitionBy`
   * splits them into one file per shard), and the in-shard order comes
-  * from `sortWithinPartitions` — a spillable per-task external sort of
-  * that task's shards only, never a global sort. Shard size is the
+  * from `graft.io.Layout.write`'s sort — a spillable per-task external
+  * sort of that task's shards only, never a global sort. Shard size is the
   * knob: docsPerShard bounds rows per file, so file count tracks corpus
   * size and no task's sort exceeds its shards' rows. This is the same
   * write-side discipline as the ETL layout (ExportJob's partitioned
@@ -31,17 +31,11 @@ object Sharding {
   /** Write `docs` (must carry doc_id) into `dst/shard_id=N/` files,
     * position-ordered within each shard. `assignment` is q56-shaped:
     * (doc_id, shard_id, pos_in_shard). */
-  def writeShards(docs: DataFrame, assignment: DataFrame, dst: String): Unit = {
-    docs
-      .join(assignment.select(col("doc_id"), col("shard_id"), col("pos_in_shard")),
-        "doc_id")
-      .repartition(col("shard_id"))
-      .sortWithinPartitions(col("shard_id"), col("pos_in_shard"))
-      .write.mode("overwrite")
-      .option("compression", "snappy")
-      .partitionBy("shard_id")
-      .parquet(dst)
-  }
+  def writeShards(docs: DataFrame, assignment: DataFrame, dst: String): Unit =
+    graft.io.Layout.write(
+      docs.join(assignment.select(col("doc_id"), col("shard_id"), col("pos_in_shard")),
+        "doc_id"),
+      dst, SaveMode.Overwrite, Seq("shard_id"), Seq("pos_in_shard"))
 
   /** The end-to-end materialization: run the q57 decision cascade over
     * the corpus, epoch-shuffle the keepers, write them as shards —

@@ -65,10 +65,7 @@ object TimeSeries {
     * [[mergedUserHourly]] answer identically. Partials are counts: a
     * replayed batch double-counts its hours (checkpoint the stream). */
   def appendUserHourly(events: DataFrame, dst: String): Unit =
-    userHourlyRows(events)
-      .repartition(col("day"))
-      .write.mode(SaveMode.Append).option("compression", "snappy")
-      .partitionBy("day").parquet(dst)
+    graft.io.Layout.write(userHourlyRows(events), dst, SaveMode.Append, Seq("day"), Nil)
 
   /** Serve the hourly grain from the store: append slices collapse
     * under exact long/decimal re-summation, so this frame is

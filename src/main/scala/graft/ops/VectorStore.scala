@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -105,37 +105,24 @@ object VectorStore {
       .parquet(s"$root/tombstones")
 
   /** Rewrite the cells without tombstoned rows and with one file per
-    * cell (append-era segment files collapse). Write tmp → validate
-    * live count → swap — `etl.Compaction`'s crash-ordering. Returns
-    * (files before, files after). */
+    * cell (append-era segment files collapse) through
+    * `etl.Compaction.swap`: the new store's row count must equal the live
+    * rows that flowed through the write, and `Compaction.recover` of
+    * `<root>/store` restores any interruption. Returns (files before,
+    * files after). */
   def compactCells(s: SparkSession, root: String): (Long, Long) = {
-    val storePath = new org.apache.hadoop.fs.Path(s"$root/store")
-    val fs = storePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def nFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val before = nFiles(storePath)
-    val store = s.read.parquet(s"$root/store")
+    val store = s"$root/store"
+    val before = graft.etl.Compaction.dataFiles(s, store)
     val tomb = s.read.parquet(s"$root/tombstones")
       .select(col("vec_id")).distinct()
-    val live = store.join(tomb, Seq("vec_id"), "left_anti")
-    val expect = live.count()
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/store.compact-tmp")
-    fs.delete(tmp, true)
-    live.repartition(col("cluster"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.partitionBy("cluster").parquet(tmp.toString)
-    val got = s.read.parquet(tmp.toString).count()
-    require(got == expect, s"compaction validation: wrote $got, expected $expect")
-    val backup = new org.apache.hadoop.fs.Path(s"$root/store.backup")
-    fs.delete(backup, true)
-    require(fs.rename(storePath, backup), "compaction swap: store -> backup")
-    require(fs.rename(tmp, storePath), "compaction swap: tmp -> store")
-    fs.delete(backup, true)
-    (before, nFiles(storePath))
+    val obs = org.apache.spark.sql.Observation("graft-compact-cells")
+    val live = s.read.parquet(store)
+      .join(tomb, Seq("vec_id"), "left_anti")
+      .observe(obs, count(lit(1)).as("rows"))
+    graft.etl.Compaction.swap(s, store,
+      tmp => graft.io.Layout.write(live, tmp, SaveMode.Overwrite, Seq("cluster"), Nil),
+      _.count(), (_: Long) == obs.get("rows").asInstanceOf[Long])
+    (before, graft.etl.Compaction.dataFiles(s, store))
   }
 
   /** Cell-pruned top-k probe: the query vector's `nprobe` nearest cells

@@ -6,6 +6,18 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for specs — one per suite, GraftSession semantics. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
+
+  /** The parquet data files under local dir `root`. */
+  def parquetFiles(root: String): Seq[String] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+
+  /** Whether `file`'s rows, read back in file order, are sorted on `cols`. */
+  def sortedOn(file: String, cols: Seq[String]): Boolean = {
+    val keys = cols.map(org.apache.spark.sql.functions.col)
+    val inFileOrder = spark.read.parquet(file).select(keys: _*)
+    inFileOrder.collect().toSeq == inFileOrder.sort(keys: _*).collect().toSeq
+  }
 }
 
 object Fixtures {

@@ -1,0 +1,111 @@
+package graft.etl
+
+import java.io.IOException
+import java.net.URI
+import java.nio.file.Files
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.functions._
+import graft.{Fixtures, SparkSpec}
+import graft.ops.{Clustering, SegmentCompaction, VectorStore}
+
+/** Local files under the `crashfs:` scheme, except that renaming a
+  * `*.compact-tmp` dir fails: a crash between the swap's two renames,
+  * after the original has moved to its backup. Statuses carry default
+  * permissions: the raw class reads them through a `file:` URI. */
+class CrashFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  private def plain(s: FileStatus) =
+    new FileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
+  override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
+  override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(plain)
+  override def rename(src: Path, dst: Path): Boolean =
+    if (src.getName.endsWith(".compact-tmp")) throw new IOException(s"injected crash renaming $src")
+    else super.rename(src, dst)
+}
+
+/** Each compaction, crashed at its worst point, is restored by
+  * `Compaction.recover` with its data unchanged. */
+class CompactionSwapSpec extends SparkSpec {
+
+  private def crashRoot(name: String): String = {
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    "crashfs://" + Files.createTempDirectory(s"graft-swap-$name").toFile.getAbsolutePath
+  }
+
+  /** Run `compaction`, which must crash in the swap, then recover `root`. */
+  private def crashAndRecover(root: String)(compaction: => Any): Unit = {
+    val e = intercept[IOException](compaction)
+    assert(e.getMessage.contains("injected crash"), e)
+    assert(Compaction.recover(spark, root), s"$root not restored")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new Path(root + ".compact-tmp")) && !fs.exists(new Path(root + ".pre-compact")))
+  }
+
+  test("compact: crash between the swap renames, recover restores every row") {
+    val base = crashRoot("compact")
+    val src = Files.createTempDirectory("graft-swap-src").toFile.getAbsolutePath
+    val dst = s"$base/out"
+    (1 to 3).foreach { i =>
+      Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-0$i-00-RUN$i"),
+        (Fixtures.happyLine + "\n" + Fixtures.dashLine).getBytes)
+      ExportJob.write(Enrich.parseLines(ExportJob.readHour(spark, src, "2021-07-18-05").get), dst)
+    }
+    def rows() = spark.read.parquet(dst).orderBy("requestid", "ts").collect().toSeq
+    val before = rows()
+    crashAndRecover(dst)(Compaction.compact(spark, dst))
+    assert(rows() == before)
+  }
+
+  test("a backup left by an earlier failed swap stops the next compaction before it writes") {
+    val src = Files.createTempDirectory("graft-swap-refuse").toFile.getAbsolutePath
+    val dst = s"$src/out"
+    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-01-00-RUN1"),
+      (Fixtures.happyLine + "\n" + Fixtures.dashLine).getBytes)
+    ExportJob.write(Enrich.parseLines(ExportJob.readHour(spark, src, "2021-07-18-05").get), dst)
+    val backup = java.nio.file.Paths.get(dst + ".pre-compact")
+    Files.createDirectories(backup)
+    Files.write(backup.resolve("part-0.parquet"), "last good copy".getBytes)
+    val rootFiles = parquetFiles(dst).sorted
+    val e = intercept[IllegalArgumentException](Compaction.compact(spark, dst))
+    assert(e.getMessage.contains("compaction refused"), e)
+    assert(!Files.exists(java.nio.file.Paths.get(dst + ".compact-tmp")))
+    assert(parquetFiles(dst).sorted == rootFiles)
+    assert(parquetFiles(backup.toString) == Seq(backup.resolve("part-0.parquet").toString))
+    assert(new String(Files.readAllBytes(backup.resolve("part-0.parquet"))) == "last good copy")
+  }
+
+  test("compactSegments: crash between the swap renames, recover restores every sum") {
+    import spark.implicits._
+    val root = s"${crashRoot("segments")}/idx_df"
+    for (seg <- 0 until 3)
+      graft.io.Layout.write(
+        (0 until 30).map(i => (s"t${(i * 7 + seg) % 30}", i % 4, (i + seg).toLong)).toDF("term", "bucket", "df"),
+        root, SaveMode.Append, Seq("bucket"), Seq("term"))
+    def rows() = spark.read.parquet(root).groupBy("bucket", "term").agg(sum("df").as("df"))
+      .orderBy("bucket", "term").collect().toSeq
+    val before = rows()
+    crashAndRecover(root)(SegmentCompaction.compactSegments(spark, root, Seq("term"), Seq("df")))
+    assert(rows() == before)
+    assert(spark.read.parquet(root).count() == 90L, "the segments must still be uncompacted")
+  }
+
+  test("compactCells: crash between the swap renames, recover restores the probe answer") {
+    import spark.implicits._
+    val emb = (0L until 40L).map(i => (i, Seq.tabulate(4)(d => ((i * 5 + d) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    val centroids = Clustering.trainCentroids(emb, k = 3, sampleCap = 40)
+    val root = crashRoot("cells")
+    (0 until 4).foreach { i =>
+      VectorStore.appendCellRows(emb.filter(pmod(col("vec_id"), lit(4)) === i), centroids, s"$root/store")
+    }
+    VectorStore.appendTombstones(emb.filter(col("vec_id") < 5L), root)
+    def probe() = VectorStore.probeTopK(spark, root, Seq(1000L, 2000L, 3000L, 4000L), centroids,
+      nprobe = 2, k = 8).collect().toSeq
+    val before = probe()
+    assert(before.size == 8)
+    crashAndRecover(s"$root/store")(VectorStore.compactCells(spark, root))
+    assert(probe() == before)
+  }
+}

@@ -98,14 +98,9 @@ class ExportJobSpec extends SparkSpec {
       lines.mkString("\n").getBytes)
     assert(ExportJob.runHour(spark, src, dst, s"$base/track", "2021-07-18-05") == 63L)
 
-    val files = Files.walk(java.nio.file.Paths.get(dst)).toArray.map(_.toString)
-      .filter(_.endsWith(".parquet")).toSeq
+    val files = parquetFiles(dst)
     assert(files.size == 2)
-    val keys = LogSchema.rowGroupCols.map(org.apache.spark.sql.functions.col)
-    for (f <- files) {
-      val inFileOrder = spark.read.parquet(f).select(keys: _*).collect().toSeq
-      assert(inFileOrder == spark.read.parquet(f).select(keys: _*).sort(keys: _*).collect().toSeq, f)
-    }
+    for (f <- files) assert(sortedOn(f, LogSchema.rowGroupCols), f)
     val big = spark.read.parquet(files.filter(_.contains("REST.GET.OBJECT")): _*)
     assert(big.select("requester").distinct().count() == 7)
   }

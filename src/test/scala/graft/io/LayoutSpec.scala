@@ -1,0 +1,125 @@
+package graft.io
+
+import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.SparkSpec
+import graft.etl.{Enrich, ExportJob, LogSchema}
+import graft.ops.Retrieval
+
+/** Every file a clustered write leaves is sorted on its cluster columns,
+  * and the executed plan of the write holds exactly the one sort. The
+  * stores checked are the ones whose readers push a value filter on the
+  * cluster columns (the posting probe's `term IN`). */
+class LayoutSpec extends SparkSpec {
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** 40 docs of 24 words from a 30-word vocabulary, doc ids scrambled so
+    * no store is sorted by accident of input order. */
+  private def corpus(ids: Range = 0 until 40): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val vocab = (0 until 30).map(i => s"w${(i * 7) % 30}x")
+    ids.map(i => ((i * 17L) % 97 + 1, Seq.fill(24)(vocab(rnd.nextInt(30))).mkString(" ")))
+      .toDF("doc_id", "text").repartition(3)
+  }
+
+  private def tmpDir(name: String): String =
+    Files.createTempDirectory(s"graft-layout-$name").toFile.getAbsolutePath + "/idx"
+
+  /** The data files of `root`'s `<partitionCol>=*` dirs; each must exist
+    * and be sorted on `cols`. */
+  private def assertSorted(root: String, partitionCol: String, cols: Seq[String]): Unit = {
+    val files = parquetFiles(root).filter(_.contains(s"/$partitionCol="))
+    assert(files.nonEmpty, s"no $partitionCol=* files under $root")
+    for (f <- files) assert(sortedOn(f, cols), s"$f not sorted on ${cols.mkString(", ")}")
+  }
+
+  test("posting store files are sorted on (term, doc_id), df files on term") {
+    val dst = tmpDir("postings")
+    Retrieval.writePostingsBucketed(corpus(), dst, nBuckets = 4)
+    assertSorted(dst, "bucket", Seq("term", "doc_id"))
+    assertSorted(dst + "_df", "bucket", Seq("term"))
+  }
+
+  test("posting append lands sorted files") {
+    val dst = tmpDir("postapp")
+    Retrieval.writePostingsBucketed(corpus(0 until 20), dst, nBuckets = 4)
+    val before = parquetFiles(dst).toSet
+    Retrieval.appendToPostings(corpus(20 until 40), dst)
+    val appended = parquetFiles(dst).filterNot(before)
+    assert(appended.exists(_.contains("/bucket=")))
+    assertSorted(dst, "bucket", Seq("term", "doc_id"))
+    assertSorted(dst + "_df", "bucket", Seq("term"))
+  }
+
+  test("posting purge and df compaction keep the files sorted on term") {
+    import spark.implicits._
+    val dst = tmpDir("postpurge")
+    Retrieval.writePostingsBucketed(corpus(0 until 20), dst, nBuckets = 4)
+    Retrieval.appendToPostings(corpus(20 until 40), dst)
+    Retrieval.tombstonePostings(Seq(18L, 35L, 52L).toDF("doc_id"), dst)
+    val (purged, touched) = Retrieval.purgePostingTombstones(spark, dst)
+    assert(purged == 3L && touched.nonEmpty)
+    assertSorted(dst, "bucket", Seq("term", "doc_id"))
+    Retrieval.compactIndex(spark, dst)
+    assertSorted(dst + "_df", "bucket", Seq("term"))
+  }
+
+  /** The executed plan of the write `body` issues. */
+  private def writePlan(body: => Unit): SparkPlan = {
+    var plan: Option[SparkPlan] = None
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plan = Some(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plan.getOrElse(fail("no write was executed"))
+  }
+
+  private def sortKeys(s: SortExec): Seq[String] = s.sortOrder.map {
+    case SortOrder(a: Attribute, _, _, _) => a.name
+    case o => o.sql
+  }
+
+  test("a clustered write's executed plan holds one sort, on partitionCols ++ clusterCols") {
+    import spark.implicits._
+    val df = (0 until 200).map(i => ((i * 37) % 5, (i * 53) % 200L, s"v$i")).toDF("b", "k", "v")
+    for (cluster <- Seq(Seq("k"), Seq("k", "v"), Nil)) {
+      val plan = writePlan(
+        Layout.write(df, tmpDir("plan"), SaveMode.Overwrite, Seq("b"), cluster))
+      val sorts = Plans.collect(plan) { case s: SortExec => s }
+      assert(sorts.map(sortKeys) == Seq("b" +: cluster), plan.toString)
+    }
+  }
+
+  test("the export's write plan: one hash exchange on the 6 partition columns, one sort") {
+    val src = Files.createTempDirectory("graft-layout-export").toFile.getAbsolutePath
+    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-ABCDEF0123456789"),
+      (graft.Fixtures.happyLine + "\n" + graft.Fixtures.dashLine).getBytes)
+    val lines = ExportJob.readHour(spark, src, "2021-07-18-05").get
+    val plan = writePlan(ExportJob.write(Enrich.parseLines(lines), s"$src/out"))
+    val exchanges = Plans.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges.size == 1, plan.toString)
+    val keys = exchanges.head match {
+      case h: HashPartitioning => h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+      case p => fail(s"not a hash exchange: $p")
+    }
+    assert(keys == LogSchema.partitionCols, plan.toString)
+    val sorts = Plans.collect(plan) { case s: SortExec => s }
+    assert(sorts.map(sortKeys) == Seq(LogSchema.partitionCols ++ LogSchema.rowGroupCols),
+      plan.toString)
+  }
+}
