@@ -35,6 +35,10 @@ test-etl: ## Run only the export-path specs (parse, export, write layout, local 
 test-stream: ## Run only the streaming specs (driver, streamed gates q152/q169/q256, Diag profile)
 	sbt -batch "testOnly graft.streaming.StreamingSpec graft.ops.Wave14Spec graft.ops.Wave16Spec graft.ops.Wave40Spec graft.tools.DiagSpec"
 
+.PHONY: test-pin
+test-pin: ## Run only the specs over mode-pinned operators (Pin, standing views, dedup, pipeline, graph)
+	sbt -batch "testOnly graft.ops.PinSpec graft.QuerySessionSpec graft.ops.OpsSpec graft.ops.ScaleOpsSpec graft.ops.Wave3Spec graft.ops.Wave11Spec graft.ops.PipelineSpec graft.ops.Wave6Spec graft.ops.Wave17Spec"
+
 .PHONY: verify
 verify: ## Dump every declared query at sf0.01 for the DuckDB oracle compare
 	sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"

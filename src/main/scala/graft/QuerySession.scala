@@ -151,26 +151,22 @@ object QuerySession {
     * the two parquet footer reads. */
   def registerPipelineViews(spark: SparkSession, docs: DataFrame,
                             emb: DataFrame): Unit = {
-    import graft.ops.Dedup
+    import graft.ops.{Dedup, Pin}
     Dedup.shingles(docs, 3).withColumnRenamed("g", "shingle")
       .createOrReplaceTempView("doc_shingles")
-    // pin = "none" throughout: a standing view must not plant a cache
-    // nothing can release (and registration must stay job-free, ruling
-    // out the eager checkpoint mode) — an interactive query pays one
-    // extra shingle pass instead of leaking corpus-scale storage memory
-    Dedup.jaccardPairs(docs, 3, 0.5, maxDocFreq = 50L, pin = "none")
+    Dedup.jaccardPairs(docs, 3, 0.5, maxDocFreq = 50L, pin = Pin.Off)
       .createOrReplaceTempView("jaccard_pairs")
-    Dedup.minhashLshPairs(docs, pin = "none")
+    Dedup.minhashLshPairs(docs, pin = Pin.Off)
       .createOrReplaceTempView("minhash_pairs")
-    graft.ops.Similarity.nearDupPairs(emb, 0.45, pin = "none")
+    graft.ops.Similarity.nearDupPairs(emb, 0.45, pin = Pin.Off)
       .createOrReplaceTempView("near_dup_pairs")
     graft.ops.TextAnalysis.filterVerdicts(docs)
       .orderBy(org.apache.spark.sql.functions.col("doc_id"))
       .createOrReplaceTempView("filter_verdicts")
-    // explicit heavyAt (routing only — results don't depend on it) +
-    // lazy pin keep this view's construction job-free like the rest
+    // explicit heavyAt (routing only — results don't depend on it)
+    // keeps this view's construction job-free like the rest
     graft.ops.TextAnalysis.crossDocRepetition(docs,
-        heavyAt = 1000L, pin = "none")
+        heavyAt = 1000L, pin = Pin.Off)
       .createOrReplaceTempView("crossdoc_repetition")
     // round-7 surface: chunk inventory, scrubbed-text fingerprints,
     // per-source quota picks, weighted epoch draw
@@ -204,9 +200,9 @@ object QuerySession {
       .createOrReplaceTempView("source_divergence")
     Dedup.substringDupStats(docs, 20)
       .createOrReplaceTempView("substring_dup_spans")
-    Dedup.leakageSafeSplit(docs, pin = "none")
+    Dedup.leakageSafeSplit(docs, pin = Pin.Off)
       .createOrReplaceTempView("leakage_split")
-    Dedup.sourceOverlap(docs, pin = "none")
+    Dedup.sourceOverlap(docs, pin = Pin.Off)
       .createOrReplaceTempView("source_overlap")
     Dedup.sourceDiversity(docs)
       .createOrReplaceTempView("source_diversity")
@@ -255,12 +251,10 @@ object QuerySession {
         "doc_id", "__toks", dims = 64)
         .createOrReplaceTempView("hashed_features")
       // round-8 wave 10: collocations, horizon dedup, KMV ledger —
-      // lazy plans. pin = "none" like every other standing dedup view
-      // (the file's rule above: a standing view must not plant a cache
-      // no caller can release).
+      // lazy plans.
       graft.ops.Collocations.pmiPairs(docs, "text", "doc_id", 48, 5L)
         .createOrReplaceTempView("pmi_collocations")
-      graft.ops.Dedup.horizonNearDupPairs(docs, horizonDays = 7L, pin = "none")
+      graft.ops.Dedup.horizonNearDupPairs(docs, horizonDays = 7L, pin = Pin.Off)
         .createOrReplaceTempView("horizon_dedup_pairs")
       val kmv = graft.ops.KmvSketch.sketch(
         docs.select(col("source"),
@@ -278,7 +272,7 @@ object QuerySession {
         .createOrReplaceTempView("kmv_source_overlap")
       graft.ops.Labeling.annotatorKappa(docs)
         .createOrReplaceTempView("annotator_kappa")
-      graft.ops.Dedup.containmentPairs(docs, threshold = 0.6, pin = "none")
+      graft.ops.Dedup.containmentPairs(docs, threshold = 0.6, pin = Pin.Off)
         .createOrReplaceTempView("containment_pairs")
     }
   }

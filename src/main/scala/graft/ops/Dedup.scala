@@ -100,7 +100,7 @@ object Dedup {
     * size used in the Jaccard denominator — scores are then Jaccard over
     * the *informative* shingle sets. */
   def jaccardPairs(docs: DataFrame, n: Int, threshold: Double,
-                   maxDocFreq: Long = 0L, pin: String = "cache"): DataFrame = {
+                   maxDocFreq: Long = 0L, pin: Pin = Pin.Cache): DataFrame = {
     val sh = cappedShingles(docs, n, maxDocFreq, pin)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val common =
@@ -155,35 +155,17 @@ object Dedup {
       .agg(count(lit(1)).as("c"))
 
   /** Shingle set with the stop-shingle cap applied (document frequency
-    * ≤ maxDocFreq; 0 = uncapped), cached — the shared front end of every
-    * shingle-based dedup operator. One materialization of the raw shingle
+    * ≤ maxDocFreq; 0 = uncapped), pinned by `pin` — the shared front
+    * end of every shingle-based dedup operator. One materialization of the raw shingle
     * set serves the doc-freq aggregation AND the stop-shingle filter. The
     * broadcast side is the STOP set (df > cap) via anti-join, never the
     * rare set: rare shingles are O(distinct shingles) ≈ O(corpus) —
     * broadcasting them dies at scale — while the stop set is tiny by
     * construction (only shingles heavier than the cap). */
   private def cappedShingles(docs: DataFrame, n: Int, maxDocFreq: Long,
-                             pin: String = "cache"): DataFrame = {
-    // Three materialization modes for the twice-referenced shingle set:
-    //  - "cache": the bench-measured q25/q26 paths — released by the
-    //    harness's clearCache between queries; NOT for long-lived
-    //    sessions (CacheManager entries are never auto-reclaimed and
-    //    cached subtrees substitute into unrelated plans).
-    //  - "checkpoint": eager localCheckpoint for operators embedded in
-    //    long-lived pipelines (q43) — blocks are reclaimed by the
-    //    ContextCleaner once the frame is unreferenced.
-    //  - "none": no pinning at all — the set recomputes per consumer.
-    //    The mode for LAZY standing views (QuerySession): registration
-    //    must stay job-free (rules out checkpoint) and must not plant a
-    //    cache no caller can ever release (rules out cache); an
-    //    interactive query pays one extra shingle pass instead.
-    def pinF(df: DataFrame): DataFrame = pin match {
-      case "checkpoint" => df.localCheckpoint()
-      case "cache" => df.cache()
-      case _ => df
-    }
+                             pin: Pin = Pin.Cache): DataFrame = {
     if (maxDocFreq > 0L) {
-      val all = pinF(shingles(docs, n))
+      val all = pin(shingles(docs, n))
       val stop = all.groupBy(col("g")).agg(count(lit(1)).as("df"))
         .filter(col("df") > maxDocFreq).select(col("g"))
       val capped = all.join(broadcast(stop), Seq("g"), "left_anti")
@@ -192,15 +174,15 @@ object Dedup {
       // cache (~-0.6 s each on q25/q26), but an EAGER localCheckpoint of
       // it costs more than the broadcast-anti re-reads it saves
       // (~+0.45 s on q43) — checkpoint callers skip it
-      if (pin == "cache") capped.cache() else capped
-    } else pinF(shingles(docs, n))
+      if (pin == Pin.Cache) Pin.Cache(capped) else capped
+    } else pin(shingles(docs, n))
   }
 
   /** Public capped shingle set over an arbitrary document population
     * (checkpoint pinning — safe inside long-lived sessions), for
     * pipeline composition (q57's decontamination stage). */
   def cappedShingleSet(docs: DataFrame, n: Int, maxDocFreq: Long): DataFrame =
-    cappedShingles(docs, n, maxDocFreq, pin = "checkpoint")
+    cappedShingles(docs, n, maxDocFreq, pin = Pin.Checkpoint)
 
   /** MinHash signature component j: lexicographic min over the doc's
     * shingles of an 8-hex-char (32-bit) slice of a shingle digest.
@@ -237,7 +219,7 @@ object Dedup {
     * IDENTICAL documents legitimately shares every signature and no
     * banding scheme can keep its candidate count sub-quadratic. */
   def minhashLshPairs(docs: DataFrame, maxDocFreq: Long = 50L,
-                      pin: String = "cache"): DataFrame = {
+                      pin: Pin = Pin.Cache): DataFrame = {
     val sh = cappedShingles(docs, 3, maxDocFreq, pin)
     val k = 8
     val sig = withDigests(sh).groupBy(col("doc_id")).agg(
@@ -297,7 +279,7 @@ object Dedup {
     * idiom — a real corpus has an ingest date). */
   def horizonNearDupPairs(docs: DataFrame, horizonDays: Long,
                           maxDocFreq: Long = 50L,
-                          pin: String = "cache"): DataFrame = {
+                          pin: Pin = Pin.Cache): DataFrame = {
     val withDay = docs.withColumn("__day", pmod(col("doc_id"), lit(120L)))
     val sh = cappedShingles(withDay.select(col("doc_id"), col("text")),
       3, maxDocFreq, pin)
@@ -354,7 +336,7 @@ object Dedup {
     * doubles. */
   def containmentPairs(docs: DataFrame, threshold: Double,
                        minShingles: Int = 5, maxDocFreq: Long = 50L,
-                       pin: String = "cache"): DataFrame = {
+                       pin: Pin = Pin.Cache): DataFrame = {
     // coGroupedPairCounts' precondition is a CAPPED shingle set (its
     // per-shingle aggregation state is cap-bounded); uncapped input
     // (maxDocFreq = 0, the jaccardPairs self-join fallback) would grow
@@ -515,7 +497,7 @@ object Dedup {
     val docs = Tables.documents(s, dir)
     // The shared split expression (Splits.of, also q32), applied as a
     // narrow column — membership is md5(doc_id), so no split table join
-    val sh = cappedShingles(docs, 3, 50L, pin = "checkpoint")
+    val sh = cappedShingles(docs, 3, 50L, pin = Pin.Checkpoint)
       .withColumn("split", Splits.of(col("doc_id")))
     // join-free overlap: ONE groupBy(g) collects each shingle's test-side
     // and train-side posting lists (each ≤ the stop cap, so the agg state
@@ -603,8 +585,8 @@ object Dedup {
   }
 
   /** The reusable core over any (doc_id, text, n_chars) frame. */
-  def canonicalDocs(docs: DataFrame, pin: String = "cache"): DataFrame = {
-    val pairs = minhashLshPairs(docs, pin = pin).select(col("d1"), col("d2"))
+  def canonicalDocs(docs: DataFrame): DataFrame = {
+    val pairs = minhashLshPairs(docs).select(col("d1"), col("d2"))
       .unionByName(exactDupStarEdges(docs))
     val nodes = docs.select(col("doc_id").as("id"))
     val members = connectedComponents(nodes, pairs)
@@ -638,7 +620,7 @@ object Dedup {
     leakageSafeSplit(Tables.documents(s, dir))
 
   /** The reusable core over any (doc_id, text) frame. */
-  def leakageSafeSplit(docs: DataFrame, pin: String = "cache"): DataFrame = {
+  def leakageSafeSplit(docs: DataFrame, pin: Pin = Pin.Cache): DataFrame = {
     // symmetrize by IN-ROW explode, not a self-union: a union would
     // reference the pair plan twice and exchange reuse does not cross
     // union branches, so the whole banded minhash dataflow would
@@ -693,7 +675,7 @@ object Dedup {
     sourceOverlap(Tables.documents(s, dir))
 
   /** The reusable core over any (doc_id, source, text) frame. */
-  def sourceOverlap(docs: DataFrame, pin: String = "cache"): DataFrame = {
+  def sourceOverlap(docs: DataFrame, pin: Pin = Pin.Cache): DataFrame = {
     val pairs = minhashLshPairs(docs, pin = pin).select(col("d1"), col("d2"))
     val src = docs.select(col("doc_id"), col("source"))
     pairs

@@ -17,9 +17,9 @@ import graft.Tables
   * per round, never materializing anything driver-side beyond two
   * scalar aggregates (N and the dangling mass, both 1-row). The edge
   * table and degree join are loop-invariant and computed once.
-  * Long-running iteration counts truncate lineage every `pinEvery`
-  * rounds (the [[Dedup.connectedComponents]] localCheckpoint rule);
-  * the declared 3-round query never hits it.
+  * Long-running iteration counts truncate lineage every
+  * `CheckpointEvery` (8) rounds (the [[Dedup.connectedComponents]]
+  * localCheckpoint rule); the declared 3-round queries never hit it.
   *
   * Float-determinism contract (the q34 idiom, applied per round):
   * per-edge shares are double-divided then ROUNDED to 12 digits and
@@ -32,12 +32,15 @@ import graft.Tables
   */
 object Graph {
 
+  /** Rounds between lineage-truncating localCheckpoints. */
+  private val CheckpointEvery = 8
+
   /** PageRank over (id) nodes and (src, dst) edges. Nodes with no
     * out-edges are dangling: their mass redistributes uniformly each
     * round (the standard correction — dropping it leaks mass and the
     * ranks no longer sum to 1). */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
-               damping: Double = 0.85, pinEvery: Int = 8): DataFrame = {
+               damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     val n = nodes.count()
     require(n > 0, "empty node set")
@@ -62,7 +65,7 @@ object Graph {
           round(lit((1.0 - damping) / n) + lit(damping) *
             (coalesce(col("sc").cast("double"), lit(0.0)) +
              col("dm").cast("double") / n), 12).as("rank"))
-      if (pinEvery > 0 && i % pinEvery == 0) ranks = ranks.localCheckpoint()
+      if (i % CheckpointEvery == 0) ranks = ranks.localCheckpoint()
     }
     ranks
   }
@@ -234,10 +237,10 @@ object Graph {
     * label side's id) and TWO hash aggregates — (node, label) counts,
     * then the per-node argmax via `max(struct(cnt, -label))` (a 2-long
     * struct max, no window, no per-node sort). O(E) rows per round,
-    * nothing driver-side. Lineage pins every `pinEvery` rounds (the
-    * [[pageRank]] rule). */
-  def labelPropagation(nodes: DataFrame, edges: DataFrame, iters: Int,
-                       pinEvery: Int = 8): DataFrame = {
+    * nothing driver-side. Lineage truncates every `CheckpointEvery`
+    * rounds (the [[pageRank]] rule). */
+  def labelPropagation(nodes: DataFrame, edges: DataFrame,
+                       iters: Int): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     val und = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
@@ -253,7 +256,7 @@ object Graph {
         .select(col("id"), (-col("b.nl")).as("next"))
       labels = labels.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("next"), col("label")).as("label"))
-      if (pinEvery > 0 && i % pinEvery == 0) labels = labels.localCheckpoint()
+      if (i % CheckpointEvery == 0) labels = labels.localCheckpoint()
     }
     labels
   }

@@ -55,8 +55,6 @@ object NearDupIndex {
   private val K = 8      // signature components
   private val BandsN = 4 // bands of 2 components
 
-  private def pin(df: DataFrame): DataFrame = df.localCheckpoint()
-
   private def docBucket(id: Column, n: Int): Column =
     pmod(id, lit(n.toLong)).cast("int")
 
@@ -100,7 +98,7 @@ object NearDupIndex {
     val stop = bdf
       .filter(col("dfb") + coalesce(col("dfc"), lit(0L)) > maxDocFreq)
       .select(col("g"))
-    pin(raw.join(broadcast(stop), Seq("g"), "left_anti")
+    Pin.Checkpoint(raw.join(broadcast(stop), Seq("g"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("g"))).as("gs")))
   }
@@ -131,13 +129,13 @@ object NearDupIndex {
     // shingles widens internally — wrapping its input in Par.widen again
     // would re-shuffle (widen sees the ORIGINAL file count, not the new
     // partitioning, so widen∘widen is two full repartitions)
-    val raw = pin(Dedup.shingles(docs, 3))
+    val raw = Pin.Checkpoint(Dedup.shingles(docs, 3))
     // dfG pinned: it feeds BOTH the _sh_df write and the stop list —
     // unpinned it would aggregate the shingle frame twice
-    val dfG = pin(raw.groupBy(col("g")).agg(count(lit(1)).as("df"))
+    val dfG = Pin.Checkpoint(raw.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets)))
     val stop = dfG.filter(col("df") > maxDocFreq).select(col("g"))
-    val capped = pin(raw.join(broadcast(stop), Seq("g"), "left_anti"))
+    val capped = Pin.Checkpoint(raw.join(broadcast(stop), Seq("g"), "left_anti"))
     // the four layout artifacts all derive from the pins — concurrent
     // writes (Par.inParallel contract: wall here is serialized job
     // planning + commit latency, not executor CPU)
@@ -162,9 +160,9 @@ object NearDupIndex {
                    threshold: Double = 0.5): DataFrame = {
     val meta = s.read.parquet(dst + "_meta").head()
     val (nBuckets, maxDocFreq) = (meta.getInt(0), meta.getLong(1))
-    val raw = pin(Dedup.shingles(newDocs, 3)) // shingles widens internally
+    val raw = Pin.Checkpoint(Dedup.shingles(newDocs, 3)) // shingles widens internally
     val newSets = cappedBatchSets(s, dst, raw, nBuckets, maxDocFreq)
-    val newBands = pin(bandRows(signatures(
+    val newBands = Pin.Checkpoint(bandRows(signatures(
         newSets.select(col("doc_id"), explode(col("gs")).as("g"))))
       .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)))
     val bBuckets = newBands.select(col("bucket")).distinct()
@@ -175,7 +173,7 @@ object NearDupIndex {
         .filter(col("bucket").isin(bBuckets.map(Int.box): _*))
     // tombstoned docs are masked HERE — before the dBuckets collection,
     // so a deleted doc costs neither an array fetch nor a verification
-    val candCross = pin(corpusBands.as("x")
+    val candCross = Pin.Checkpoint(corpusBands.as("x")
       .join(newBands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.doc_id").as("cid"), col("y.doc_id").as("nid"))
@@ -287,7 +285,7 @@ object NearDupIndex {
   def purgeTombstones(s: SparkSession, dst: String): (Long, Array[Int]) = {
     recoverBakDirs(s, dst)
     recoverBakDirs(s, dst + "_docs")
-    val dead = pin(tombstones(s, dst))
+    val dead = Pin.Checkpoint(tombstones(s, dst))
     if (dead.isEmpty) return (0L, Array.empty)
     val nDead = dead.count()
     val meta = s.read.parquet(dst + "_meta").head()
@@ -297,7 +295,7 @@ object NearDupIndex {
     // bounded ≤ nBuckets driver scalars however many docs die)
     val dBuckets = dead.select(docBucket(col("doc_id"), nBuckets).as("db"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val deadDocs = pin(s.read.parquet(dst + "_docs")
+    val deadDocs = Pin.Checkpoint(s.read.parquet(dst + "_docs")
       .filter(col("dbucket").isin(dBuckets.map(Int.box): _*))
       .join(dead, Seq("doc_id"), "left_semi"))
 
@@ -405,15 +403,15 @@ object NearDupIndex {
     val s = newDocs.sparkSession
     val meta = s.read.parquet(dst + "_meta").head()
     val (nBuckets, maxDocFreq) = (meta.getInt(0), meta.getLong(1))
-    val raw = pin(Dedup.shingles(newDocs, 3)) // shingles widens internally
+    val raw = Pin.Checkpoint(Dedup.shingles(newDocs, 3)) // shingles widens internally
     // cap the batch BEFORE its df segment lands — reading the sidecar
     // after the append would count the batch twice. Pin the per-shingle
     // df frame: it feeds the cap AND the crossing count below.
-    val bdf = pin(batchCorpusDf(s, dst, raw, nBuckets))
+    val bdf = Pin.Checkpoint(batchCorpusDf(s, dst, raw, nBuckets))
     // newSets pinned: it feeds the _docs write, the band derivation and
     // the appended-count — previously each re-aggregated from the pins
-    val newSets = pin(cappedSetsFrom(raw, bdf, maxDocFreq))
-    val bands = pin(bandRows(signatures(
+    val newSets = Pin.Checkpoint(cappedSetsFrom(raw, bdf, maxDocFreq))
+    val bands = Pin.Checkpoint(bandRows(signatures(
         newSets.select(col("doc_id"), explode(col("gs")).as("g"))))
       .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)))
     // three independent appends from the pins — concurrent
@@ -471,7 +469,7 @@ object NearDupIndex {
     recoverBakDirs(s, dst + "_docs")
     val meta = s.read.parquet(dst + "_meta").head()
     val (nBuckets, maxDocFreq) = (meta.getInt(0), meta.getLong(1))
-    val over = pin(s.read.parquet(dst + "_sh_df")
+    val over = Pin.Checkpoint(s.read.parquet(dst + "_sh_df")
       .groupBy(col("g")).agg(sum(col("df")).as("dft"))
       .filter(col("dft") > maxDocFreq).select(col("g")))
     val docsStore = s.read.parquet(dst + "_docs")
@@ -479,13 +477,13 @@ object NearDupIndex {
       .select(col("doc_id"), explode(col("gs")).as("g"))
       .join(broadcast(over), Seq("g"), "left_semi")
       .select(col("doc_id")).distinct()
-    val affected = pin(docsStore.join(affectedIds, Seq("doc_id"), "left_semi"))
+    val affected = Pin.Checkpoint(docsStore.join(affectedIds, Seq("doc_id"), "left_semi"))
     if (affected.isEmpty) return (0L, Array.empty)
     val nAffected = affected.count()
     // re-capped arrays; a doc whose EVERY shingle is over-cap vanishes
     // from the groupBy — exactly a fresh write's behavior (no array
     // row, no band rows)
-    val recapped = pin(affected
+    val recapped = Pin.Checkpoint(affected
       .select(col("doc_id"), explode(col("gs")).as("g"))
       .join(broadcast(over), Seq("g"), "left_anti")
       .groupBy(col("doc_id"))
@@ -493,7 +491,7 @@ object NearDupIndex {
     val oldBands = bandRows(signatures(
         affected.select(col("doc_id"), explode(col("gs")).as("g"))))
       .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets))
-    val newBands = pin(bandRows(signatures(
+    val newBands = Pin.Checkpoint(bandRows(signatures(
         recapped.select(col("doc_id"), explode(col("gs")).as("g"))))
       .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)))
     // touched dirs = old rows' buckets (rows to drop) ∪ new rows'
@@ -611,7 +609,7 @@ object NearDupIndex {
     val s = newDocs.sparkSession
     // narrow (id, status) projection, pinned: consumed by up to three
     // downstream actions, and the full-outer diff should run once
-    val d = pin(SnapshotDiff.diff(oldDocs, newDocs)
+    val d = Pin.Checkpoint(SnapshotDiff.diff(oldDocs, newDocs)
       .filter(col("status") =!= "unchanged")
       .select(col("doc_id"), col("status")))
     val changed = d.filter(col("status") === "changed").select("doc_id")

@@ -38,14 +38,6 @@ import graft.Tables
   */
 object Pipeline {
 
-  // Stage keepers feed MANY downstream consumers (the next stage, the
-  // verdict assembly, and the actions inside CC / the budget prefix).
-  // Without pinning, every consumer re-evaluates the whole composed
-  // lineage — measured 45 s at sf0.1 vs ~4 s pinned. Eager
-  // localCheckpoint (not cache) so a long-lived session reclaims the
-  // blocks via the ContextCleaner, per the engine-wide rule.
-  private def pin(df: DataFrame): DataFrame = df.localCheckpoint()
-
   /** Stage 1: quality verdict over the train docs (pure per-row rule). */
   private[ops] def stageQuality(train: DataFrame): DataFrame =
     TextAnalysis.filterVerdicts(train).select(col("doc_id"), col("reason"))
@@ -78,10 +70,8 @@ object Pipeline {
     * wash-to-regression at sf0.1 (6.4→7.2 s): materializing the
     * shared raw set costs what the saved tokenize pass gains.) */
   private[ops] def stageNearDrop(keep2: DataFrame): DataFrame = {
-    // pin = "checkpoint": this function's own rule — caches would
-    // outlive the query in a long-lived session
     val pairs = Dedup.jaccardPairs(keep2, 3, 0.5, maxDocFreq = 50L,
-      pin = "checkpoint")
+      pin = Pin.Checkpoint)
       .select(col("d1"), col("d2"))
     val cc = Dedup.connectedComponents(keep2.select(col("doc_id").as("id")), pairs)
     cc.filter(col("id") =!= col("component"))
@@ -139,12 +129,16 @@ object Pipeline {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val train = docs.filter(Splits.of(col("doc_id")) === "train")
 
-    val fv = pin(stageQuality(train))
+    // Stage keepers feed MANY downstream consumers (the next stage, the
+    // verdict assembly, and the actions inside CC / the budget prefix).
+    // Without pinning, every consumer re-evaluates the whole composed
+    // lineage — measured 45 s at sf0.1 vs ~4 s pinned.
+    val fv = Pin.Checkpoint(stageQuality(train))
     val keep1 = keep1Of(train, fv)
     // ONE pin of the exact-split frame: dropExact/keep2 are cheap
     // filters over the cached rows — the old two pins each re-evaluated
     // the whole keyed-join lineage as its own job (r15)
-    val wc = pin(stageExactSplit(keep1)
+    val wc = Pin.Checkpoint(stageExactSplit(keep1)
       .select(col("doc_id"), col("can"), col("text")))
     val dropExact = wc.filter(col("doc_id") =!= col("can"))
       .select(col("doc_id"))
@@ -153,8 +147,8 @@ object Pipeline {
     val dropNear = stageNearDrop(keep2)
     val keep3 = keep2.join(dropNear, Seq("doc_id"), "left_anti")
     val testDocs = docs.filter(Splits.of(col("doc_id")) === "test")
-    val contaminatedPinned = pin(stageContaminated(keep3, testDocs, minShared))
-    val keep4 = pin(keep3.join(contaminatedPinned, Seq("doc_id"), "left_anti"))
+    val contaminatedPinned = Pin.Checkpoint(stageContaminated(keep3, testDocs, minShared))
+    val keep4 = Pin.Checkpoint(keep3.join(contaminatedPinned, Seq("doc_id"), "left_anti"))
     val tb = stageBudget(keep4, budget)
     assembleVerdicts(train, fv, dropExact, dropNear, contaminatedPinned, tb)
   }

@@ -376,7 +376,7 @@ object Retrieval {
     // so the banded minhash dataflow would execute twice (measured
     // 4.3 s vs 2.5 s at sf0.1)
     val excl = nearDupPairs
-      .getOrElse(Dedup.minhashLshPairs(docs, pin = "checkpoint"))
+      .getOrElse(Dedup.minhashLshPairs(docs, pin = Pin.Checkpoint))
       .select(explode(array(
         struct(col("d1").as("query_id"), col("d2").as("doc_id")),
         struct(col("d2").as("query_id"), col("d1").as("doc_id")))).as("e"))

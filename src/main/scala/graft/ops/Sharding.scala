@@ -131,7 +131,7 @@ object Sharding {
     // near-dup exclusion inside the negative miner — without the pin
     // the whole banded-LSH dataflow ran twice (measured ~3 s of q98's
     // 16 s at sf0.1). Pair-list scale, so the checkpoint is bounded.
-    val pairs = Dedup.minhashLshPairs(docs, pin = "checkpoint").localCheckpoint()
+    val pairs = Dedup.minhashLshPairs(docs, pin = Pin.Checkpoint).localCheckpoint()
     val sym = pairs
       .select(explode(array(
         struct(col("d1").as("a"), col("d2").as("p")),

@@ -785,30 +785,17 @@ object Similarity {
     * tasks while every pair is still generated exactly once. Left-side
     * replication costs tables×chunks×|corpus| shuffled rows — linear,
     * the price of splitting a quadratic hotspot. The signed corpus is
-    * cached: both join sides consume it, and the signatures
+    * pinned by `pin`: both join sides consume it, and the signatures
     * (tables×planes HOF passes per row) are the second-largest cost. */
   def nearDupPairs(emb: DataFrame, threshold: Double, tables: Int = 4,
                    planes: Int = 4, chunks: Int = 0,
-                   pin: String = "cache"): DataFrame = {
+                   pin: Pin = Pin.Cache): DataFrame = {
     val c = if (chunks > 0) chunks
             else math.max(emb.sparkSession.sparkContext.defaultParallelism, 8)
-    // pin modes (the Dedup.cappedShingles contract): "cache" for
-    // harness-released bench/operator calls (the output is unbounded,
-    // so collect-and-release can't apply — callers in long-lived
-    // sessions should prefer "checkpoint", whose blocks the
-    // ContextCleaner reclaims once unreferenced, at the cost of eager
-    // evaluation); "none" for standing views (registration must stay
-    // job-free and must not plant an unreleasable cache — both join
-    // sides then re-evaluate the signatures)
-    val sigs0 = widen(emb)
+    val sigs = pin(widen(emb)
       .withColumn("sigs", array(
         (0 until tables).map(t => lshSignature(col("embedding"), 64, planes, t)): _*))
-      .withColumn("ch", pmod(col("vec_id"), lit(c.toLong)))
-    val sigs = pin match {
-      case "checkpoint" => sigs0.localCheckpoint()
-      case "cache" => sigs0.cache()
-      case _ => sigs0
-    }
+      .withColumn("ch", pmod(col("vec_id"), lit(c.toLong))))
     val y = sigs.select(col("vec_id"), col("embedding"), col("sigs"), col("ch"),
       posexplode(col("sigs")).as(Seq("t", "sig")))
     val x = sigs.select(col("vec_id"), col("embedding"), col("sigs"),

@@ -59,27 +59,18 @@ object SkewJoin {
     * then ≤ 10⁶ keys whatever the corpus — a fixed threshold silently
     * stops being broadcastable when the corpus grows (at N = 10¹³,
     * heavyAt = 1000 admits up to 10¹⁰ heavy keys). The count behind the
-    * derivation is one cheap action over the already-checkpointed
+    * derivation is one cheap action over the already-pinned
     * input.
     *
     * `weight` sums that column instead of counting rows (the unigram-LM
     * case, where rows are (doc, token, k) partials).
     *
     * The input feeds the aggregate and both join branches, so it is
-    * eagerly localCheckpoint'ed: recomputing a tokenize+explode subtree
-    * three times, or parking cached subtrees in the CacheManager of a
-    * long-lived session, are both worse than one bounded
-    * materialization (blocks are reclaimed by the ContextCleaner when
-    * the frame goes unreferenced). Pass `pin = "none"` for standing
-    * views — combined with an explicit `heavyAt` (the routing cut does
-    * NOT affect results, only which branch a key takes), construction
-    * then runs no job at all AND plants no cache nothing can release;
-    * the input just re-evaluates per branch. `pin = "cache"` remains
-    * for harness-released bench paths. A LAZY `localCheckpoint(false)` cannot
-    * serve here: `Dataset.checkpoint` calls `queryExecution.toRdd` at
-    * construction regardless of eagerness, and under AQE that
-    * materializes every shuffle stage in the plan — jobs fire anyway
-    * (measured: 2 jobs from the widen-repartition of the shingle set).
+    * pinned: recomputing a tokenize+explode subtree three times is
+    * worse than one bounded materialization. A standing view passes
+    * `Pin.Off` with an explicit `heavyAt` (the routing cut does NOT
+    * affect results, only which branch a key takes) — the derived cut
+    * counts the input, which is a job.
     *
     * NULL keys are routed with null-safe equality (`<=>`), so a NULL
     * key forms its own group with its own total — the same semantics as
@@ -88,17 +79,8 @@ object SkewJoin {
     * drop those rows. */
   def withKeyTotal(rows: DataFrame, key: String, totalName: String,
                    heavyAt: Long = 0L, weight: Option[String] = None,
-                   pin: String = "checkpoint"): DataFrame = {
-    // "checkpoint" (default): eager localCheckpoint — ContextCleaner
-    // reclaims the blocks. "cache": lazy, for harness-released bench
-    // paths only. "none": no pinning — the input re-evaluates for the
-    // totals and the join-back; the mode for standing views, which must
-    // neither run jobs at registration nor plant unreleasable caches.
-    val pinned = pin match {
-      case "checkpoint" => rows.localCheckpoint()
-      case "cache" => rows.cache()
-      case _ => rows
-    }
+                   pin: Pin = Pin.Checkpoint): DataFrame = {
+    val pinned = pin(rows)
     val cut =
       if (heavyAt > 0L) heavyAt
       else math.max(1000L, pinned.count() / 1000000L)

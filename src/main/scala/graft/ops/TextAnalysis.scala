@@ -586,9 +586,9 @@ object TextAnalysis {
     * soak entry point. `heavyAt`/`pin` pass through to
     * [[SkewJoin.withKeyTotal]]: results are invariant to both (routing
     * and materialization knobs only), so view registration passes an
-    * explicit cut and a lazy pin to stay job-free at construction. */
+    * explicit cut and `Pin.Off` to stay job-free at construction. */
   def crossDocRepetition(docs: DataFrame, flagAt: Double = 0.5,
-                         heavyAt: Long = 0L, pin: String = "checkpoint"): DataFrame = {
+                         heavyAt: Long = 0L, pin: Pin = Pin.Checkpoint): DataFrame = {
     val sh = Dedup.shingles(docs, 3)
     SkewJoin.withKeyTotal(sh, "g", "df", heavyAt = heavyAt, pin = pin)
       .groupBy(col("doc_id"))

@@ -63,6 +63,18 @@ class QuerySessionSpec extends SparkSpec {
     assert(viaSql == viaWindow)
   }
 
+  test("standing pipeline views plant no CacheManager entry") {
+    // the zero-jobs assertion below cannot see this: a view that drops
+    // Pin.Off falls back to the lazy Pin.Cache default, which runs no
+    // job but leaves an entry nothing in a session ever releases
+    val dir = "/root/testdata/sf0.001"
+    spark.catalog.clearCache()
+    QuerySession.registerPipelineViews(spark,
+      Tables.documents(spark, dir), Tables.embeddings(spark, dir))
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+  }
+
   test("dedup/similarity pipelines reachable purely via spark.sql") {
     val dir = "/root/testdata/sf0.001"
     QuerySession.openTestTables(spark, dir)

@@ -54,7 +54,7 @@ class Wave11Spec extends SparkSpec {
     val quote = (10 until 22).map(i => s"tok$i").mkString(" ") // 10 shingles, all in host
     val filler = (0 until 60).map(i => s"pad${i % 37} x$i").mkString(" ")
     val docs = Seq((1L, host), (2L, quote), (3L, filler)).toDF("doc_id", "text")
-    val out = Dedup.containmentPairs(docs, threshold = 0.6, pin = "none")
+    val out = Dedup.containmentPairs(docs, threshold = 0.6, pin = Pin.Off)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(4)).toMap
     assert(out.get((2L, 1L)).contains(1.0), out.toString) // quote ⊂ host
     assert(!out.contains((1L, 2L)), out.toString) // host NOT ⊂ quote
