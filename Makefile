@@ -39,6 +39,10 @@ test-stream: ## Run only the streaming specs (driver, streamed gates q152/q169/q
 test-pin: ## Run only the specs over mode-pinned operators (Pin, standing views, dedup, pipeline, graph)
 	sbt -batch "testOnly graft.ops.PinSpec graft.QuerySessionSpec graft.ops.OpsSpec graft.ops.ScaleOpsSpec graft.ops.Wave3Spec graft.ops.Wave11Spec graft.ops.PipelineSpec graft.ops.Wave6Spec graft.ops.Wave17Spec"
 
+.PHONY: test-store
+test-store: ## Run only the specs over the bucketed index stores (near-dup, postings, bucket swap, crash tests)
+	sbt -batch "testOnly graft.ops.NearDupIndexSpec graft.ops.RetrievalSpec graft.io.LayoutSpec graft.queries.PlanSpec graft.ops.Wave16Spec graft.ops.Wave24Spec graft.ops.Wave40Spec graft.etl.CompactionSwapSpec"
+
 .PHONY: verify
 verify: ## Dump every declared query at sf0.01 for the DuckDB oracle compare
 	sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"

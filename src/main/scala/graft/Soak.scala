@@ -558,7 +558,7 @@ object Soak {
     // layouts run thousands of buckets, where touched ≪ total.)
     val deadIds = docs.filter(pmod(col("doc_id"), lit(100L)) === 2L)
       .select(col("doc_id"))
-    val mhTombSec = timedSec(graft.ops.NearDupIndex.tombstone(deadIds, mhDst))
+    val mhTombSec = timedSec(graft.ops.BucketStore.tombstone(deadIds, mhDst))
     var purgedN = 0L; var purgedBuckets = 0
     val mhPurgeSec = timedSec {
       val (n, bs) = graft.ops.NearDupIndex.purgeTombstones(spark, mhDst)

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Layout
 import graft.Tables
+import BucketStore.docBucket
 
 /** VERIFIED-exact substring dedup at Lee-et-al scale minimum match
   * length (ExactSubstr, "Deduplicating Training Data Makes Language
@@ -114,11 +115,6 @@ object ExactSubstring {
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("h"))
 
-  private def hashBucketCol(h: Column, nBuckets: Int): Column =
-    pmod(h, lit(nBuckets.toLong)).cast("int")
-  private def docBucketCol(id: Column, nBuckets: Int): Column =
-    pmod(id, lit(nBuckets.toLong)).cast("int")
-
   /** Write the standing layout: `dst` = window-hash postings
     * (doc_id, pos, h) partitioned by hash bucket (probes read their
     * buckets and join on h, so files are not sorted); `dst_docs` = the
@@ -133,11 +129,11 @@ object ExactSubstring {
     import s.implicits._
     val t = docs.select(col("doc_id"), col("text")).localCheckpoint()
     val hashed = windowHashes(t, L)
-      .withColumn("bucket", hashBucketCol(col("h"), nBuckets))
+      .withColumn("bucket", docBucket(col("h"), nBuckets))
       .localCheckpoint()
     Par.inParallel(
       () => Layout.write(hashed, dst, SaveMode.Overwrite, Seq("bucket"), Nil),
-      () => Layout.write(t.withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+      () => Layout.write(t.withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_docs", SaveMode.Overwrite, Seq("dbucket"), Nil),
       () => Seq((nBuckets, L)).toDF("n_buckets", "win_len").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(dst + "_meta"))
@@ -155,11 +151,11 @@ object ExactSubstring {
     val (nBuckets, l) = (meta.getInt(0), meta.getInt(1))
     val t = newDocs.select(col("doc_id"), col("text")).localCheckpoint()
     val hashed = windowHashes(t, l)
-      .withColumn("bucket", hashBucketCol(col("h"), nBuckets))
+      .withColumn("bucket", docBucket(col("h"), nBuckets))
       .localCheckpoint()
     Par.inParallel(
       () => Layout.write(hashed, dst, SaveMode.Append, Seq("bucket"), Nil),
-      () => Layout.write(t.withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+      () => Layout.write(t.withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_docs", SaveMode.Append, Seq("dbucket"), Nil))
     hashed.count()
   }
@@ -186,7 +182,7 @@ object ExactSubstring {
     val (nBuckets, l) = (meta.getInt(0), meta.getInt(1))
     val t = batch.select(col("doc_id"), col("text")).localCheckpoint()
     val bHashed = windowHashes(t, l)
-      .withColumn("bucket", hashBucketCol(col("h"), nBuckets))
+      .withColumn("bucket", docBucket(col("h"), nBuckets))
       .localCheckpoint()
     val bBuckets = bHashed.select(col("bucket")).distinct()
       .collect().map(_.getInt(0))
@@ -210,7 +206,7 @@ object ExactSubstring {
       .select(lit(true).as("is_batch"), col("doc_id"), col("pos"),
         expr(s"substring(text, CAST(pos AS INT), $l)").as("win"))
     val dBuckets = corpusHits
-      .select(docBucketCol(col("doc_id"), nBuckets).as("db"))
+      .select(docBucket(col("doc_id"), nBuckets).as("db"))
       .distinct().collect().map(_.getInt(0))
     val corpusText =
       if (dBuckets.isEmpty) s.read.parquet(dst + "_docs").limit(0)

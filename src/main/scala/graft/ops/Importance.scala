@@ -45,7 +45,7 @@ object Importance {
   /** 52-bit md5 prefix → bucket id; mirrors the DuckDB idiom
     * `('0x'||substr(md5(f),1,13))::BIGINT % B` (both operands
     * non-negative, so `%` and `pmod` agree). Same hash idiom as
-    * `Retrieval.termBucketCol`, kept separate only for the LONG output
+    * `BucketStore.termBucketCol`, kept separate only for the LONG output
     * type this module's hash-verified q77 expression tree carries. */
   private def bucketOf(f: Column): Column =
     pmod(conv(substring(md5(f), 1, 13), 16, 10).cast("long"), lit(Buckets))

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Layout
+import BucketStore.{docBucket, termBucketCol}
 
 /** Standing MinHash-LSH near-dup index — the dedup-on-INGEST path.
   * q26 finds near-dup pairs within one corpus scan; a 100 TB standing
@@ -55,8 +56,9 @@ object NearDupIndex {
   private val K = 8      // signature components
   private val BandsN = 4 // bands of 2 components
 
-  private def docBucket(id: Column, n: Int): Column =
-    pmod(id, lit(n.toLong)).cast("int")
+  /** Recover the stores a bucket swap rewrites. */
+  private[graft] def recoverSwaps(s: SparkSession, dst: String): Unit =
+    BucketStore.recover(s, Seq(dst, dst + "_docs"))
 
   /** (doc_id, h0..h7) signatures from a capped shingle set. */
   private def signatures(sh: DataFrame): DataFrame =
@@ -82,7 +84,7 @@ object NearDupIndex {
   private def batchCorpusDf(s: SparkSession, dst: String,
                             raw: DataFrame, nBuckets: Int): DataFrame = {
     val dfBatch = raw.groupBy(col("g")).agg(count(lit(1)).as("dfb"))
-      .withColumn("gb", Retrieval.termBucketCol(col("g"), nBuckets))
+      .withColumn("gb", termBucketCol(col("g"), nBuckets))
     val gBuckets = dfBatch.select(col("gb")).distinct()
       .collect().map(_.getInt(0))
     val dfCorpus = s.read.parquet(dst + "_sh_df")
@@ -133,7 +135,7 @@ object NearDupIndex {
     // dfG pinned: it feeds BOTH the _sh_df write and the stop list —
     // unpinned it would aggregate the shingle frame twice
     val dfG = Pin.Checkpoint(raw.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets)))
+      .withColumn("bucket", termBucketCol(col("g"), nBuckets)))
     val stop = dfG.filter(col("df") > maxDocFreq).select(col("g"))
     val capped = Pin.Checkpoint(raw.join(broadcast(stop), Seq("g"), "left_anti"))
     // the four layout artifacts all derive from the pins — concurrent
@@ -146,7 +148,7 @@ object NearDupIndex {
           .withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_docs", SaveMode.Overwrite, Seq("dbucket"), Nil),
       () => Layout.write(bandRows(signatures(capped))
-          .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)),
+          .withColumn("bucket", termBucketCol(col("bh"), nBuckets)),
         dst, SaveMode.Overwrite, Seq("bucket"), Nil),
       () => Seq((nBuckets, maxDocFreq)).toDF("n_buckets", "max_doc_freq").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(dst + "_meta"))
@@ -164,7 +166,7 @@ object NearDupIndex {
     val newSets = cappedBatchSets(s, dst, raw, nBuckets, maxDocFreq)
     val newBands = Pin.Checkpoint(bandRows(signatures(
         newSets.select(col("doc_id"), explode(col("gs")).as("g"))))
-      .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)))
+      .withColumn("bucket", termBucketCol(col("bh"), nBuckets)))
     val bBuckets = newBands.select(col("bucket")).distinct()
       .collect().map(_.getInt(0))
     val corpusBands =
@@ -178,7 +180,7 @@ object NearDupIndex {
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.doc_id").as("cid"), col("y.doc_id").as("nid"))
       .distinct()
-      .join(tombstones(s, dst).withColumnRenamed("doc_id", "cid"),
+      .join(BucketStore.tombstones(s, dst).withColumnRenamed("doc_id", "cid"),
         Seq("cid"), "left_anti"))
     val dBuckets = candCross
       .select(docBucket(col("cid"), nBuckets).as("db")).distinct()
@@ -218,46 +220,6 @@ object NearDupIndex {
 
   // ------------------------------------------------------------ deletes
 
-  private def tombPath(dst: String) = dst + "_tombstones"
-
-  private def pathExists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** The distinct tombstoned doc_ids (empty frame when none). */
-  def tombstones(s: SparkSession, dst: String): DataFrame =
-    if (pathExists(s, tombPath(dst)))
-      s.read.parquet(tombPath(dst)).select(col("doc_id")).distinct()
-    else {
-      import s.implicits._
-      Seq.empty[Long].toDF("doc_id")
-    }
-
-  /** Mark indexed documents DELETED without touching the index stores:
-    * appends (doc_id, dbucket) rows to the `_tombstones` sidecar.
-    * Probes mask tombstoned docs immediately (their band rows stay on
-    * disk but never reach verification); [[purgeTombstones]] later
-    * drops the rows physically. Idempotent — duplicate tombstones
-    * collapse at read. Re-adding a tombstoned id requires a purge
-    * first (the append contract's id-disjointness extends to deleted
-    * ids — a re-added twin would be masked by the standing tombstone).
-    * Composes with [[SnapshotDiff]]: feed its `removed` ids here and
-    * its `added` docs to [[appendToMinhashLayout]] to keep a standing
-    * index tracking a living corpus. Returns tombstones written. */
-  def tombstone(ids: DataFrame, dst: String): Long = {
-    val s = ids.sparkSession
-    val meta = s.read.parquet(dst + "_meta").head()
-    val nBuckets = meta.getInt(0)
-    val rows = ids.select(col("doc_id")).distinct()
-      .withColumn("dbucket", docBucket(col("doc_id"), nBuckets))
-    // partition-aligned write, not coalesce(1): a mass delete (a whole
-    // source at once) must not serialize through one task; the sidecar
-    // is transient (cleared at purge), so small-file buildup is bounded
-    Layout.write(rows, tombPath(dst), SaveMode.Append, Seq("dbucket"), Nil)
-    rows.count()
-  }
-
   /** Physically drop tombstoned docs from the index — the compaction
     * half of the delete path. Only TOUCHED partition dirs are
     * rewritten: the dead docs' band buckets are recomputed from their
@@ -270,11 +232,9 @@ object NearDupIndex {
     * carry no correction — the same freshness contract as append-time
     * caps (exact again after [[compactIndex]] + a layout rewrite).
     *
-    * Crash contract: each touched dir is swapped via rename-to-`.bak`
-    * → rename-tmp-in → drop-`.bak`, and the tombstone sidecar is
-    * cleared LAST — a crash anywhere leaves tombstones standing, so
-    * probes stay correct and a re-run finishes the job (the pre-pass
-    * restores any `.bak` left by a mid-swap crash).
+    * Each touched dir is swapped by [[BucketStore.rewriteBuckets]] and
+    * the sidecar cleared LAST — the crash contract is
+    * [[BucketStore]]'s.
     *
     * Returns (docs purged, band buckets rewritten). The dead-id SET
     * never materializes on the driver — membership is by anti-join
@@ -283,13 +243,11 @@ object NearDupIndex {
     * driver lists are bucket numbers, bounded by the layout's nBuckets
     * whatever the delete volume. */
   def purgeTombstones(s: SparkSession, dst: String): (Long, Array[Int]) = {
-    recoverBakDirs(s, dst)
-    recoverBakDirs(s, dst + "_docs")
-    val dead = Pin.Checkpoint(tombstones(s, dst))
+    recoverSwaps(s, dst)
+    val dead = Pin.Checkpoint(BucketStore.tombstones(s, dst))
     if (dead.isEmpty) return (0L, Array.empty)
     val nDead = dead.count()
-    val meta = s.read.parquet(dst + "_meta").head()
-    val nBuckets = meta.getInt(0)
+    val nBuckets = BucketStore.nBuckets(s, dst)
 
     // dead docs' stored arrays (pruned read: only their dbuckets —
     // bounded ≤ nBuckets driver scalars however many docs die)
@@ -303,16 +261,16 @@ object NearDupIndex {
     // rewrite exactly those dirs
     val deadBands = bandRows(signatures(
         deadDocs.select(col("doc_id"), explode(col("gs")).as("g"))))
-      .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets))
+      .withColumn("bucket", termBucketCol(col("bh"), nBuckets))
     val bBuckets = deadBands.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).sorted
     // independent stores, both anti-joining the pinned dead set —
     // concurrent rewrites (Par.inParallel contract)
     Par.inParallel(
-      () => rewriteBuckets(s, dst, "bucket", bBuckets,
+      () => BucketStore.rewriteBuckets(s, dst, "bucket", bBuckets,
         keep = _.join(dead, Seq("doc_id"), "left_anti"),
         sortCols = Nil),
-      () => rewriteBuckets(s, dst + "_docs", "dbucket", dBuckets,
+      () => BucketStore.rewriteBuckets(s, dst + "_docs", "dbucket", dBuckets,
         keep = _.join(dead, Seq("doc_id"), "left_anti"),
         sortCols = Nil))
 
@@ -324,53 +282,12 @@ object NearDupIndex {
     // conservatively HIGH — caps trigger earlier, never later
     Layout.write(deadDocs.select(explode(col("gs")).as("g"))
         .groupBy(col("g")).agg((-count(lit(1))).as("df"))
-        .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets)),
+        .withColumn("bucket", termBucketCol(col("g"), nBuckets)),
       dst + "_sh_df", SaveMode.Append, Seq("bucket"), Nil)
 
-    // clear the sidecar LAST — any crash above leaves probes correct
-    val tp = new org.apache.hadoop.fs.Path(tombPath(dst))
-    tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
+    // clear the sidecar LAST — any crash above leaves tombstones standing
+    BucketStore.clearTombstones(s, dst)
     (nDead, bBuckets)
-  }
-
-  /** Restore any `<dir>.bak` left by a crash between the two renames of
-    * a bucket swap: if the live dir is missing, the bak IS the live
-    * data; if both exist the swap completed and the bak is surplus. */
-  private[ops] def recoverBakDirs(s: SparkSession, root: String): Unit = {
-    val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rp)) return
-    fs.listStatus(rp).filter(_.getPath.getName.endsWith(".bak")).foreach { st =>
-      val live = new org.apache.hadoop.fs.Path(root,
-        st.getPath.getName.stripSuffix(".bak"))
-      if (!fs.exists(live)) fs.rename(st.getPath, live)
-      else fs.delete(st.getPath, true)
-    }
-  }
-
-  /** Swap-rewrite the named bucket dirs of a partitioned store with
-    * `keep` applied. Buckets whose every row is dropped end up with no
-    * dir — exactly what a fresh write would produce. */
-  private[ops] def rewriteBuckets(s: SparkSession, root: String, bucketCol: String,
-                             buckets: Array[Int],
-                             keep: DataFrame => DataFrame,
-                             sortCols: Seq[String]): Unit = {
-    if (buckets.isEmpty) return
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = root + ".purge-tmp"
-    Layout.write(keep(s.read.parquet(root)
-        .filter(col(bucketCol).isin(buckets.map(Int.box): _*))),
-      tmp, SaveMode.Overwrite, Seq(bucketCol), sortCols)
-    buckets.foreach { b =>
-      val live = new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b")
-      val bak = new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b.bak")
-      val fresh = new org.apache.hadoop.fs.Path(tmp, s"$bucketCol=$b")
-      if (fs.exists(live)) fs.rename(live, bak)
-      if (fs.exists(fresh)) fs.rename(fresh, live)
-      fs.delete(bak, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
   /** What an incremental minhash-index append did, plus the freshness
@@ -398,9 +315,11 @@ object NearDupIndex {
     * the IVF store's occupancy refit signal: they flag appends that
     * left OLDER docs' arrays stale against the new df totals. df
     * segments are counts: a replayed batch double-counts (checkpoint a
-    * stream that feeds this). */
+    * stream that feeds this). Recovers the store's bucket swaps first
+    * ([[BucketStore]]'s crash contract). */
   def appendToMinhashLayout(newDocs: DataFrame, dst: String): MinhashAppendReport = {
     val s = newDocs.sparkSession
+    recoverSwaps(s, dst)
     val meta = s.read.parquet(dst + "_meta").head()
     val (nBuckets, maxDocFreq) = (meta.getInt(0), meta.getLong(1))
     val raw = Pin.Checkpoint(Dedup.shingles(newDocs, 3)) // shingles widens internally
@@ -413,12 +332,12 @@ object NearDupIndex {
     val newSets = Pin.Checkpoint(cappedSetsFrom(raw, bdf, maxDocFreq))
     val bands = Pin.Checkpoint(bandRows(signatures(
         newSets.select(col("doc_id"), explode(col("gs")).as("g"))))
-      .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)))
+      .withColumn("bucket", termBucketCol(col("bh"), nBuckets)))
     // three independent appends from the pins — concurrent
     // (Par.inParallel contract)
     Par.inParallel(
       () => Layout.write(raw.groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .withColumn("bucket", Retrieval.termBucketCol(col("g"), nBuckets)),
+          .withColumn("bucket", termBucketCol(col("g"), nBuckets)),
         dst + "_sh_df", SaveMode.Append, Seq("bucket"), Nil),
       () => Layout.write(newSets.withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_docs", SaveMode.Append, Seq("dbucket"), Nil),
@@ -451,7 +370,7 @@ object NearDupIndex {
     * HEAD only survives the filter, so the broadcast is small by
     * construction); affected docs come from one explode + semi-join
     * over the array store; only THEIR dbuckets and band buckets are
-    * swap-rewritten via [[rewriteBuckets]] (crash-safe `.bak` swaps).
+    * swap-rewritten via [[BucketStore.rewriteBuckets]].
     * The df sidecar itself is cap-independent raw counts — untouched.
     * Docs already capped at their own index time carry no over-cap
     * shingles, so they are never touched: cost scales with drift, not
@@ -465,8 +384,7 @@ object NearDupIndex {
     *
     * Returns (docs re-capped, band buckets rewritten). */
   def rewriteCapCrossed(s: SparkSession, dst: String): (Long, Array[Int]) = {
-    recoverBakDirs(s, dst)
-    recoverBakDirs(s, dst + "_docs")
+    recoverSwaps(s, dst)
     val meta = s.read.parquet(dst + "_meta").head()
     val (nBuckets, maxDocFreq) = (meta.getInt(0), meta.getLong(1))
     val over = Pin.Checkpoint(s.read.parquet(dst + "_sh_df")
@@ -490,10 +408,10 @@ object NearDupIndex {
       .agg(sort_array(collect_list(col("g"))).as("gs")))
     val oldBands = bandRows(signatures(
         affected.select(col("doc_id"), explode(col("gs")).as("g"))))
-      .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets))
+      .withColumn("bucket", termBucketCol(col("bh"), nBuckets))
     val newBands = Pin.Checkpoint(bandRows(signatures(
         recapped.select(col("doc_id"), explode(col("gs")).as("g"))))
-      .withColumn("bucket", Retrieval.termBucketCol(col("bh"), nBuckets)))
+      .withColumn("bucket", termBucketCol(col("bh"), nBuckets)))
     // touched dirs = old rows' buckets (rows to drop) ∪ new rows'
     // buckets (rows to land) — bounded ≤ nBuckets driver ints
     val bBuckets = (oldBands.select(col("bucket"))
@@ -504,12 +422,12 @@ object NearDupIndex {
       .collect().map(_.getInt(0)).sorted
     // independent stores, keep-functions reading only pins — concurrent
     Par.inParallel(
-      () => rewriteBuckets(s, dst, "bucket", bBuckets,
+      () => BucketStore.rewriteBuckets(s, dst, "bucket", bBuckets,
         keep = _.join(affIds, Seq("doc_id"), "left_anti")
           .unionByName(newBands.select(col("doc_id"), col("band"),
             col("bh"), col("bucket"))),
         sortCols = Nil),
-      () => rewriteBuckets(s, dst + "_docs", "dbucket", dBuckets,
+      () => BucketStore.rewriteBuckets(s, dst + "_docs", "dbucket", dBuckets,
         keep = _.join(affIds, Seq("doc_id"), "left_anti")
           .unionByName(recapped
             .withColumn("dbucket", docBucket(col("doc_id"), nBuckets))
@@ -581,60 +499,18 @@ object NearDupIndex {
     }
   }
 
-  /** One-call maintenance of the index against a living corpus: classify
-    * `newDocs` vs the indexed snapshot `oldDocs` ([[SnapshotDiff.diff]])
-    * and apply each verdict with the cheapest correct mechanism:
-    *
-    *   changed — tombstone + PHYSICAL purge, then re-append the new
-    *             text. The purge is mandatory here: the append
-    *             contract's id-disjointness extends to tombstoned ids,
-    *             so a standing tombstone would mask the re-added twin.
-    *   removed — tombstone ONLY. Probes mask immediately; the physical
-    *             drop rides a later [[purgeTombstones]] (an operator's
-    *             compaction window), so steady-state deletion churn
-    *             costs O(ids), not O(bucket rewrites).
-    *   added   — [[appendToMinhashLayout]], O(new-data).
-    *
-    * The eager purge collapses EVERY standing tombstone (including
-    * earlier lazily-masked removals) — always correct, occasionally
-    * more work than the changed set alone. It runs whenever an incoming
-    * id is currently tombstoned, not only for this sync's changed set:
-    * a doc removed in one sync (lazily masked) and re-added in a LATER
-    * sync arrives as `added` while its old tombstone still stands, and
-    * appending under a standing tombstone would mask the new twin
-    * forever. Unchanged docs cost one md5-projection join row and
-    * nothing else. Returns (docs purged, removals masked,
-    * docs appended). */
-  def sync(oldDocs: DataFrame, newDocs: DataFrame, dst: String): (Long, Long, Long) = {
-    val s = newDocs.sparkSession
-    // narrow (id, status) projection, pinned: consumed by up to three
-    // downstream actions, and the full-outer diff should run once
-    val d = Pin.Checkpoint(SnapshotDiff.diff(oldDocs, newDocs)
-      .filter(col("status") =!= "unchanged")
-      .select(col("doc_id"), col("status")))
-    val changed = d.filter(col("status") === "changed").select("doc_id")
-    val removed = d.filter(col("status") === "removed").select("doc_id")
-    val toAddIds = d.filter(col("status") =!= "removed").select("doc_id")
-    val maskedIncoming = tombstones(s, dst).join(toAddIds, Seq("doc_id"))
-    val purged =
-      if (changed.isEmpty && maskedIncoming.isEmpty) 0L
-      else {
-        if (!changed.isEmpty) tombstone(changed, dst)
-        purgeTombstones(s, dst)._1
-      }
-    val masked = if (removed.isEmpty) 0L else tombstone(removed, dst)
-    val toAdd = newDocs.join(toAddIds, Seq("doc_id"))
-    val appended =
-      if (toAdd.isEmpty) 0L
-      else {
-        val report = appendToMinhashLayout(toAdd, dst)
-        // self-healing lifecycle: an append that pushed shingles over
-        // the df cap leaves older arrays stale — heal immediately so a
-        // sync'd index is ALWAYS fresh-write-equal (the one-call
-        // maintenance contract; cost scales with drift, not corpus)
-        if (report.rewriteRecommended) rewriteCapCrossed(s, dst)
-        report.appended
-      }
-    (purged, masked, appended)
-  }
+  /** [[BucketStore.sync]] over this index: purge is [[purgeTombstones]],
+    * append is [[appendToMinhashLayout]] followed by
+    * [[rewriteCapCrossed]] when the append crossed the df cap.
+    * Returns (docs purged, removals masked, docs appended). */
+  def sync(oldDocs: DataFrame, newDocs: DataFrame, dst: String): (Long, Long, Long) =
+    BucketStore.sync(oldDocs, newDocs, dst)(purgeTombstones(newDocs.sparkSession, dst)._1) { toAdd =>
+      val report = appendToMinhashLayout(toAdd, dst)
+      // self-healing lifecycle: an append that pushed shingles over
+      // the df cap leaves older arrays stale — heal immediately so a
+      // sync'd index is ALWAYS fresh-write-equal (the one-call
+      // maintenance contract; cost scales with drift, not corpus)
+      if (report.rewriteRecommended) rewriteCapCrossed(newDocs.sparkSession, dst)
+      report.appended
+    }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Layout
 import graft.Tables
+import BucketStore.{docBucket, termBucket, termBucketCol}
 
 /** Full-text retrieval over the corpus — the data-curation tool behind
   * "find the documents most similar to this benchmark prompt" and
@@ -389,31 +390,11 @@ object Retrieval {
     (out, Seq(tf, qterms, cand))
   }
 
-  /** Term → partition bucket: the first 52 bits of md5, mod `nBuckets`.
-    * Computed md5-hex-prefix-wise so the DRIVER can derive a literal
-    * bucket set from query terms (static partition pruning happens at
-    * planning, before any file listing) and the EXECUTORS compute the
-    * identical value columnar-wise at write time — both sides hash the
-    * same UTF-8 bytes. */
-  private[graft] def termBucket(term: String, nBuckets: Int): Int = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(term.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    (java.lang.Long.parseLong(hex.take(13), 16) % nBuckets).toInt
-  }
-
-  // INT, not long: partition dir values read back as IntegerType, and a
-  // literal set of the same type keeps the isin a STATIC partition
-  // filter (a widening cast on the partition column can defeat pruning)
-  private[ops] def termBucketCol(term: Column, nBuckets: Int): Column =
-    pmod(conv(substring(md5(term), 1, 13), 16, 10).cast("long"),
-      lit(nBuckets.toLong)).cast("int")
-
   /** Write-time inverted-index layout — the standing-retrieval answer
     * the scan-time path's scaladoc promises. One corpus pass tokenizes
     * and explodes EVERY term into postings (doc_id, dl, term, tf),
-    * partitioned on disk by [[termBucket]] and sorted by term within
-    * files (parquet min/max row-group stats make the query-time
+    * partitioned on disk by [[BucketStore.termBucket]] and sorted by
+    * term within files (parquet min/max row-group stats make the query-time
     * `term IN (...)` filter skip non-matching row groups). Document
     * frequencies land beside the data (`<dst>_df`, same bucketing), the
     * two corpus totals in `<dst>_totals`, and the bucket count in
@@ -483,18 +464,12 @@ object Retrieval {
       () => Seq(nBuckets).toDF("n_buckets").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(dst + "_meta"),
       () => Layout.write(lens
-          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+          .withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_dl", SaveMode.Overwrite, Seq("dbucket"), Nil),
       () => Layout.write(postings.select(col("doc_id"), col("bucket")).distinct()
-          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+          .withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_docbuckets", SaveMode.Overwrite, Seq("dbucket"), Nil))
   }
-
-  /** Doc id → sidecar partition bucket (plain modulo — ids are already
-    * uniform enough for file sizing, and the purge only needs pruning,
-    * not balance guarantees). */
-  private def docBucketCol(id: Column, nBuckets: Int): Column =
-    pmod(id, lit(nBuckets.toLong)).cast("int")
 
   /** BM25 top-k against a [[writePostingsBucketed]] layout: reads ONLY
     * the query terms' partition dirs (literal bucket set → static
@@ -520,7 +495,7 @@ object Retrieval {
   private[graft] def probedPostings(s: SparkSession, dst: String,
                                     query0: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
     val query = query0.map(_.toLowerCase) // the bm25TopK normalization rule
-    val nBuckets = s.read.parquet(dst + "_meta").head().getInt(0)
+    val nBuckets = BucketStore.nBuckets(s, dst)
     val buckets = query.map(termBucket(_, nBuckets)).distinct
     val tf0 = s.read.parquet(dst)
       .filter(col("bucket").isin(buckets.map(Int.box): _*))
@@ -547,7 +522,7 @@ object Retrieval {
                                        qterms0: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // no cache on qset: its three references re-run one distinct over
     // the caller's (cached) term frame — cheap, and nothing to leak
-    val nBuckets = s.read.parquet(dst + "_meta").head().getInt(0)
+    val nBuckets = BucketStore.nBuckets(s, dst)
     val qset = qterms0.select(col("term")).distinct()
     val buckets = qset.select(termBucketCol(col("term"), nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0))
@@ -575,26 +550,26 @@ object Retrieval {
   private def maskedProbeFrames(s: SparkSession, dst: String,
                                 tf0: DataFrame, dfreq0: DataFrame,
                                 totals0: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    if (!pathExists(s, dst + "_tombstones")) (tf0, dfreq0, totals0)
-    else {
-      val tombRaw = s.read.parquet(dst + "_tombstones")
-      val tomb = tombRaw.select(col("doc_id")).distinct()
-      val dBuckets = tombRaw.select(col("dbucket")).distinct()
-        .collect().map(_.getInt(0))
-      val tf = tf0.join(tomb, Seq("doc_id"), "left_anti")
-      val deadDf = tf0.join(tomb, Seq("doc_id"), "left_semi")
-        .groupBy(col("term")).agg(count(lit(1)).as("ddf"))
-      val dfreq = dfreq0.join(deadDf, Seq("term"), "left")
-        .select(col("term"),
-          (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
-      val deadTotals = s.read.parquet(dst + "_dl")
-        .filter(col("dbucket").isin(dBuckets.map(Int.box): _*))
-        .join(tomb, Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("dn"), coalesce(sum(col("dl")), lit(0L)).as("ddl"))
-      val totals = totals0.crossJoin(deadTotals)
-        .select((col("n_docs") - col("dn")).as("n_docs"),
-          (col("n_total") - col("ddl")).as("n_total"))
-      (tf, dfreq, totals)
+    BucketStore.tombstoneRows(s, dst) match {
+      case None => (tf0, dfreq0, totals0)
+      case Some(tombRaw) =>
+        val tomb = tombRaw.select(col("doc_id")).distinct()
+        val dBuckets = tombRaw.select(col("dbucket")).distinct()
+          .collect().map(_.getInt(0))
+        val tf = tf0.join(tomb, Seq("doc_id"), "left_anti")
+        val deadDf = tf0.join(tomb, Seq("doc_id"), "left_semi")
+          .groupBy(col("term")).agg(count(lit(1)).as("ddf"))
+        val dfreq = dfreq0.join(deadDf, Seq("term"), "left")
+          .select(col("term"),
+            (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
+        val deadTotals = s.read.parquet(dst + "_dl")
+          .filter(col("dbucket").isin(dBuckets.map(Int.box): _*))
+          .join(tomb, Seq("doc_id"), "left_semi")
+          .agg(count(lit(1)).as("dn"), coalesce(sum(col("dl")), lit(0L)).as("ddl"))
+        val totals = totals0.crossJoin(deadTotals)
+          .select((col("n_docs") - col("dn")).as("n_docs"),
+            (col("n_total") - col("ddl")).as("n_total"))
+        (tf, dfreq, totals)
     }
   }
 
@@ -643,20 +618,6 @@ object Retrieval {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  private def pathExists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** The distinct tombstoned doc_ids (typed empty frame when none). */
-  def postingTombstones(s: SparkSession, dst: String): DataFrame =
-    if (pathExists(s, dst + "_tombstones"))
-      s.read.parquet(dst + "_tombstones").select(col("doc_id")).distinct()
-    else {
-      import s.implicits._
-      Seq.empty[Long].toDF("doc_id")
-    }
-
   /** q96: the postings DELETE path as a DECLARED query — the
     * write→tombstone→masked-probe chain hash-proven in the driver gate
     * (the q89 rule: the layout rebuilds from scratch each run so the
@@ -679,7 +640,7 @@ object Retrieval {
     // the oracle proves the ranking, the soak's 64-bucket run proves
     // the pruning); 64 dirs of KB files paid pure task/commit overhead
     writePostingsBucketed(docs, dst, nBuckets = 16)
-    tombstonePostings(docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")), dst)
+    BucketStore.tombstone(docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")), dst)
     bucketedBm25TopK(s, dst, Seq("spark", "vector", "merge", "window"), 20)
   }
 
@@ -710,82 +671,40 @@ object Retrieval {
     bucketedBm25TopK(s, dst, Seq("spark", "vector", "merge", "window"), 20)
   }
 
-  /** Mark indexed documents DELETED without touching the posting store:
-    * appends (doc_id, dbucket) rows to the `_tombstones` sidecar. Every
-    * probe masks them immediately — ranking, df and totals all behave
-    * as if the index had been rebuilt without the dead docs — and
-    * [[purgePostingTombstones]] later drops the rows physically.
-    * Idempotent (duplicates collapse at read); partition-aligned write,
-    * so a mass delete never serializes through one task. Composes with
-    * [[graft.ops.SnapshotDiff]] exactly like the near-dup index's
-    * delete path. Returns tombstones written. */
-  def tombstonePostings(ids: DataFrame, dst: String): Long = {
-    val s = ids.sparkSession
-    val nBuckets = s.read.parquet(dst + "_meta").head().getInt(0)
-    val rows = ids.select(col("doc_id")).distinct()
-      .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets))
-    Layout.write(rows, dst + "_tombstones", SaveMode.Append, Seq("dbucket"), Nil)
-    rows.count()
-  }
-
-  /** One-call maintenance of a standing posting index against a living
-    * corpus — the [[NearDupIndex.sync]] contract applied here: classify
-    * `newDocs` vs the indexed snapshot `oldDocs` (SnapshotDiff) and
-    * apply the cheapest correct mechanism per verdict — changed →
-    * tombstone + eager purge + re-append; removed → tombstone only
-    * (mask now, purge in a later compaction window); added → append.
-    * The eager purge fires whenever an INCOMING id is currently
-    * tombstoned (a doc removed in one sync and re-added later must not
-    * stay masked — appending under a standing tombstone would hide the
-    * new twin forever). Returns (purged, masked, appended). */
+  /** [[BucketStore.sync]] over this index: purge is
+    * [[purgePostingTombstones]], append is [[appendToPostings]].
+    * Returns (docs purged, removals masked, docs appended). */
   def syncPostings(oldDocs: DataFrame, newDocs: DataFrame,
-                   dst: String): (Long, Long, Long) = {
-    val s = newDocs.sparkSession
-    val d = SnapshotDiff.diff(oldDocs, newDocs)
-      .filter(col("status") =!= "unchanged")
-      .select(col("doc_id"), col("status"))
-      .localCheckpoint()
-    val changed = d.filter(col("status") === "changed").select("doc_id")
-    val removed = d.filter(col("status") === "removed").select("doc_id")
-    val toAddIds = d.filter(col("status") =!= "removed").select("doc_id")
-    val maskedIncoming = postingTombstones(s, dst).join(toAddIds, Seq("doc_id"))
-    val purged =
-      if (changed.isEmpty && maskedIncoming.isEmpty) 0L
-      else {
-        if (!changed.isEmpty) tombstonePostings(changed, dst)
-        purgePostingTombstones(s, dst)._1
-      }
-    val masked = if (removed.isEmpty) 0L else tombstonePostings(removed, dst)
-    val toAdd = newDocs.join(toAddIds, Seq("doc_id"))
-    val appended = if (toAdd.isEmpty) 0L else appendToPostings(toAdd, dst)._1
-    (purged, masked, appended)
-  }
+                   dst: String): (Long, Long, Long) =
+    BucketStore.sync(oldDocs, newDocs, dst)(
+      purgePostingTombstones(newDocs.sparkSession, dst)._1)(appendToPostings(_, dst)._1)
+
+  /** Recover the stores a bucket swap rewrites. */
+  private[graft] def recoverSwaps(s: SparkSession, dst: String): Unit =
+    BucketStore.recover(s, Seq(dst, dst + "_docbuckets", dst + "_dl"))
 
   /** Physically drop tombstoned docs from the posting layout. Touched
     * posting buckets come from the `_docbuckets` reverse map (pruned to
     * the dead ids' dbuckets — never a store scan); each touched dir is
-    * swap-rewritten via the shared bak-swap machinery, then negative
+    * swap-rewritten by [[BucketStore.rewriteBuckets]], then negative
     * df/totals segments (computed from the dead rows PINNED before the
     * rewrite) keep the probe-time sums equal to a fresh rebuild. The
-    * sidecar is cleared LAST: a crash anywhere leaves tombstones
-    * standing and probes correct, and a re-run finishes the job —
-    * re-read stores hold no dead rows, so corrections can never apply
-    * twice (the one crash window, rewrites-done-segments-unwritten,
-    * leaves df/totals conservatively HIGH — idf shades down, rankings
-    * never include a deleted doc; the near-dup purge's same trade).
+    * sidecar is cleared LAST, under [[BucketStore]]'s crash contract;
+    * a re-run re-reads stores that hold no dead rows, so corrections
+    * can never apply twice (the one crash window,
+    * rewrites-done-segments-unwritten, leaves df/totals conservatively
+    * HIGH — idf shades down, rankings never include a deleted doc; the
+    * near-dup purge's same trade).
     * Returns (docs purged, posting buckets rewritten). */
   def purgePostingTombstones(s: SparkSession, dst: String): (Long, Array[Int]) = {
-    NearDupIndex.recoverBakDirs(s, dst)
-    NearDupIndex.recoverBakDirs(s, dst + "_docbuckets")
-    NearDupIndex.recoverBakDirs(s, dst + "_dl")
-    if (!pathExists(s, dst + "_tombstones")) return (0L, Array.empty)
-    val dead = s.read.parquet(dst + "_tombstones")
-      .select(col("doc_id")).distinct()
+    recoverSwaps(s, dst)
+    if (!BucketStore.hasTombstones(s, dst)) return (0L, Array.empty)
+    val dead = BucketStore.tombstones(s, dst)
       .localCheckpoint(false) // lazy: the count below materializes it
     val nDead = dead.count()
     if (nDead == 0) return (0L, Array.empty)
-    val nBuckets = s.read.parquet(dst + "_meta").head().getInt(0)
-    val dBuckets = dead.select(docBucketCol(col("doc_id"), nBuckets).as("db"))
+    val nBuckets = BucketStore.nBuckets(s, dst)
+    val dBuckets = dead.select(docBucket(col("doc_id"), nBuckets).as("db"))
       .distinct().collect().map(_.getInt(0)).sorted
     val touched = s.read.parquet(dst + "_docbuckets")
       .filter(col("dbucket").isin(dBuckets.map(Int.box): _*))
@@ -811,11 +730,11 @@ object Retrieval {
     // conservatively HIGH; the reverse order could double-subtract a
     // dead doc that is both mask-corrected and segment-corrected)
     Par.inParallel(
-      () => NearDupIndex.rewriteBuckets(s, dst, "bucket", touched,
+      () => BucketStore.rewriteBuckets(s, dst, "bucket", touched,
         _.join(dead, Seq("doc_id"), "left_anti"), Seq("term", "doc_id")),
-      () => NearDupIndex.rewriteBuckets(s, dst + "_docbuckets", "dbucket", dBuckets,
+      () => BucketStore.rewriteBuckets(s, dst + "_docbuckets", "dbucket", dBuckets,
         _.join(dead, Seq("doc_id"), "left_anti"), Nil),
-      () => NearDupIndex.rewriteBuckets(s, dst + "_dl", "dbucket", dBuckets,
+      () => BucketStore.rewriteBuckets(s, dst + "_dl", "dbucket", dBuckets,
         _.join(dead, Seq("doc_id"), "left_anti"), Nil))
     Par.inParallel(
       () => Layout.write(deadPost.groupBy(col("term")).agg((-count(lit(1))).as("df"))
@@ -825,9 +744,8 @@ object Retrieval {
           (-coalesce(sum(col("dl")), lit(0L))).as("n_total"))
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(dst + "_totals"))
-    // clear the sidecar LAST — any crash above leaves probes correct
-    val tp = new org.apache.hadoop.fs.Path(dst + "_tombstones")
-    tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
+    // clear the sidecar LAST — any crash above leaves tombstones standing
+    BucketStore.clearTombstones(s, dst)
     (nDead, touched)
   }
 
@@ -841,11 +759,14 @@ object Retrieval {
     * half-rewritten sidecar. `newDocs` must be NEW doc_ids (the index
     * stores one posting row per (doc, term); re-appending an existing
     * document would double-count it, same as any append-only store).
+    * Recovers the store's bucket swaps first ([[BucketStore]]'s crash
+    * contract).
     * Returns (appended posting rows, touched buckets). */
   def appendToPostings(newDocs: DataFrame, dst: String): (Long, Array[Int]) = {
     val s = newDocs.sparkSession
     import s.implicits._
-    val nBuckets = s.read.parquet(dst + "_meta").head().getInt(0)
+    recoverSwaps(s, dst)
+    val nBuckets = BucketStore.nBuckets(s, dst)
     // ALL new docs (empty ones included — the write-time totals
     // convention): feeds the totals delta and the _dl sidecar
     val dAll = Par.widen(newDocs)
@@ -871,10 +792,10 @@ object Retrieval {
         .write.mode(SaveMode.Append).parquet(dst + "_totals"),
       // delete-path sidecars ride the append too
       () => Layout.write(dAll.select(col("doc_id"), col("dl"))
-          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+          .withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_dl", SaveMode.Append, Seq("dbucket"), Nil),
       () => Layout.write(postings.select(col("doc_id"), col("bucket")).distinct()
-          .withColumn("dbucket", docBucketCol(col("doc_id"), nBuckets)),
+          .withColumn("dbucket", docBucket(col("doc_id"), nBuckets)),
         dst + "_docbuckets", SaveMode.Append, Seq("dbucket"), Nil))
     val touched = postings.select(col("bucket")).distinct()
       .as[Int].collect().sorted

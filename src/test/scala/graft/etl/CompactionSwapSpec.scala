@@ -7,22 +7,33 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.{Fixtures, SparkSpec}
-import graft.ops.{Clustering, SegmentCompaction, VectorStore}
+import graft.ops.{BucketStore, Clustering, NearDupIndex, Retrieval, SegmentCompaction, VectorStore}
 
-/** Local files under the `crashfs:` scheme, except that renaming a
-  * `*.compact-tmp` dir fails: a crash between the swap's two renames,
-  * after the original has moved to its backup. Statuses carry default
+/** Local files under the `<scheme>:` scheme. Statuses carry default
   * permissions: the raw class reads them through a `file:` URI. */
-class CrashFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("crashfs:///")
-  override def getScheme: String = "crashfs"
+abstract class SchemeFs(scheme: String) extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"$scheme:///")
+  override def getScheme: String = scheme
   private def plain(s: FileStatus) =
     new FileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
   override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
   override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(plain)
+}
+
+/** Renaming a `*.compact-tmp` dir fails: a crash between the swap's two
+  * renames, after the original has moved to its backup. */
+class CrashFs extends SchemeFs("crashfs") {
   override def rename(src: Path, dst: Path): Boolean =
     if (src.getName.endsWith(".compact-tmp")) throw new IOException(s"injected crash renaming $src")
     else super.rename(src, dst)
+}
+
+/** Renaming a dir out of a `*.purge-tmp` dir returns false: a bucket
+  * swap whose second rename is refused, after the live bucket has moved
+  * to its backup. */
+class RefusingSwapFs extends SchemeFs("swapfs") {
+  override def rename(src: Path, dst: Path): Boolean =
+    !src.getParent.getName.endsWith(".purge-tmp") && super.rename(src, dst)
 }
 
 /** Each compaction, crashed at its worst point, is restored by
@@ -107,5 +118,65 @@ class CompactionSwapSpec extends SparkSpec {
     assert(before.size == 8)
     crashAndRecover(s"$root/store")(VectorStore.compactCells(spark, root))
     assert(probe() == before)
+  }
+
+  private val dir = "/root/testdata/sf0.001"
+
+  /** A local store dir, and its path under `swapfs:`, where every bucket
+    * swap's fresh → live rename is refused. */
+  private def refusingStore(name: String): (String, String) = {
+    spark.sparkContext.hadoopConfiguration.set("fs.swapfs.impl", classOf[RefusingSwapFs].getName)
+    val local = Files.createTempDirectory(s"graft-refuse-$name").toFile.getAbsolutePath + "/idx"
+    (local, "swapfs://" + local)
+  }
+
+  /** Every row of each store under `roots`, in a fixed order. */
+  private def storeRows(roots: Seq[String]) =
+    roots.map(r => spark.read.parquet(r).collect().map(_.toString).sorted.toSeq)
+
+  /** `purge` must throw at a refused swap rename, and until recovery a
+    * probe of the store must fail loudly (the backup dir makes the bucket
+    * column a string), never answer from a store missing a bucket. */
+  private def refusedSwap(purge: => Any)(probe: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](purge)
+    assert(e.getMessage.contains("bucket swap"), e)
+    val p = intercept[Exception](probe)
+    assert(p.getMessage.contains("CAST_INVALID_INPUT"), p)
+  }
+
+  test("near-dup purge: a refused bucket-swap rename throws; recovery restores rows and probe answers") {
+    val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val (dst, refusing) = refusingStore("neardup")
+    NearDupIndex.writeMinhashLayout(docs.filter(col("doc_id") % 5 =!= 0), dst,
+      nBuckets = 8, maxDocFreq = 10000L)
+    BucketStore.tombstone(docs.filter(col("doc_id") % 10 === 1).select(col("doc_id")), dst)
+    val batch = docs.filter(col("doc_id") % 5 === 0)
+    val roots = Seq(dst, dst + "_docs", dst + "_sh_df")
+    def probe() = NearDupIndex.probeNearDup(spark, dst, batch).collect().toSeq
+    val (rowsBefore, probeBefore) = (storeRows(roots), probe())
+    refusedSwap(NearDupIndex.purgeTombstones(spark, refusing))(probe())
+    NearDupIndex.recoverSwaps(spark, dst)
+    assert(storeRows(roots) == rowsBefore)
+    assert(probe() == probeBefore)
+    // a re-run finishes the purge with the same answers
+    assert(NearDupIndex.purgeTombstones(spark, dst)._1 > 0)
+    assert(probe() == probeBefore)
+  }
+
+  test("posting purge: a refused bucket-swap rename throws; recovery restores rows and probe answers") {
+    val docs = graft.Tables.documents(spark, dir)
+    val (dst, refusing) = refusingStore("postings")
+    Retrieval.writePostingsBucketed(docs, dst, nBuckets = 8)
+    BucketStore.tombstone(docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")), dst)
+    val roots = Seq(dst, dst + "_docbuckets", dst + "_dl", dst + "_df", dst + "_totals")
+    def probe() = Retrieval.bucketedBm25TopK(spark, dst, Seq("spark", "vector", "merge", "window"), 20)
+      .collect().toSeq
+    val (rowsBefore, probeBefore) = (storeRows(roots), probe())
+    refusedSwap(Retrieval.purgePostingTombstones(spark, refusing))(probe())
+    Retrieval.recoverSwaps(spark, dst)
+    assert(storeRows(roots) == rowsBefore)
+    assert(probe() == probeBefore)
+    assert(Retrieval.purgePostingTombstones(spark, dst)._1 > 0)
+    assert(probe() == probeBefore)
   }
 }

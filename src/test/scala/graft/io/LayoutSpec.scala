@@ -11,7 +11,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.etl.{Enrich, ExportJob, LogSchema}
-import graft.ops.Retrieval
+import graft.ops.{BucketStore, Retrieval}
 
 /** Every file a clustered write leaves is sorted on its cluster columns,
   * and the executed plan of the write holds exactly the one sort. The
@@ -65,7 +65,7 @@ class LayoutSpec extends SparkSpec {
     val dst = tmpDir("postpurge")
     Retrieval.writePostingsBucketed(corpus(0 until 20), dst, nBuckets = 4)
     Retrieval.appendToPostings(corpus(20 until 40), dst)
-    Retrieval.tombstonePostings(Seq(18L, 35L, 52L).toDF("doc_id"), dst)
+    BucketStore.tombstone(Seq(18L, 35L, 52L).toDF("doc_id"), dst)
     val (purged, touched) = Retrieval.purgePostingTombstones(spark, dst)
     assert(purged == 3L && touched.nonEmpty)
     assertSorted(dst, "bucket", Seq("term", "doc_id"))

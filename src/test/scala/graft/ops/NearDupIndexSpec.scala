@@ -144,7 +144,7 @@ class NearDupIndexSpec extends SparkSpec {
     // in the parity fixture, so masking is actually exercised
     val dead = corpus.filter(col("doc_id") % 10 === 1).select("doc_id")
     val deadIds = dead.collect().map(_.getLong(0)).toSet
-    assert(NearDupIndex.tombstone(dead, dst) == deadIds.size)
+    assert(BucketStore.tombstone(dead, dst) == deadIds.size)
 
     val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
     def touching(pairs: Array[(Long, Long, Double)]) =
@@ -237,14 +237,14 @@ class NearDupIndexSpec extends SparkSpec {
     val (_, m1, app1) = NearDupIndex.sync(a, b1, dst)
     assert(m1 == comeback.count() && app1 == 0L)
     // the removal is a lazy mask: tombstones stand, nothing purged yet
-    assert(NearDupIndex.tombstones(spark, dst).count() == m1)
+    assert(BucketStore.tombstones(spark, dst).count() == m1)
 
     // second sync re-adds the same ids with the same text — the standing
     // tombstones must be collapsed or the re-added twins stay invisible
     val (p2, m2, app2) = NearDupIndex.sync(b1, a, dst)
     assert(p2 == m1 && m2 == 0L && app2 == comeback.count(),
       s"re-add sync did ($p2, $m2, $app2)")
-    assert(NearDupIndex.tombstones(spark, dst).count() == 0)
+    assert(BucketStore.tombstones(spark, dst).count() == 0)
 
     val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
     val expected = Dedup.minhashLshPairs(docs, maxDocFreq = 10000L)
@@ -273,6 +273,24 @@ class NearDupIndexSpec extends SparkSpec {
     assert(bakN == 0L && bakBuckets.isEmpty)
     assert(new java.io.File(root, bak.getName.stripSuffix(".bak")).exists()
       && !bak.exists(), "crash leftover not restored")
+  }
+
+  test("append after a crashed bucket swap keeps the bucket's old rows through the next purge") {
+    val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val dst = tmp("mh-bak-append")
+    NearDupIndex.writeMinhashLayout(docs.filter(col("doc_id") % 3 =!= 0), dst,
+      nBuckets = 2, maxDocFreq = 10000L)
+    def rows(p: String) = spark.read.parquet(p).count()
+    val (bandsBefore, docsBefore) = (rows(dst), rows(dst + "_docs"))
+    // a purge crashed between live → .bak and fresh → live, in both stores
+    for ((root, part) <- Seq(dst -> "bucket=0", dst + "_docs" -> "dbucket=0"))
+      assert(new java.io.File(root, part).renameTo(new java.io.File(root, part + ".bak")))
+    val report = NearDupIndex.appendToMinhashLayout(docs.filter(col("doc_id") % 3 === 0), dst)
+    assert(report.touchedBuckets.contains(0), "degenerate fixture: the batch missed bucket 0")
+    NearDupIndex.purgeTombstones(spark, dst)
+    // four band rows and one array row per appended doc, nothing lost
+    assert(rows(dst) == bandsBefore + 4 * report.appended)
+    assert(rows(dst + "_docs") == docsBefore + report.appended)
   }
 
   test("append reports cap crossings; rewriteCapCrossed restores fresh-write equality") {

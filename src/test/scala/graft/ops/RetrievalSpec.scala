@@ -45,7 +45,7 @@ class RetrievalSpec extends SparkSpec {
       .select(pmod(conv(substring(md5(col("term")), 1, 13), 16, 10).cast("long"),
         lit(16L)).cast("int"))
       .as[Int].collect().toSeq
-    assert(sparkSide == terms.map(Retrieval.termBucket(_, 16)))
+    assert(sparkSide == terms.map(BucketStore.termBucket(_, 16)))
   }
 
   test("bm25 index deletes: masked probe ≡ survivor rebuild; purge physical; re-run no-op") {
@@ -59,7 +59,7 @@ class RetrievalSpec extends SparkSpec {
     // delete a slice that includes docs HOLDING query terms (so df and
     // rankings must actually move, not just the totals)
     val deadIds = docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"))
-    val nTomb = Retrieval.tombstonePostings(deadIds, dst)
+    val nTomb = BucketStore.tombstone(deadIds, dst)
     assert(nTomb > 0)
     val survivors = docs.filter(col("doc_id") % 5 =!= 0)
     val expect = bm25TopK(survivors, q, k = 20).collect().toSeq
@@ -130,6 +130,24 @@ class RetrievalSpec extends SparkSpec {
     assert(Retrieval.bucketedBm25TopK(spark, dst, q, 20).collect().toSeq ==
       bm25TopK(v3, q, 20).collect().toSeq,
       "re-added docs stayed masked after a lazy removal sync")
+  }
+
+  test("bm25 index append after a crashed bucket swap keeps the bucket's old rows through the next purge") {
+    val docs = graft.Tables.documents(spark, dir)
+    val dst = java.nio.file.Files.createTempDirectory("graft-postings-bak")
+      .toFile.getAbsolutePath + "/idx"
+    Retrieval.writePostingsBucketed(docs.filter(col("doc_id") % 2 === 0), dst, nBuckets = 2)
+    def rows(p: String) = spark.read.parquet(p).count()
+    val (postBefore, dlBefore) = (rows(dst), rows(dst + "_dl"))
+    // a purge crashed between live → .bak and fresh → live, in two stores
+    for ((root, part) <- Seq(dst -> "bucket=0", dst + "_dl" -> "dbucket=0"))
+      assert(new java.io.File(root, part).renameTo(new java.io.File(root, part + ".bak")))
+    val batch = docs.filter(col("doc_id") % 2 =!= 0)
+    val (appended, touched) = Retrieval.appendToPostings(batch, dst)
+    assert(touched.contains(0), "degenerate fixture: the batch missed bucket 0")
+    Retrieval.purgePostingTombstones(spark, dst)
+    assert(rows(dst) == postBefore + appended)
+    assert(rows(dst + "_dl") == dlBefore + batch.count())
   }
 
   test("bm25 index append: equals a scan of the unioned corpus; untouched buckets stable") {

@@ -295,7 +295,7 @@ class PlanSpec extends SparkSpec {
     // posting lists, not the corpus
     val totalParts = new java.io.File(dst).listFiles()
       .count(_.getName.startsWith("bucket="))
-    val queryBuckets = query.map(graft.ops.Retrieval.termBucket(_, 16)).distinct.size
+    val queryBuckets = query.map(graft.ops.BucketStore.termBucket(_, 16)).distinct.size
     val partsRead = tf
       .select(regexp_extract(input_file_name(), "bucket=\\d+", 0))
       .distinct().count()
