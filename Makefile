@@ -43,6 +43,11 @@ test-pin: ## Run only the specs over mode-pinned operators (Pin, standing views,
 test-store: ## Run only the specs over the bucketed index stores (near-dup, postings, bucket swap, crash tests)
 	sbt -batch "testOnly graft.ops.NearDupIndexSpec graft.ops.RetrievalSpec graft.io.LayoutSpec graft.queries.PlanSpec graft.ops.Wave16Spec graft.ops.Wave24Spec graft.ops.Wave40Spec graft.etl.CompactionSwapSpec"
 
+.PHONY: parquet-columns
+parquet-columns: ## Print per-column bytes, share and encodings of a Parquet tree (env: DIR)
+	@test -n "$(DIR)" || { echo "usage: make parquet-columns DIR=<parquet dir>"; exit 2; }
+	python3 tools/parquet_columns.py "$(DIR)"
+
 .PHONY: verify
 verify: ## Dump every declared query at sf0.01 for the DuckDB oracle compare
 	sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"

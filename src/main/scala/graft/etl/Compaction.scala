@@ -24,7 +24,7 @@ object Compaction {
     val rows = spark.read.parquet(root).observe(obs, count(lit(1)).as("rows"))
     swap(spark, root,
       tmp => graft.io.Layout.write(rows, tmp, SaveMode.Overwrite,
-        LogSchema.partitionCols, LogSchema.rowGroupCols),
+        LogSchema.partitionCols, LogSchema.rowGroupCols, LogSchema.noDictionaryCols),
       _.count(), (_: Long) == obs.get("rows").asInstanceOf[Long])
     (before, dataFiles(spark, root))
   }
@@ -51,8 +51,9 @@ object Compaction {
     *   5. validate the NEW root the same way and only then delete the
     *      backup — the old copy is never dropped before the new one has
     *      passed a read.
-    * A backup left by an earlier run whose step 5 failed is the only good
-    * copy, so its presence stops the swap before anything is written.
+    * A backup left by an earlier run whose step 5 failed may be the only
+    * good copy, so its presence stops the swap before anything is written
+    * until [[recover]] has found it equal to the root and dropped it.
     * Returns `measure` of the new root. */
   def swap[A](spark: SparkSession, root: String, write: String => Unit,
               measure: DataFrame => A, ok: A => Boolean): A = {
@@ -61,7 +62,8 @@ object Compaction {
     val tmp = tmpPath(rootPath)
     val backup = backupPath(rootPath)
     require(!fs.exists(backup),
-      s"compaction refused: $backup holds the last validated copy of $root — inspect it first")
+      s"compaction refused: $backup may hold the last validated copy of $root — " +
+        "recover drops it if it holds the same rows as the root; otherwise inspect it")
     write(tmp.toString)
     val fresh = measure(spark.read.parquet(tmp.toString))
     require(ok(fresh), s"compaction aborted: $tmp read back $fresh — original untouched")
@@ -78,8 +80,11 @@ object Compaction {
 
   /** Restore `root` after a crash mid-[[swap]]. Handles every
     * intermediate state:
-    *   - root present → nothing to do (drop any stray tmp; a leftover
-    *     backup means the final validation never passed — keep it);
+    *   - root present → drop any stray tmp; a leftover backup means the
+    *     final validation never passed: it is dropped if it holds the
+    *     same rows as root ([[sameRows]]), so a validation that failed on
+    *     a sound tree does not block every later compaction, and kept
+    *     otherwise (a root that differs, or either side unreadable);
     *   - root missing, backup present → the crash hit between the two
     *     renames: rename backup back (the validated tmp, if also present,
     *     is redundant and dropped).
@@ -91,6 +96,20 @@ object Compaction {
     val backup = backupPath(rootPath)
     if (!fs.exists(rootPath) && fs.exists(backup)) fs.rename(backup, rootPath)
     if (fs.exists(rootPath) && fs.exists(tmp)) fs.delete(tmp, true)
+    if (fs.exists(rootPath) && fs.exists(backup) &&
+        sameRows(spark, backup.toString, root)) fs.delete(backup, true)
     fs.exists(rootPath)
   }
+
+  /** Whether the trees at `a` and `b` hold the same multiset of rows: the
+    * same columns, the same count and the same order-free sum of per-row
+    * `xxhash64`s. False if either cannot be read. */
+  private def sameRows(spark: SparkSession, a: String, b: String): Boolean =
+    scala.util.Try {
+      val (da, db) = (spark.read.parquet(a), spark.read.parquet(b))
+      val cols = db.columns.toSeq.map(col)
+      def digest(df: DataFrame) =
+        df.select(count(lit(1)), sum(xxhash64(cols: _*).cast("decimal(38,0)"))).head()
+      da.columns.sorted.sameElements(db.columns.sorted) && digest(da) == digest(db)
+    }.getOrElse(false)
 }

@@ -35,11 +35,23 @@ object ExportJob {
   /** Partitioned, clustered, Snappy parquet sink (reference
     * s3access/parquet.py:31-112): one file per partition combo, clustered
     * on `rowGroupCols` — the Spark equivalent of the reference's
-    * per-key-combo `write_table` loop (parquet.py:20-21). The sort rule is
-    * in [[graft.io.Layout.write]]'s scaladoc. */
+    * per-key-combo `write_table` loop (parquet.py:20-21). The sort rule and
+    * the page encoding are in [[graft.io.Layout.write]]'s scaladoc; the
+    * columns written without a dictionary are
+    * [[LogSchema.noDictionaryCols]]. */
   def write(df: DataFrame, dst: String): Unit =
     graft.io.Layout.write(df, dst, SaveMode.Append,
-      LogSchema.partitionCols, LogSchema.rowGroupCols)
+      LogSchema.partitionCols, LogSchema.rowGroupCols, LogSchema.noDictionaryCols)
+
+  /** One exported hour's rows and, among them, the malformed inputs:
+    * `partial` lines had fewer than 24 tokens (no `tlsversion`),
+    * `badTime` had an unparseable request time (no `ts`), `badIp` a
+    * remote IP that is not an IPv4 literal (no `remoteip_int`). */
+  case class HourCounts(rows: Long, partial: Long, badTime: Long, badIp: Long) {
+    def marker(hour: String): String =
+      s"exported hour=$hour rows=$rows partial=$partial bad_time=$badTime bad_ip=$badIp"
+    def json: String = s""""rows":$rows,"partial":$partial,"bad_time":$badTime,"bad_ip":$badIp"""
+  }
 
   /** Idempotency markers (reference cmd/export.py:158-168, 319-324):
     * presence of `{trackingDst}/{hour}` means the hour is already done. */
@@ -136,30 +148,37 @@ object ExportJob {
     * Returns number of rows written, or -1 if skipped (marker present or
     * no input files). */
   def runHour(spark: SparkSession, src: String, dst: String,
-              trackingDst: String, hour: String): Long = {
-    if (Tracking.done(spark, trackingDst, hour)) return -1L
-    readHour(spark, src, hour) match {
-      case None => -1L
-      case Some(lines) =>
-        val parsed = Enrich.parseLines(lines)
-        // observe() counts the rows that flow through THIS write — no
-        // post-write re-scan of dst (which accumulates across hours under
-        // SaveMode.Append: a year in, that scan reads ~8,760 hours to
-        // produce one marker line, and its count is cumulative, not
-        // per-hour). The metric is only published once the write commits,
-        // so the marker still reflects committed rows.
-        val obs = org.apache.spark.sql.Observation(s"graft-export-$hour")
-        write(parsed.observe(obs, count(lit(1)).as("rows")), dst)
-        val n = obs.get("rows").asInstanceOf[Long]
-        // Reference file-name parity (s3access/parquet.py:89-92): each
-        // partition dir's single file becomes
-        // {bucket}-{op}-{y}-{m}-{d}-{h}.parquet. Runs before the marker so
-        // a crash mid-rename leaves the hour unmarked.
-        renameToReferenceLayout(spark, dst, Some(hour))
-        Tracking.mark(spark, trackingDst, hour, s"exported hour=$hour rows=$n")
-        n
+              trackingDst: String, hour: String): Long =
+    exportHour(spark, src, dst, trackingDst, hour).fold(-1L)(_.rows)
+
+  /** [[runHour]], returning the hour's [[HourCounts]], or None if skipped. */
+  def exportHour(spark: SparkSession, src: String, dst: String,
+                 trackingDst: String, hour: String): Option[HourCounts] =
+    if (Tracking.done(spark, trackingDst, hour)) None
+    else readHour(spark, src, hour).map { lines =>
+      val parsed = Enrich.parseLines(lines)
+      // observe() counts the rows that flow through THIS write — no
+      // post-write re-scan of dst (which accumulates across hours under
+      // SaveMode.Append: a year in, that scan reads ~8,760 hours to
+      // produce one marker line, and its count is cumulative, not
+      // per-hour). The metrics are only published once the write commits,
+      // so the marker still reflects committed rows.
+      val obs = org.apache.spark.sql.Observation(s"graft-export-$hour")
+      write(parsed.observe(obs, count(lit(1)).as("rows"),
+        count_if(col("tlsversion").isNull).as("partial"),
+        count_if(col("ts").isNull).as("bad_time"),
+        count_if(col("remoteip_int").isNull).as("bad_ip")), dst)
+      val m = obs.get
+      def n(k: String) = m(k).asInstanceOf[Long]
+      val counts = HourCounts(n("rows"), n("partial"), n("bad_time"), n("bad_ip"))
+      // Reference file-name parity (s3access/parquet.py:89-92): each
+      // partition dir's single file becomes
+      // {bucket}-{op}-{y}-{m}-{d}-{h}.parquet. Runs before the marker so
+      // a crash mid-rename leaves the hour unmarked.
+      renameToReferenceLayout(spark, dst, Some(hour))
+      Tracking.mark(spark, trackingDst, hour, counts.marker(hour))
+      counts
     }
-  }
 
   /** Job-level watchdog — the analogue of the reference's `TIMEOUT` env
     * (cmd/export.py:259). Documented divergence: the reference passes it
@@ -203,9 +222,10 @@ object ExportJob {
     val watchdog = startWatchdog(spark, sys.env.getOrElse("TIMEOUT", "0").toInt)
     try {
       val t0 = System.nanoTime()
-      val n = runHour(spark, src, dst, tracking, hour)
+      val counts = exportHour(spark, src, dst, tracking, hour)
       val secs = (System.nanoTime() - t0) / 1e9
-      println(f"""{"hour":"$hour","rows":$n,"job_sec":$secs%.2f}""")
+      val fields = counts.fold(""""rows":-1""")(_.json)
+      println(f"""{"hour":"$hour",$fields,"job_sec":$secs%.2f}""")
     } finally {
       watchdog.foreach(_.interrupt())
       spark.stop()

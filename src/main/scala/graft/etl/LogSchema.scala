@@ -53,4 +53,17 @@ object LogSchema {
     * within write tasks on these gives tight Parquet min/max stats for the
     * common predicates. */
   val rowGroupCols: Seq[String] = Seq("requester", "remoteip_int", "is_assumed_role", "is_user")
+
+  /** Columns written without a Parquet dictionary (`Layout.write`'s
+    * `noDictionary`); every other column keeps one, and falls back to a
+    * delta encoding where it does not pay:
+    *   - `requestid` is unique per request by AWS's definition, so its
+    *     dictionary holds every value of the file and is always dropped;
+    *   - `ts` is epoch seconds within one hour partition: its deltas fit
+    *     in 13 bits, against a 12-bit dictionary index plus an 8-byte
+    *     entry per distinct second. The two are close in size, so the
+    *     dictionary saves no bytes worth hashing every value for.
+    * `hostid`, `remoteip`, `remoteip_int` and `objectsize` are left to
+    * Parquet's own fallback: real logs can repeat them. */
+  val noDictionaryCols: Seq[String] = Seq("requestid", "ts")
 }

@@ -23,13 +23,24 @@ object Layout {
     *     the one Spark builds for a bare repartitioned `partitionBy`.
     * Row-group stats only skip for a reader that pushes a value filter on
     * `clusterCols` (`term IN (...)`); a reader that joins on them gains
-    * nothing from the sort, so such stores pass `Nil`. */
+    * nothing from the sort, so such stores pass `Nil`.
+    *
+    * Pages are Parquet v2 data pages. A column whose dictionary does not
+    * pay (too large, or no smaller than the values) then falls back to
+    * DELTA_BINARY_PACKED (integers) or DELTA_BYTE_ARRAY (strings) instead
+    * of v1's PLAIN, which stores a 32-bit IP or an object size as an
+    * 8-byte long. Dictionaries stay on except for the columns named in
+    * `noDictionary`, for which the writer would hash every value into a
+    * dictionary it then throws away or that saves nothing. */
   def write(df: DataFrame, path: String, mode: SaveMode,
-            partitionCols: Seq[String], clusterCols: Seq[String]): Unit =
+            partitionCols: Seq[String], clusterCols: Seq[String],
+            noDictionary: Seq[String] = Nil): Unit =
     df.repartition(partitionCols.map(col): _*)
       .sortWithinPartitions((partitionCols ++ clusterCols).map(col): _*)
       .write.mode(mode)
       .option("compression", "snappy")
+      .option("parquet.writer.version", "v2")
+      .options(noDictionary.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap)
       .partitionBy(partitionCols: _*)
       .parquet(path)
 }

@@ -87,6 +87,49 @@ class CompactionSwapSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(backup.resolve("part-0.parquet"))) == "last good copy")
   }
 
+  /** A one-hour log store at `<base>/out` exported from `lines`. */
+  private def exported(base: String, lines: String*): String = {
+    val src = s"$base/in"
+    Files.createDirectories(java.nio.file.Paths.get(src))
+    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-01-00-RUN1"), lines.mkString("\n").getBytes)
+    ExportJob.write(Enrich.parseLines(ExportJob.readHour(spark, src, "2021-07-18-05").get), s"$base/out")
+    s"$base/out"
+  }
+
+  /** Copy the tree at `from` to `to`, as a swap whose final validation
+    * failed leaves it. */
+  private def copyTree(from: String, to: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(from).getFileSystem(conf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, new Path(from), fs, new Path(to), false, conf))
+  }
+
+  test("recover drops a backup that holds the root's rows, and the next compaction runs") {
+    val base = Files.createTempDirectory("graft-swap-equal").toFile.getAbsolutePath
+    val dst = exported(base, Fixtures.happyLine, Fixtures.dashLine, Fixtures.roleLine)
+    copyTree(dst, dst + ".pre-compact")
+    def rows() = spark.read.parquet(dst).orderBy("requestid", "ts").collect().toSeq
+    val before = rows()
+    assert(Compaction.recover(spark, dst))
+    assert(!Files.exists(java.nio.file.Paths.get(dst + ".pre-compact")))
+    Compaction.compact(spark, dst)
+    assert(rows() == before)
+  }
+
+  test("recover keeps a backup whose rows differ from the root's, and compaction still refuses") {
+    val base = Files.createTempDirectory("graft-swap-differ").toFile.getAbsolutePath
+    val dst = exported(base, Fixtures.happyLine, Fixtures.dashLine)
+    // same count and columns, one row's requestid changed
+    val other = exported(s"$base/other", Fixtures.happyLine, Fixtures.dashLine.replace("891CE47D2", "891CE47D3"))
+    assert(spark.read.parquet(other).count() == spark.read.parquet(dst).count())
+    copyTree(other, dst + ".pre-compact")
+    val backupFiles = parquetFiles(dst + ".pre-compact").sorted
+    assert(Compaction.recover(spark, dst))
+    assert(parquetFiles(dst + ".pre-compact").sorted == backupFiles)
+    val e = intercept[IllegalArgumentException](Compaction.compact(spark, dst))
+    assert(e.getMessage.contains("compaction refused"), e)
+  }
+
   test("compactSegments: crash between the swap renames, recover restores every sum") {
     import spark.implicits._
     val root = s"${crashRoot("segments")}/idx_df"

@@ -66,7 +66,7 @@ class ExportJobSpec extends SparkSpec {
     assert(spark.read.parquet(dst).count() == 4)
     val markerPath = java.nio.file.Paths.get(s"$tracking/2021-07-18-06")
     val marker = new String(Files.readAllBytes(markerPath), "UTF-8")
-    assert(marker == "exported hour=2021-07-18-06 rows=1")
+    assert(marker == "exported hour=2021-07-18-06 rows=1 partial=0 bad_time=0 bad_ip=0")
 
     // TIMEOUT watchdog: 0 disables; an interrupted watchdog dies without
     // firing (the halt path is exercised in packaging tests, not in-JVM)
@@ -80,6 +80,26 @@ class ExportJobSpec extends SparkSpec {
       .select(ExportJob.fileTime(input_file_name()).cast("string"))
       .collect()(0).getString(0)
     assert(ft == "2021-07-18 05:00:12")
+  }
+
+  test("malformed-input counters: truncated, bad-time and bad-IP lines reach the marker") {
+    val base = Files.createTempDirectory("graft-malformed").toFile.getAbsolutePath
+    val src = s"$base/in"; val tracking = s"$base/track"
+    new java.io.File(src).mkdirs()
+    val lines = Seq(
+      Fixtures.happyLine,
+      // 22 tokens: the line stops before endpoint and tlsversion
+      Fixtures.happyLine.stripSuffix(" awsexamplebucket1.s3.us-west-2.amazonaws.com TLSv1.2"),
+      Fixtures.happyLine.replace("18/Jul/2021", "18/Xyz/2021"),
+      Fixtures.happyLine.replace("192.0.2.3", "not-an-ip"))
+    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-ABCDEF0123456789"),
+      lines.mkString("\n").getBytes)
+    val counts = ExportJob.exportHour(spark, src, s"$base/out", tracking, "2021-07-18-05")
+    assert(counts.contains(ExportJob.HourCounts(rows = 4, partial = 1, badTime = 1, badIp = 1)), counts)
+    val marker = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$tracking/2021-07-18-05")), "UTF-8")
+    assert(marker == "exported hour=2021-07-18-05 rows=4 partial=1 bad_time=1 bad_ip=1")
+    assert(counts.get.json == "\"rows\":4,\"partial\":1,\"bad_time\":1,\"bad_ip\":1")
+    assert(ExportJob.exportHour(spark, src, s"$base/out", tracking, "2021-07-18-05").isEmpty)
   }
 
   test("each exported file is sorted on rowGroupCols") {
