@@ -43,6 +43,10 @@ test-pin: ## Run only the specs over mode-pinned operators (Pin, standing views,
 test-store: ## Run only the specs over the bucketed index stores (near-dup, postings, bucket swap, crash tests)
 	sbt -batch "testOnly graft.ops.NearDupIndexSpec graft.ops.RetrievalSpec graft.io.LayoutSpec graft.queries.PlanSpec graft.ops.Wave16Spec graft.ops.Wave24Spec graft.ops.Wave40Spec graft.etl.CompactionSwapSpec"
 
+.PHONY: test-functions
+test-functions: ## Run only the specs over the engine SQL functions (argument contract, parse kernels, sketches, top_k)
+	sbt -batch "testOnly graft.functions.FunctionContractSpec graft.functions.ParseSpec graft.QuerySessionSpec graft.functions.HyperLogLogSpec graft.functions.CountMinSketchSpec graft.ops.RollupSpec graft.ops.Wave7Spec graft.ops.Wave20Spec graft.ops.Wave24Spec graft.ops.Wave29Spec graft.ops.Wave31Spec graft.ops.Wave32Spec"
+
 .PHONY: parquet-columns
 parquet-columns: ## Print per-column bytes, share and encodings of a Parquet tree (env: DIR)
 	@test -n "$(DIR)" || { echo "usage: make parquet-columns DIR=<parquet dir>"; exit 2; }

@@ -340,12 +340,4 @@ object QuerySession {
     graft.ops.Rollup.q84RollupMaintenance(spark, sfDir)
       .createOrReplaceTempView("daily_rollup")
   }
-
-  /** Everything: the cheap views plus the materialized ones. */
-  def registerAllViews(spark: SparkSession, sfDir: String): Unit = {
-    registerPipelineViews(spark, sfDir)
-    registerMaterializedViews(spark, sfDir)
-  }
-
-  def sql(spark: SparkSession, query: String): DataFrame = spark.sql(query)
 }

@@ -85,19 +85,18 @@ object ExportJob {
     // written — a year of appends is ~8,760 hours of dirs listed to
     // rename a handful of new files. Partition dir values are unpadded
     // ints (year=2021/month=7/...), so strip the HOUR string's zero pads.
-    val hourGlob = hour match {
-      case Some(h) =>
-        val Array(y, mo, d, hh) = h.split("-").map(_.toInt)
-        s"/bucket_name=*/operation=*/year=$y/month=$mo/day=$d/hour=$hh/part-*.parquet"
-      case None =>
-        "/bucket_name=*/operation=*/year=*/month=*/day=*/hour=*/part-*.parquet"
+    val hourValues = hour.fold(Map.empty[String, String]) { h =>
+      val Array(y, mo, d, hh) = h.split("-").map(_.toInt.toString)
+      Map("year" -> y, "month" -> mo, "day" -> d, "hour" -> hh)
     }
-    val parts = Option(fs.globStatus(new Path(dst + hourGlob))).getOrElse(Array.empty)
+    val glob = LogSchema.partitionCols.map(c => s"$c=${hourValues.getOrElse(c, "*")}")
+      .mkString("/", "/", "/part-*.parquet")
+    val parts = Option(fs.globStatus(new Path(dst + glob))).getOrElse(Array.empty)
     parts.map { st =>
       val dir = st.getPath.getParent
       // dir chain: .../bucket_name=B/operation=O/year=Y/month=M/day=D/hour=H
-      val values = Iterator.iterate(dir)(_.getParent).take(6).toSeq.reverse
-        .map(_.getName.split("=", 2)(1))
+      val values = Iterator.iterate(dir)(_.getParent).take(LogSchema.partitionCols.size)
+        .toSeq.reverse.map(_.getName.split("=", 2)(1))
       val target = new Path(dir, values.mkString("-") + ".parquet")
       if (st.getPath == target) 1
       else {

@@ -3,8 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
@@ -91,12 +90,13 @@ case class BloomAgg(
     k: Int = 6,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression]
+  with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_agg requires BIGINT, got ${child.dataType.sql}")
+  require(numBits >= 64 && k >= 1,
+    s"bloom_agg: need numBits >= 64 and k >= 1, got ($numBits, $k)")
+
+  override def inputTypes: Seq[DataType] = Seq(LongType)
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
@@ -138,13 +138,9 @@ case class BloomAgg(
   * definitely absent; true means present or a false positive. Stays in
   * whole-stage codegen (static call, no boxing in the hot loop). */
 case class BloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain requires (BINARY, BIGINT), got (${left.dataType.sql}, ${right.dataType.sql})")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType, LongType)
 
   override def nullSafeEval(bloom: Any, key: Any): Any =
     BloomFormat.mightContain(bloom.asInstanceOf[Array[Byte]], key.asInstanceOf[Long])

@@ -3,8 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
@@ -100,12 +99,13 @@ case class CountMinSketchAgg(
     width: Int = 2048,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression]
+  with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cms_sketch requires STRING, got ${child.dataType.sql}")
+  require(depth >= 1 && width >= 1,
+    s"cms_sketch: depth, width must be >= 1, got depth=$depth, width=$width")
+
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
@@ -152,13 +152,10 @@ case class CountMinSketchAgg(
 /** `cms_estimate(sketch, item)`: point-frequency estimate from a
   * `cms_sketch` binary — min over the sketch's rows of the item's
   * bucket counter. Never underestimates. */
-case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpression {
+case class CmsEstimate(left: Expression, right: Expression)
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cms_estimate requires (BINARY, STRING), got (${left.dataType.sql}, ${right.dataType.sql})")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
 
   override def nullSafeEval(sketch: Any, item: Any): Any =
     CountMinSketchFormat.estimate(
@@ -178,13 +175,10 @@ case class CmsEstimate(left: Expression, right: Expression) extends BinaryExpres
 /** `cms_join_size(sketchA, sketchB)`: equi-join cardinality estimate —
   * min-over-rows counter inner product of two same-shape `cms_sketch`
   * binaries. One-sided: never underestimates the true join size. */
-case class CmsJoinSize(left: Expression, right: Expression) extends BinaryExpression {
+case class CmsJoinSize(left: Expression, right: Expression)
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cms_join_size requires (BINARY, BINARY), got (${left.dataType.sql}, ${right.dataType.sql})")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
 
   override def nullSafeEval(a: Any, b: Any): Any =
     CountMinSketchFormat.joinSize(

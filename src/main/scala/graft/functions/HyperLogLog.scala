@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
@@ -96,14 +95,12 @@ case class HllAgg(
     p: Int = 12,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression]
+  with ExpectsInputTypes {
 
   require(p >= 4 && p <= 18, s"hll_sketch: p in [4, 18], got $p")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hll_sketch requires STRING, got ${child.dataType.sql}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
@@ -145,12 +142,10 @@ case class HllUnionAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression]
+  with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hll_union requires BINARY, got ${child.dataType.sql}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
@@ -192,12 +187,9 @@ case class HllUnionAgg(
 
 /** `hll_estimate(sketch)`: cardinality estimate from an `hll_sketch` /
   * `hll_union` binary. */
-case class HllEstimate(child: Expression) extends UnaryExpression {
+case class HllEstimate(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hll_estimate requires BINARY, got ${child.dataType.sql}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
 
   override def nullSafeEval(sketch: Any): Any =
     HllFormat.estimate(sketch.asInstanceOf[Array[Byte]])

@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TimeZoneAwareExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{DateTimeConstants, DateTimeUtils, LegacyDateFormats, TimestampFormatter}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,13 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Splits one S3 access-log line into its fields.
   * Reference: s3access/serializer.py:5-10. Output never contains nulls
   * (absent fields arrive as literal "-" tokens). */
-case class TokenizeS3Log(child: Expression) extends UnaryExpression {
+case class TokenizeS3Log(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"tokenize_s3_log requires STRING, got ${child.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     S3LogParse.tokenize(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -44,14 +41,10 @@ case class TokenizeS3Log(child: Expression) extends UnaryExpression {
   * (`S3LogParse.requestTimeUtc`); every other token, and every token in
   * another zone, goes through Spark's own `TimestampFormatter`. */
 case class S3RequestTime(child: Expression, timeZoneId: Option[String] = None)
-  extends UnaryExpression with TimeZoneAwareExpression {
+  extends UnaryExpression with TimeZoneAwareExpression with ExpectsInputTypes {
   override def dataType: DataType = S3LogParse.RequestTimeType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"s3_request_time requires STRING, got ${child.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def withTimeZone(tz: String): S3RequestTime = copy(timeZoneId = Option(tz))
 
   @transient private lazy val utc = zoneId.normalized() == java.time.ZoneOffset.UTC
@@ -101,14 +94,10 @@ case class S3RequestTime(child: Expression, timeZoneId: Option[String] = None)
   * → NULL, never an error: one corrupt line must not kill a 100 TB job
   * (the reference does crash there — divergence as with IPv4, SURVEY
   * §1.4#5). */
-case class DashToLong(child: Expression) extends UnaryExpression {
+case class DashToLong(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"dash_to_long requires STRING, got ${child.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def nullSafeEval(input: Any): Any = {
     val r = S3LogParse.dashToLong(input.asInstanceOf[UTF8String])
     if (r >= 0L) java.lang.Long.valueOf(r) else null
@@ -127,14 +116,11 @@ case class DashToLong(child: Expression) extends UnaryExpression {
   * where invalid input kills the run (cmd/export.py:109-111). Default mode
   * returns NULL for invalid input (hostile-input-safe at 100 TB scale);
   * `strict = true` reproduces the reference's fail-fast for parity tests. */
-case class Ipv4ToLong(child: Expression, strict: Boolean = false) extends UnaryExpression {
+case class Ipv4ToLong(child: Expression, strict: Boolean = false)
+  extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"ipv4_to_long requires STRING, got ${child.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def nullSafeEval(input: Any): Any = {
     val r = S3LogParse.ipv4ToLong(input.asInstanceOf[UTF8String])
     if (r >= 0L) java.lang.Long.valueOf(r)
@@ -161,13 +147,9 @@ case class Ipv4ToLong(child: Expression, strict: Boolean = false) extends UnaryE
 /** 64-bit polynomial rolling hash of a string (document-fingerprint
   * primitive; see S3LogParse.rollingHash64). Codegen'd; deterministic
   * across partitions/engines-with-this-library. */
-case class RollingHash64(child: Expression) extends UnaryExpression {
+case class RollingHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash64 requires STRING, got ${child.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     S3LogParse.rollingHash64(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -183,17 +165,9 @@ case class RollingHash64(child: Expression) extends UnaryExpression {
   * HOF chain in the ANN hot path while producing bit-identical values
   * (same accumulation order; asserted in ParseSpec). */
 case class CosineSimilarity(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = DoubleType
-  override def checkInputDataTypes() = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cosine_similarity requires ARRAY<FLOAT> inputs, got ${left.dataType.sql}, ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def nullSafeEval(a: Any, b: Any): Any =
     VectorOps.cosineFloat(
       a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
@@ -212,17 +186,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * into any join condition or filter that references it (measured ~1.6 s
   * of flat overhead on q47's verify filter vs ~0 for this expression). */
 case class IntDot(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"int_dot requires ARRAY<BIGINT> inputs, got ${left.dataType.sql}, ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def nullSafeEval(a: Any, b: Any): Any =
     VectorOps.dotLong(
       a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
@@ -240,17 +206,10 @@ case class IntDot(left: Expression, right: Expression)
   * hash/tie contract and the measured win over the HOF chain). k and w
   * are plan-time constants — baked into the generated call site. */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = {
-    val ok = child.dataType match {
-      case ArrayType(StringType, _) => k >= 1 && w >= 1
-      case _ => false
-    }
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"winnow_fingerprints requires ARRAY<STRING> and k, w >= 1; got ${child.dataType.sql}, k=$k, w=$w")
-  }
+  require(k >= 1 && w >= 1, s"winnow_fingerprints: k, w must be >= 1, got k=$k, w=$w")
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def nullSafeEval(input: Any): Any =
     WinnowOps.fingerprints(
       input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k, w)
@@ -268,17 +227,9 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
   * one call per (vector, centroid) pair instead of an interpreted
   * expression-tree fold. */
 case class IntSqDist(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"int_sqdist requires ARRAY<BIGINT> inputs, got ${left.dataType.sql}, ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def nullSafeEval(a: Any, b: Any): Any =
     VectorOps.sqDistLong(
       a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
@@ -296,23 +247,17 @@ case class IntSqDist(left: Expression, right: Expression)
   * plan-time constant; each side may be array<float> or array<double>
   * — the getters are baked into the generated call. */
 case class DecDot(left: Expression, right: Expression, scale: Int)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
   private def elemIsDouble(e: Expression): Boolean = e.dataType match {
     case ArrayType(DoubleType, _) => true
     case _ => false
   }
-  private def elemOk(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
+  require(scale >= 0 && scale <= 18, s"dec_dot: scale must be in [0, 18], got $scale")
+  override def inputTypes = {
+    val elems = Bridge.anyOf(ArrayType(FloatType), ArrayType(DoubleType))
+    Seq(elems, elems)
   }
   override def dataType: DataType = DecimalType(28, scale)
-  override def checkInputDataTypes() = {
-    if (elemOk(left) && elemOk(right) && scale >= 0 && scale <= 18)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"dec_dot requires ARRAY<FLOAT|DOUBLE> inputs and 0 <= scale <= 18; " +
-        s"got ${left.dataType.sql}, ${right.dataType.sql}, scale=$scale")
-  }
   override def nullable: Boolean = true
   override def nullSafeEval(a: Any, b: Any): Any =
     DecimalOps.decDot(
@@ -337,14 +282,10 @@ case class DecDot(left: Expression, right: Expression, scale: Int)
   * has the semantics and the suffix-array comparison). L is a
   * plan-time constant baked into the generated call site. */
 case class SubstrWindowHashes(child: Expression, win: Int)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType && win >= 1)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"substr_window_hashes requires STRING and L >= 1; got ${child.dataType.sql}, L=$win")
-  }
+  require(win >= 1, s"substr_window_hashes: L must be >= 1, got $win")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     TextWindowOps.windowHashes(input.asInstanceOf[UTF8String], win)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -359,17 +300,10 @@ case class SubstrWindowHashes(child: Expression, win: Int)
   * over the HOF chain). n and the distinct flag are plan-time
   * constants baked into the generated call site. */
 case class WordNGrams(child: Expression, n: Int, distinct: Boolean)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes() = {
-    val ok = child.dataType match {
-      case ArrayType(StringType, _) => n >= 1
-      case _ => false
-    }
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"word_ngrams requires ARRAY<STRING> and n >= 1; got ${child.dataType.sql}, n=$n")
-  }
+  require(n >= 1, s"word_ngrams: n must be >= 1, got $n")
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def nullSafeEval(input: Any): Any =
     NGramOps.ngrams(
       input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n, distinct)
@@ -385,15 +319,11 @@ case class WordNGrams(child: Expression, n: Int, distinct: Boolean)
   * semantics and complexity contract). The pattern list is a plan-time
   * constant; the built automaton ships as a codegen reference object. */
 case class AcCounts(child: Expression, patterns: Seq[String])
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType && patterns.nonEmpty && patterns.forall(_.nonEmpty))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"ac_counts requires STRING and >= 1 non-empty literal patterns; " +
-        s"got ${child.dataType.sql}, ${patterns.size} patterns")
-  }
+  require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
+    s"ac_counts: needs >= 1 non-empty pattern, got ${patterns.size} patterns")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   @transient private lazy val ac = AhoCorasick.build(patterns)
   override def nullSafeEval(input: Any): Any =
     ac.countsAll(input.asInstanceOf[UTF8String])

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -266,14 +266,9 @@ object Bpe {
     * applier rides the generated class as a reference object; per row
     * it is one virtual call into the memoized merge kernel). */
   case class BpeCount(child: Expression, merges: Array[(String, String)])
-      extends UnaryExpression {
+      extends UnaryExpression with ExpectsInputTypes {
     override def dataType: DataType = LongType
-    override def checkInputDataTypes() = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bpe_count requires STRING, got ${child.dataType.sql}")
-    }
+    override def inputTypes: Seq[DataType] = Seq(StringType)
     @transient private lazy val applier = new Applier(merges)
     override def nullSafeEval(input: Any): Any =
       applier.countText(input.asInstanceOf[UTF8String])
@@ -296,16 +291,11 @@ object Bpe {
     * consumes. Same codegen shape as [[BpeCount]] — the encoder rides
     * the generated class as a reference object. */
   case class BpeIds(child: Expression, merges: Array[(String, String)],
-                    vocab: Array[String]) extends UnaryExpression {
+                    vocab: Array[String]) extends UnaryExpression with ExpectsInputTypes {
     override def dataType: DataType =
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.IntegerType, containsNull = false)
-    override def checkInputDataTypes() = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bpe_ids requires STRING, got ${child.dataType.sql}")
-    }
+    override def inputTypes: Seq[DataType] = Seq(StringType)
     @transient private lazy val encoder = new IdEncoder(merges, vocab)
     override def nullSafeEval(input: Any): Any =
       encoder.idsText(input.asInstanceOf[UTF8String])

@@ -2,8 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -82,16 +81,16 @@ object TopKPerGroup {
       k: Int,
       mutableAggBufferOffset: Int = 0,
       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKBuffer] with BinaryLike[Expression] {
+    extends TypedImperativeAggregate[TopKBuffer] with BinaryLike[Expression]
+    with ExpectsInputTypes {
+
+    // the buffer allocates Array(2 * k): k <= 0 would crash inside a task
+    require(k >= 1, s"top_k: k must be >= 1, got $k")
 
     override def left: Expression = score
     override def right: Expression = id
 
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (score.dataType == DoubleType && id.dataType == LongType)
-        TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"top_k requires (DOUBLE, BIGINT), got (${score.dataType.sql}, ${id.dataType.sql})")
+    override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType)
 
     override def dataType: DataType = ArrayType(
       StructType(Seq(StructField("score", DoubleType, nullable = false),

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -288,14 +288,9 @@ object Unigram {
 
   /** Codegen'd unigram token-ID encoding (stringified ids). */
   case class UnigramIdsStr(child: Expression, pieces: Array[String],
-                           logp12s: Array[Long]) extends UnaryExpression {
+                           logp12s: Array[Long]) extends UnaryExpression with ExpectsInputTypes {
     override def dataType: DataType = StringType
-    override def checkInputDataTypes() = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"unigram_ids requires STRING, got ${child.dataType.sql}")
-    }
+    override def inputTypes: Seq[DataType] = Seq(StringType)
     @transient private lazy val seg = new Segmenter(pieces, logp12s)
     override def nullSafeEval(input: Any): Any =
       seg.idsText(input.asInstanceOf[UTF8String])
@@ -315,14 +310,9 @@ object Unigram {
 
   /** Codegen'd piece count (LongType). */
   case class UnigramCount(child: Expression, pieces: Array[String],
-                          logp12s: Array[Long]) extends UnaryExpression {
+                          logp12s: Array[Long]) extends UnaryExpression with ExpectsInputTypes {
     override def dataType: DataType = org.apache.spark.sql.types.LongType
-    override def checkInputDataTypes() = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"unigram_count requires STRING, got ${child.dataType.sql}")
-    }
+    override def inputTypes: Seq[DataType] = Seq(StringType)
     @transient private lazy val seg = new Segmenter(pieces, logp12s)
     override def nullSafeEval(input: Any): Any =
       seg.countText(input.asInstanceOf[UTF8String])
@@ -337,14 +327,9 @@ object Unigram {
 
   /** Codegen'd total fixed-point negative log-likelihood (LongType). */
   case class UnigramNll12(child: Expression, pieces: Array[String],
-                          logp12s: Array[Long]) extends UnaryExpression {
+                          logp12s: Array[Long]) extends UnaryExpression with ExpectsInputTypes {
     override def dataType: DataType = org.apache.spark.sql.types.LongType
-    override def checkInputDataTypes() = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"unigram_nll12 requires STRING, got ${child.dataType.sql}")
-    }
+    override def inputTypes: Seq[DataType] = Seq(StringType)
     @transient private lazy val seg = new Segmenter(pieces, logp12s)
     override def nullSafeEval(input: Any): Any =
       seg.nll12Text(input.asInstanceOf[UTF8String])

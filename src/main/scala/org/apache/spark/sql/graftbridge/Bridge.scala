@@ -4,6 +4,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{DataType, TypeCollection}
 
 /** Column ↔ Expression bridge. Spark 4 made these conversions
   * `private[sql]` (Connect refactor); an extension library reaches them
@@ -12,6 +13,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An `ExpectsInputTypes` input type that accepts any of `types`;
+    * `TypeCollection` is `private[sql]`. */
+  def anyOf(types: DataType*) = TypeCollection(types: _*)
 
   /** Blocks until every listener event posted so far has been delivered;
     * the listener bus is `private[spark]`. */
