@@ -28,8 +28,8 @@ test: ## Run the ScalaTest suite
 	sbt -batch test
 
 .PHONY: test-etl
-test-etl: ## Run only the export-path specs (parse, export, write layout, local fs, compaction, sources, streaming)
-	sbt -batch "testOnly graft.functions.ParseSpec graft.etl.ExportJobSpec graft.io.LayoutSpec graft.io.LocalFsSpec graft.etl.CompactionSpec graft.etl.CompactionSwapSpec graft.sources.SourcesSpec graft.streaming.StreamingSpec"
+test-etl: ## Run only the export-path specs (parse, export, write layout, local fs, compaction, streaming)
+	sbt -batch "testOnly graft.functions.ParseSpec graft.etl.ExportJobSpec graft.io.LayoutSpec graft.io.LocalFsSpec graft.etl.CompactionSpec graft.etl.CompactionSwapSpec graft.streaming.StreamingSpec"
 
 .PHONY: test-stream
 test-stream: ## Run only the streaming specs (driver, streamed gates q152/q169/q256, Diag profile)
@@ -46,6 +46,10 @@ test-store: ## Run only the specs over the bucketed index stores (near-dup, post
 .PHONY: test-functions
 test-functions: ## Run only the specs over the engine SQL functions (argument contract, parse kernels, sketches, top_k)
 	sbt -batch "testOnly graft.functions.FunctionContractSpec graft.functions.ParseSpec graft.QuerySessionSpec graft.functions.HyperLogLogSpec graft.functions.CountMinSketchSpec graft.ops.RollupSpec graft.ops.Wave7Spec graft.ops.Wave20Spec graft.ops.Wave24Spec graft.ops.Wave29Spec graft.ops.Wave31Spec graft.ops.Wave32Spec"
+
+.PHONY: unreached
+unreached: ## List object-level src/main defs that nothing outside src/test calls (fails on any)
+	@python3 tools/unreached.py
 
 .PHONY: parquet-columns
 parquet-columns: ## Print per-column bytes, share and encodings of a Parquet tree (env: DIR)

@@ -524,6 +524,9 @@ object Soak {
       .withColumn("doc_id", col("doc_id") + lit(1000000000L))
     val postAppendSec = timedSec(
       graft.ops.Retrieval.appendToPostings(deltaDocs, postDst))
+    // folding the append's sidecar segments back to one row per key is a
+    // rewrite of the small `_df`/`_totals` stores, not of the postings
+    val postCompactSec = timedSec(Retrieval.compactIndex(spark, postDst))
     val deltaEmb = emb.filter(pmod(col("vec_id"), lit(100L)) === 0L)
       .select((col("vec_id") + lit(1000000000L)).as("vec_id"), col("embedding"))
     val cellAppendSec = timedSec(
@@ -564,6 +567,8 @@ object Soak {
       val (n, bs) = graft.ops.NearDupIndex.purgeTombstones(spark, mhDst)
       purgedN = n; purgedBuckets = bs.length
     }
+    // the append's and the purge's `_sh_df` segments, folded back
+    val mhCompactSec = timedSec(graft.ops.NearDupIndex.compactIndex(spark, mhDst))
 
     // rollup maintenance at volume: one partials pass over mult× events,
     // the O(hours) merged serve, and a 1% append
@@ -847,6 +852,7 @@ object Soak {
       f""""bm25_index_probe_sec":$postProbeSec%.2f,"bm25_index_rows":$postRows,""" +
       f""""postings_dirs_read_frac":$postFrac%.2f,""" +
       f""""append_postings_1pct_sec":$postAppendSec%.2f,""" +
+      f""""compact_postings_sec":$postCompactSec%.2f,""" +
       f""""append_cell_1pct_sec":$cellAppendSec%.2f,""" +
       f""""append_pq_1pct_sec":$pqAppendSec%.2f,""" +
       f""""write_minhash_sec":$writeMinhashSec%.2f,""" +
@@ -856,6 +862,7 @@ object Soak {
       f""""tombstone_1pct_sec":$mhTombSec%.2f,""" +
       f""""purge_1pct_sec":$mhPurgeSec%.2f,"purged_docs":$purgedN,""" +
       f""""purged_buckets":$purgedBuckets,""" +
+      f""""compact_minhash_sec":$mhCompactSec%.2f,""" +
       f""""rollup_partials_sec":$ruWriteSec%.2f,""" +
       f""""rollup_serve_sec":$ruServeSec%.2f,"rollup_days":$ruDays,""" +
       f""""rollup_append_1pct_sec":$ruAppendSec%.2f,"events":${nEv * mult},""" +

@@ -14,10 +14,6 @@ import graft.ops.{Chunking, Curriculum, Dedup, Mixing, Multimodal, Privacy, Quan
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")
-
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary"  -> (Relational.q01PricingSummary _),

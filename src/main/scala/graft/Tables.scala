@@ -24,7 +24,6 @@ object Tables {
   def region(s: SparkSession, dir: String): DataFrame    = s.read.parquet(s"$dir/region.parquet")
   def nation(s: SparkSession, dir: String): DataFrame    = s.read.parquet(s"$dir/nation.parquet")
   def customer(s: SparkSession, dir: String): DataFrame  = s.read.parquet(s"$dir/customer.parquet")
-  def supplier(s: SparkSession, dir: String): DataFrame  = s.read.parquet(s"$dir/supplier.parquet")
   def part(s: SparkSession, dir: String): DataFrame      = s.read.parquet(s"$dir/part.parquet")
   def orders(s: SparkSession, dir: String): DataFrame    = s.read.parquet(s"$dir/orders.parquet")
   def lineitem(s: SparkSession, dir: String): DataFrame  = s.read.parquet(s"$dir/lineitem.parquet")

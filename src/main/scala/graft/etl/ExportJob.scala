@@ -27,11 +27,6 @@ object ExportJob {
     else Some(spark.read.text(matches.map(_.getPath.toString): _*))
   }
 
-  /** Filename-time extraction (reference parse_time, cmd/export.py:27-28):
-    * first 19 chars of the object basename are `YYYY-MM-DD-HH-MM-SS`. */
-  def fileTime(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    to_timestamp(substring(regexp_extract(c, "[^/]+$", 0), 1, 19), "yyyy-MM-dd-HH-mm-ss")
-
   /** Partitioned, clustered, Snappy parquet sink (reference
     * s3access/parquet.py:31-112): one file per partition combo, clustered
     * on `rowGroupCols` — the Spark equivalent of the reference's
@@ -150,9 +145,26 @@ object ExportJob {
               trackingDst: String, hour: String): Long =
     exportHour(spark, src, dst, trackingDst, hour).fold(-1L)(_.rows)
 
+  /** The HOUR contract (reference cmd/export.py:238-241): a real
+    * calendar hour spelled `yyyy-MM-dd-HH`. Anything else is refused
+    * before any listing: [[readHour]]'s `$hour*` glob would widen a
+    * shorter string to a whole day (`2021-07-18`) or to hours 00-09
+    * (`2021-07-18-0`), and the hour-scoped rename after the write cannot
+    * parse it, so the hour would commit without a marker and a rerun
+    * would append it again. */
+  def requireHour(hour: String): Unit = {
+    val valid = hour.matches("""\d{4}-\d{2}-\d{2}-\d{2}""") && scala.util.Try {
+      java.time.LocalDate.parse(hour.take(10)) // ISO_LOCAL_DATE: strict calendar
+      hour.drop(11).toInt < 24
+    }.getOrElse(false)
+    if (!valid) throw new IllegalArgumentException(
+      s"HOUR must be a calendar hour as yyyy-MM-dd-HH, got '$hour'")
+  }
+
   /** [[runHour]], returning the hour's [[HourCounts]], or None if skipped. */
   def exportHour(spark: SparkSession, src: String, dst: String,
-                 trackingDst: String, hour: String): Option[HourCounts] =
+                 trackingDst: String, hour: String): Option[HourCounts] = {
+    requireHour(hour)
     if (Tracking.done(spark, trackingDst, hour)) None
     else readHour(spark, src, hour).map { lines =>
       val parsed = Enrich.parseLines(lines)
@@ -178,6 +190,7 @@ object ExportJob {
       Tracking.mark(spark, trackingDst, hour, counts.marker(hour))
       counts
     }
+  }
 
   /** Job-level watchdog — the analogue of the reference's `TIMEOUT` env
     * (cmd/export.py:259). Documented divergence: the reference passes it
@@ -207,7 +220,10 @@ object ExportJob {
 
   /** Env contract of the reference (cmd/export.py:234-259): SRC, DST,
     * TRACKING_DST, HOUR (default = previous hour UTC, cmd/export.py:238-241),
-    * TIMEOUT (seconds; see `startWatchdog`). */
+    * TIMEOUT (seconds; see `startWatchdog`). In the reference's order
+    * (cmd/export.py:319-376): an hour already marked is skipped, then
+    * [[preflight]] must pass — on failure a one-line JSON error goes to
+    * stderr and the exit code is 1 — then the hour is exported. */
   def main(args: Array[String]): Unit = {
     val src = sys.env("SRC")
     val dst = sys.env("DST")
@@ -216,18 +232,27 @@ object ExportJob {
       val prev = java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC).minusHours(1)
       prev.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd-HH"))
     })
+    requireHour(hour)
     val spark = graft.GraftSession.create()
     S3Config.applyFromEnv(spark, dst)
     val watchdog = startWatchdog(spark, sys.env.getOrElse("TIMEOUT", "0").toInt)
-    try {
-      val t0 = System.nanoTime()
-      val counts = exportHour(spark, src, dst, tracking, hour)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val fields = counts.fold(""""rows":-1""")(_.json)
-      println(f"""{"hour":"$hour",$fields,"job_sec":$secs%.2f}""")
+    val exitCode = try {
+      if (!Tracking.done(spark, tracking, hour) &&
+          !scala.util.Try(preflight(spark, src, dst, hour)).getOrElse(false)) {
+        System.err.println(s"""{"hour":"$hour","error":"preflight failed"}""")
+        1
+      } else {
+        val t0 = System.nanoTime()
+        val counts = exportHour(spark, src, dst, tracking, hour)
+        val secs = (System.nanoTime() - t0) / 1e9
+        val fields = counts.fold(""""rows":-1""")(_.json)
+        println(f"""{"hour":"$hour",$fields,"job_sec":$secs%.2f}""")
+        0
+      }
     } finally {
       watchdog.foreach(_.interrupt())
       spark.stop()
     }
+    if (exitCode != 0) sys.exit(exitCode)
   }
 }

@@ -229,8 +229,8 @@ object S3LogParse {
   }
 
   /** Dotted-quad IPv4 → unsigned-32 value as long; -1 when the input is not
-    * a valid IPv4 literal (caller maps -1 to NULL or, in strict mode, to an
-    * error — SURVEY.md §1.4#5). Allocation-free fast path. */
+    * a valid IPv4 literal (caller maps -1 to NULL — SURVEY.md §1.4#5).
+    * Allocation-free fast path. */
   def ipv4ToLong(ip: UTF8String): Long = {
     val n = ip.numBytes()
     if (n < 7 || n > 15) return -1L

@@ -113,32 +113,24 @@ case class DashToLong(child: Expression) extends UnaryExpression with ExpectsInp
 
 /** Dotted-quad IPv4 string → its unsigned 32-bit value as a long.
   * Reference: s3access/normalize.py:70 (`int(ipaddress.IPv4Address(ip))`),
-  * where invalid input kills the run (cmd/export.py:109-111). Default mode
-  * returns NULL for invalid input (hostile-input-safe at 100 TB scale);
-  * `strict = true` reproduces the reference's fail-fast for parity tests. */
-case class Ipv4ToLong(child: Expression, strict: Boolean = false)
+  * where invalid input kills the run (cmd/export.py:109-111). Here invalid
+  * input is NULL (hostile-input-safe at 100 TB scale), and the export
+  * counts such rows in its marker's `bad_ip` field. */
+case class Ipv4ToLong(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def nullSafeEval(input: Any): Any = {
     val r = S3LogParse.ipv4ToLong(input.asInstanceOf[UTF8String])
-    if (r >= 0L) java.lang.Long.valueOf(r)
-    else if (strict) throw new IllegalArgumentException(
-      s"ipv4_to_long: not an IPv4 address: $input")
-    else null
+    if (r >= 0L) java.lang.Long.valueOf(r) else null
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val invalid =
-        if (strict)
-          s"""throw new IllegalArgumentException("ipv4_to_long: not an IPv4 address: " + $c);"""
-        else s"${ev.isNull} = true;"
+    nullSafeCodeGen(ctx, ev, c =>
       s"""
          |${ev.value} = graft.functions.S3LogParse.ipv4ToLong($c);
-         |if (${ev.value} < 0L) { $invalid }
-       """.stripMargin
-    })
+         |if (${ev.value} < 0L) { ${ev.isNull} = true; }
+       """.stripMargin)
   override protected def withNewChildInternal(newChild: Expression): Ipv4ToLong =
     copy(child = newChild)
   override def prettyName: String = "ipv4_to_long"
@@ -345,7 +337,6 @@ object exprs {
   def s3_request_time(c: Column): Column = column(S3RequestTime(expression(c)))
   def dash_to_long(c: Column): Column = column(DashToLong(expression(c)))
   def ipv4_to_long(c: Column): Column = column(Ipv4ToLong(expression(c)))
-  def ipv4_to_long_strict(c: Column): Column = column(Ipv4ToLong(expression(c), strict = true))
   def cosine_similarity(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
   def int_dot(a: Column, b: Column): Column =

@@ -128,7 +128,7 @@ object AnnTuner {
 
   /** Plain Lloyd's k-means with k-means++ seeding, deterministic, over
     * the (unit-normalized) sample — mirrors the engine's spherical
-    * quantizer ([[Similarity.ivfTopK]] / [[Similarity.writeCellBucketed]]:
+    * quantizer ([[Similarity.writeCellBucketed]]:
     * Spark ML KMeans over L2-normalized features). */
   private[ops] def kmeansCenters(sample: Array[Array[Double]], kCells: Int,
                                  iters: Int = 20, seed: Long = 42): Array[Array[Double]] = {
@@ -252,18 +252,6 @@ object AnnTuner {
         val pairFrac = counts.map(c => c * c).sum.toDouble / (n.toLong * n)
         SemDedupKnobs(nl, kept.toDouble / truePairs.size, pairFrac)
       }
-  }
-
-  /** Largest cell count (cheapest quadratic) whose co-location recall
-    * clears the target; degrades to nlist=1 (exact, all-pairs-in-one-
-    * cell) when the sample is too small or nothing clears the bar and
-    * even 2 cells split pairs badly. */
-  def tuneSemDedupCells(sample: Array[Array[Double]],
-                        targetRecall: Double,
-                        threshold: Double = 0.45): SemDedupKnobs = {
-    val grid = semDedupCandidates(sample, threshold)
-    if (grid.isEmpty) SemDedupKnobs(1, estRecall = 1.0, estPairFrac = 1.0)
-    else pickSemDedup(grid, targetRecall)
   }
 
   /** The candidate grid q226 persists (empty when the sample is too

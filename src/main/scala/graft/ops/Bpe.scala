@@ -328,12 +328,6 @@ object Bpe {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
   }
 
-  def readMerges(s: SparkSession, path: String): Array[(String, String)] = {
-    import s.implicits._
-    s.read.parquet(path).orderBy(col("rank"))
-      .select(col("l"), col("r")).as[(String, String)].collect()
-  }
-
   /** Where q91 persists the id table (the q65 fixed-location rule). */
   val VocabPath = graft.Sidecars.path("graft_bpe_vocab.parquet")
 

@@ -183,26 +183,6 @@ object Clustering {
     clusterSample(assign(emb, centroids), k)
   }
 
-  /** Topic-rebalancing weights over a cluster assignment — the
-    * "inspect per-cluster mass, up/down-weight topics" step this
-    * module's header promises: q45's temperature rule (mass^T with
-    * exact decimal normalization — the oracle-checked math) with the
-    * stratum = the learned cluster instead of the source column.
-    * Tiny aggregate: one map-side-combined count per cluster, a
-    * broadcast 1-row total. */
-  def clusterMix(assigned: DataFrame, temperature: Double = 0.3): DataFrame = {
-    val per = assigned.groupBy(col("cluster")).agg(count(lit(1)).as("n_vectors"))
-    val w = per.withColumn("w9",
-      round(pow(col("n_vectors").cast("double"), lit(temperature)), 9)
-        .cast("decimal(20,9)"))
-    val total = w.agg(sum(col("w9")).as("w_total"))
-    w.crossJoin(broadcast(total))
-      .withColumn("weight",
-        round(col("w9").cast("double") / col("w_total").cast("double"), 12))
-      .select(col("cluster"), col("n_vectors"), col("weight"))
-      .orderBy(col("cluster"))
-  }
-
   /** The reusable core over any (vec_id, cluster) frame. */
   def clusterSample(assigned: DataFrame, k: Int): DataFrame = {
     val hash52 = conv(

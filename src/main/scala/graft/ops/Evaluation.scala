@@ -19,9 +19,6 @@ import graft.Tables
   * per-row terms (order-free, the q48 rule), final round 6. */
 object Evaluation {
 
-  private def langPreds(s: SparkSession, dir: String): DataFrame =
-    langPredsOf(Tables.documents(s, dir))
-
   /** The q22 scoring + argmax over any (doc_id, lang, text) frame. */
   private[graft] def langPredsOf(docs: DataFrame): DataFrame = {
     import TextAnalysis.langHits

@@ -36,9 +36,6 @@ import graft.Tables
   * final ratios round 12. */
 object IrMetrics {
 
-  private def wRank(r: Column): Column =
-    round(lit(1.0) / log2(r.cast("double") + lit(1.0)), 12)
-
   private def gainW(g: Column, r: Column): Column =
     round((pow(lit(2.0), g.cast("double")) - lit(1.0)) /
       log2(r.cast("double") + lit(1.0)), 12).cast("decimal(28,12)")

@@ -44,17 +44,6 @@ object KmvSketch {
     when(size(minK) < k, size(minK).cast("double"))
       .otherwise(lit(k - 1.0) / element_at(minK, k))
 
-  /** Intersection estimate from two min-k arrays: merged min-k of the
-    * union, ρ = shared fraction inside it, est = ρ · unionEstimate. */
-  def intersectionEstimate(a: Column, b: Column, k: Int): Column = {
-    val merged = slice(array_sort(array_distinct(concat(a, b))), 1, k)
-    val m = size(merged)
-    val unionEst = when(m < k, m.cast("double"))
-      .otherwise(lit(k - 1.0) / element_at(merged, k))
-    val common = size(array_intersect(array_intersect(merged, a), b))
-    common.cast("double") / m.cast("double") * unionEst
-  }
-
   /** Pairwise set-overlap profile from per-key sketches: for every
     * unordered key pair, the union estimate, intersection estimate and
     * estimated Jaccard — all from the O(k) sketch rows, NEVER from the

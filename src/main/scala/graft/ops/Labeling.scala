@@ -42,25 +42,6 @@ object Labeling {
         (col("n_labels") === 1).as("unanimous"))
   }
 
-  /** Rank-paired preference examples: within each group, the i-th best
-    * "chosen" candidate is paired with the i-th "rejected" candidate.
-    * Both sides arrive as (group, score, id) and pass through the
-    * bounded top-k aggregate — score DESC, so callers encode their
-    * preference order in the score (e.g. `-doc_id` for "earliest k"). */
-  def rankPairs(chosen: DataFrame, rejected: DataFrame, groupCol: String,
-                scoreCol: String, idCol: String, k: Int): DataFrame = {
-    def ranked(side: DataFrame, out: String): DataFrame = side
-      .groupBy(col(groupCol).as("g"))
-      .agg(TopKPerGroup.topKColumn(col(scoreCol), col(idCol), k).as("top"))
-      .select(col("g"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("g"), (col("pos") + 1).cast("long").as("rank"),
-        col("e.id").as(out))
-    ranked(chosen, "chosen_id")
-      .join(ranked(rejected, "rejected_id"), Seq("g", "rank"))
-      .select(col("g").as(groupCol), col("rank"),
-        col("chosen_id"), col("rejected_id"))
-  }
-
   /** Preference pairs from the q39 quality verdicts — per source, the
     * 8 earliest keepers paired rank-to-rank with the 8 earliest
     * rejects, carrying the reject reason and the token-count margin.

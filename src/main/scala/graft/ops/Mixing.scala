@@ -263,7 +263,7 @@ object Mixing {
     * broadcast; the emitted prefix is TakeOrderedAndProject (bounded
     * heaps), and the only unpartitioned window numbers the LIMITed
     * result. A full-corpus interleave would drop the limit and write
-    * shard-sorted files instead (`Sharding.materializeTrainingSet`'s
+    * shard-sorted files instead (`Sharding.writeShards`'
     * per-task sort) — positions are only needed per shard. */
   def q73MixtureInterleave(s: SparkSession, dir: String): DataFrame =
     mixtureInterleave(Tables.documents(s, dir), 200)

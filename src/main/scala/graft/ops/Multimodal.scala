@@ -11,185 +11,16 @@ import graft.Tables
   * schema declared up front.
   *
   * IMAGE decode is REAL: the JDK's `javax.imageio` (PNG/JPEG/BMP/GIF)
-  * ships in every JRE with no native dependencies — `decodeImage`
-  * produces true dimensions and Rec.601 mean luminance, and
-  * `resizeImage` decodes, rescales, and re-encodes. UNCOMPRESSED AUDIO
-  * decode is REAL too: `javax.sound.sampled` also ships in every JRE,
-  * so `decodeWav` produces true sample rate / channels / duration / RMS
-  * for WAV-PCM payloads. Compressed audio and video codecs genuinely do
-  * not ship in this container, so those payloads fall back to
-  * `decodeStub`, a deterministic fake that derives features from the
-  * raw bytes — as do image/audio payloads the JDK cannot parse (the
-  * pipeline must not die on one corrupt object). The Spark-side
-  * plumbing (schema, encoders, partition batching, column pruning) is
-  * identical on all paths.
+  * ships in every JRE with no native dependencies — `aHash` hashes the
+  * decoded pixels (q224, q249). UNCOMPRESSED AUDIO decode is REAL too:
+  * `javax.sound.sampled` also ships in every JRE, so `decodeWavSamples`
+  * reads WAV-PCM samples for the q231 fingerprint. Video codecs
+  * genuinely do not ship in this container, so video payloads go
+  * through `frameSampleStub`, which cuts fixed-size byte windows (q225).
+  * Payloads the JDK cannot parse drop out rather than kill the
+  * partition.
   */
 object Multimodal {
-
-  case class MediaMeta(
-      doc_id: Long,
-      media_type: String,
-      n_bytes: Long,
-      width: Int,
-      height: Int,
-      mean_luma: Double,
-      sample_rate: Double,
-      channels: Int,
-      duration_s: Double,
-      rms: Double,
-      payload_md5: String)
-
-  private def md5hex(payload: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("MD5").digest(payload)
-      .map("%02x".format(_)).mkString
-
-  /** Real image decode via the JDK's javax.imageio: (width, height,
-    * Rec.601 mean luminance 0-255). None for payloads ImageIO cannot
-    * parse — a corrupt object must degrade, not kill the partition. */
-  def decodeImage(payload: Array[Byte]): Option[(Int, Int, Double)] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      catch { case _: java.io.IOException | _: RuntimeException => null }
-    Option(img).map { im =>
-      val w = im.getWidth; val h = im.getHeight
-      var sum = 0.0; var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = im.getRGB(x, y)
-          sum += 0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) +
-            0.114 * (rgb & 0xff)
-          x += 1
-        }
-        y += 1
-      }
-      (w, h, if (w * h == 0) 0.0 else sum / (w * h))
-    }
-  }
-
-  /** Real uncompressed-audio decode via the JDK's javax.sound.sampled:
-    * (sample_rate, channels, duration_s, rms) for WAV/AIFF PCM payloads
-    * (8-bit and 16-bit integer). RMS is over all channels interleaved,
-    * normalized to [-1, 1]. None for compressed audio (no codecs in the
-    * JDK) and anything AudioSystem cannot parse — degrade, don't die. */
-  def decodeWav(payload: Array[Byte]): Option[(Double, Int, Double, Double)] = {
-    import javax.sound.sampled.{AudioSystem, AudioFormat}
-    val parsed =
-      try {
-        val ais = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(payload))
-        try {
-          val fmt = ais.getFormat
-          val pcm = fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED ||
-            fmt.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED
-          if (pcm && (fmt.getSampleSizeInBits == 8 || fmt.getSampleSizeInBits == 16))
-            Some((fmt, ais.getFrameLength, ais.readAllBytes()))
-          else None
-        } finally ais.close()
-      } catch {
-        case _: javax.sound.sampled.UnsupportedAudioFileException |
-             _: java.io.IOException | _: RuntimeException => None
-      }
-    parsed.map { case (fmt, frames, bytes) =>
-      val bits = fmt.getSampleSizeInBits
-      val signed = fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED
-      val big = fmt.isBigEndian
-      val step = bits / 8
-      var sumSq = 0.0
-      var n = 0
-      var i = 0
-      while (i + step <= bytes.length) {
-        val s =
-          if (bits == 8) {
-            val raw = if (signed) bytes(i).toDouble else ((bytes(i) & 0xff) - 128).toDouble
-            raw / 128.0
-          } else {
-            val lo = if (big) bytes(i + 1) else bytes(i)
-            val hi = if (big) bytes(i) else bytes(i + 1)
-            val raw0 = ((hi & 0xff) << 8) | (lo & 0xff)
-            val raw = if (signed) raw0.toShort.toDouble else (raw0 - 32768).toDouble
-            raw / 32768.0
-          }
-        sumSq += s * s
-        n += 1
-        i += step
-      }
-      val dur =
-        if (frames >= 0 && fmt.getFrameRate > 0) frames.toDouble / fmt.getFrameRate
-        else 0.0
-      (fmt.getSampleRate.toDouble, fmt.getChannels,
-        dur, if (n == 0) 0.0 else math.sqrt(sumSq / n))
-    }
-  }
-
-  /** Decode dispatch: real ImageIO for decodable image payloads, real
-    * javax.sound.sampled for decodable WAV-PCM audio payloads, the
-    * deterministic stub for video (no codecs in the JDK) and for
-    * undecodable images/audio. */
-  def decode(docId: Long, mediaType: String, payload: Array[Byte]): MediaMeta =
-    mediaType match {
-      case "image" => decodeImage(payload) match {
-        case Some((w, h, luma)) =>
-          MediaMeta(docId, mediaType, payload.length.toLong, w, h, luma,
-            0.0, 0, 0.0, 0.0, md5hex(payload))
-        case None => decodeStub(docId, mediaType, payload)
-      }
-      case "audio" => decodeWav(payload) match {
-        case Some((rate, ch, dur, rms)) =>
-          MediaMeta(docId, mediaType, payload.length.toLong, 0, 0, 0.0,
-            rate, ch, dur, rms, md5hex(payload))
-        case None => decodeStub(docId, mediaType, payload)
-      }
-      case _ => decodeStub(docId, mediaType, payload)
-    }
-
-  /** Real image resize: decode → smooth-scale → PNG re-encode (headless
-    * BufferedImage drawing, no display needed). Undecodable payloads
-    * fall back to [[resizeStub]]. */
-  def resizeImage(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      catch { case _: java.io.IOException | _: RuntimeException => null }
-    if (img == null || w <= 0 || h <= 0) resizeStub(payload, w, h)
-    else {
-      val out = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = out.createGraphics()
-      try {
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, w, h, null)
-      } finally g.dispose()
-      val baos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(out, "png", baos)
-      baos.toByteArray
-    }
-  }
-
-  /** STUB decode (see object scaladoc): deterministic features from raw
-    * bytes so pipelines and tests exercise the full dataflow. */
-  def decodeStub(docId: Long, mediaType: String, payload: Array[Byte]): MediaMeta = {
-    val n = payload.length
-    val w = if (n == 0) 0 else 64 + (payload(0) & 0x7f)
-    val h = if (n == 0) 0 else 64 + (payload(n / 2) & 0x7f)
-    var sum = 0L
-    var i = 0
-    while (i < n) { sum += (payload(i) & 0xff); i += 1 }
-    val luma = if (n == 0) 0.0 else sum.toDouble / n
-    // audio-shaped fields stay zero on the stub path: fake dimensions are
-    // useful for pipeline-shape tests, fake audio physics are not
-    MediaMeta(docId, mediaType, n.toLong, w, h, luma, 0.0, 0, 0.0, 0.0,
-      md5hex(payload))
-  }
-
-  /** STUB resize: a real implementation decodes, scales, re-encodes; the
-    * stub deterministically samples bytes so output size tracks the target
-    * dims and pipelines can assert on shape. */
-  def resizeStub(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val target = math.max(1, (w * h) / 64)
-    if (payload.isEmpty) Array.emptyByteArray
-    else Array.tabulate(math.min(target, payload.length))(i =>
-      payload((i.toLong * payload.length / math.min(target, payload.length)).toInt % payload.length))
-  }
 
   /** STUB frame sampling for video payloads: every nth "frame" is a
     * fixed-size byte window; real codecs slot in behind the same
@@ -217,17 +48,6 @@ object Multimodal {
       })
   }
 
-  /** Batch feature extraction over a binary-payload DataFrame
-    * (`doc_id: long, media_type: string, payload: binary`). Runs
-    * partition-local with an iterator (constant memory per task). */
-  def extractFeatures(df: DataFrame): Dataset[MediaMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions(_.map { case (id, mt, bytes) => decode(id, mt, bytes) })
-  }
-
   // --- Perceptual-hash image dedup ------------------------------------
   //
   // Exact dedup (md5 of the payload) misses the commonest image
@@ -252,7 +72,7 @@ object Multimodal {
 
   /** 64-bit average hash of a decodable image; None for payloads
     * ImageIO cannot parse (corrupt objects degrade, never kill the
-    * partition — the [[decodeImage]] rule). */
+    * partition). */
   def aHash(payload: Array[Byte]): Option[Long] = {
     val img =
       try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
@@ -303,36 +123,9 @@ object Multimodal {
       })
   }
 
-  /** Near-duplicate image pairs at Hamming distance ≤ `maxDist` over
-    * the aHash — EXACT recall for `maxDist ≤ nBands - 1` by the
-    * pigeonhole banding above. One shuffle on the band key, pair
-    * volume bounded by band-bucket occupancy, `bit_count(xor)` verify. */
-  def imageNearDupPairs(hashes: DataFrame, maxDist: Int = 3,
-                        nBands: Int = 4): DataFrame = {
-    require(maxDist <= nBands - 1,
-      s"pigeonhole guarantee needs maxDist <= nBands - 1 ($maxDist vs $nBands)")
-    val width = 64 / nBands
-    val banded = hashes.select(col("doc_id"), col("ahash"),
-        explode(array((0 until nBands).map { b =>
-          struct(lit(b).as("band"),
-            shiftrightunsigned(col("ahash"), b * width)
-              .bitwiseAND(lit((1L << width) - 1)).as("bits"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("ahash"),
-        col("bk.band").as("band"), col("bk.bits").as("bits"))
-    val l = banded.select(col("band"), col("bits"),
-      col("doc_id").as("d1"), col("ahash").as("h1"))
-    val r = banded.select(col("band"), col("bits"),
-      col("doc_id").as("d2"), col("ahash").as("h2"))
-    l.join(r, Seq("band", "bits"))
-      .filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        bit_count(col("h1").bitwiseXOR(col("h2"))).cast("long").as("dist"))
-      .filter(col("dist") <= maxDist)
-      .distinct()
-  }
-
-  /** Hash-collapsed variant of [[imageNearDupPairs]] — SAME output, the
+  /** Near-duplicate image pairs (d1 < d2, dist) at Hamming distance
+    * ≤ `maxDist` over the aHash — EXACT recall for `maxDist ≤ nBands - 1`
+    * by the pigeonhole banding above, `bit_count(xor)` verify. The
     * 100 TB plan: band the DISTINCT hash values only, so band-bucket
     * occupancy is bounded by distinct-hash density and the commonest
     * duplicate of all (byte-for-byte re-encodes of the same pixels,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   *  - [[Pin.Checkpoint]] (`df.localCheckpoint()`, eager): for library
   *    calls inside long-lived sessions and pipelines; the ContextCleaner
   *    reclaims the blocks once the frame is unreferenced.
-  *  - [[Pin.Off]] (`df` as is): for standing views (QuerySession), whose
+  *  - [[Pin.Off]] (`df` as is): for standing SQL views, whose
   *    registration must run no job and plant no cache that nothing can
   *    release; each consumer re-evaluates the frame instead.
   *
@@ -28,12 +28,12 @@ sealed trait Pin {
 
 object Pin {
   case object Cache extends Pin {
-    def apply(df: DataFrame): DataFrame = df.cache()
+    override def apply(df: DataFrame): DataFrame = df.cache()
   }
   case object Checkpoint extends Pin {
-    def apply(df: DataFrame): DataFrame = df.localCheckpoint()
+    override def apply(df: DataFrame): DataFrame = df.localCheckpoint()
   }
   case object Off extends Pin {
-    def apply(df: DataFrame): DataFrame = df
+    override def apply(df: DataFrame): DataFrame = df
   }
 }

@@ -42,15 +42,10 @@ object Privacy {
     * SECURITY NOTE: the protection is only as strong as the salt's
     * secrecy — the IPv4 space is enumerable, so a leaked salt lets
     * anyone reverse every pseudonym by brute force. Production deploys
-    * must inject the salt from secret storage ([[saltFromEnv]]); the
-    * committed default exists for the deterministic test oracle only. */
+    * must inject the salt from secret storage; the committed default
+    * exists for the deterministic test oracle only. */
   def pseudonymize(ip: Column, salt: String): Column =
     substring(md5(concat(lit(salt), lit(":"), ip)), 1, 16)
-
-  /** The deployment salt: `GRAFT_PSEUDONYM_SALT` from the environment
-    * when set (the secret path), else the test default `fallback`. */
-  def saltFromEnv(fallback: String): String =
-    sys.env.getOrElse("GRAFT_PSEUDONYM_SALT", fallback)
 
   /** q44: anonymized per-/24 access summary over the synthesized event
     * log stream (same deterministic IP synthesis as q20, so the oracle
@@ -108,11 +103,6 @@ object Privacy {
   def redactIps(x: Column): Column = regexp_replace(x, Ipv4Pattern, "<IP>")
   def redactDigitRuns(x: Column): Column =
     regexp_replace(x, DigitRunPattern, "<NUM>")
-
-  /** Text with every identifier-shaped span replaced by a typed
-    * placeholder. */
-  def redactText(x: Column): Column =
-    redactDigitRuns(redactIps(redactEmails(x)))
 
   /** q60: PII scan + redaction over the synthesized access-log lines —
     * per line: identifier-span counts and the md5 of the redacted line

@@ -102,14 +102,6 @@ object ProductQuantization {
     codes
   }
 
-  /** The per-vector kernel: unit-normalize, then per-subspace argmin —
-    * the FLAT (no-IVF) coding used by `encode`/q64. Returns the unit
-    * vector and the M codes. */
-  private def encodeVec(c: Codebook, arr: Seq[Float]): (Array[Double], Array[Int]) = {
-    val v = unitVec(arr, c.dim)
-    (v, codesFor(c, v))
-  }
-
   /** Argmin cell for a unit vector over the IVF centers. */
   private def nearestCellOf(cells: Array[Array[Double]], v: Array[Double]): Int = {
     var cell = 0; var cbd = Double.MaxValue; var ci = 0
@@ -123,78 +115,19 @@ object ProductQuantization {
     cell
   }
 
-  /** Encode every vector as M codes (0..K-1): one narrow distributed
-    * pass, broadcast codebook, primitive loops. Vectors are
-    * unit-normalized before coding (the engine's cosine convention). */
-  def encode(emb: DataFrame, cb: Codebook): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cb)
-    // a null/empty vector has no subspaces to quantize — excluded here
-    // rather than NPE-ing the whole encode job in an executor (the SQL
-    // scoring paths tolerate such rows; the typed kernel must too)
-    Par.widen(emb)
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val c = bc.value
-        it.map { case (id, arr) => (id, encodeVec(c, arr)._2.toSeq) }
-      }
-      .toDF("vec_id", "codes")
-  }
-
-  /** ADC scoring + exact re-rank: approximate every (query, code-row)
-    * cosine from the per-query M×K dot table, keep the top `rerank`
-    * candidates per query (bounded top_k aggregate), then score ONLY
-    * those with the true float cosine and emit the top `k`.
-    * `queries`: (query_id, qe) with unit-normalizable float vectors.
+  /** ADC scoring + exact re-rank over RESIDUAL codes carrying their IVF
+    * cell: the approximate cosine is q·centroid(cell) +
+    * Σ_m table(m)(code_m) — the decoded row is centroid + residual, and
+    * the dot distributes. One pass over the codes scores every (query,
+    * row) from the per-query M×K table plus nlist cell scalars, a
+    * bounded top-`rerank` aggregate keeps the candidates, and only
+    * those get the true float cosine. `queries`: (query_id, vector).
     *
     * `excludeSelf` drops the code row whose vec_id equals the query id —
-    * right for the q28/q64 convention where queries ARE corpus rows
-    * asking for their neighbors. Pass `false` when the queries live in
-    * their OWN id space: an external query_id that merely collides with
-    * an unrelated vec_id would otherwise silently lose a legitimate
-    * neighbor. */
-  def adcTopK(emb: DataFrame, codes: DataFrame, cb: Codebook,
-              queries: Array[(Long, Array[Double])],
-              k: Int, rerank: Int, excludeSelf: Boolean = true): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val dsub = cb.dim / cb.m
-    // per-query ADC tables: table(q)(m)(k) = q_sub(m) · centroid(m)(k)
-    val tables = queries.map { case (qid, qv) =>
-      val n = math.sqrt(qv.map(x => x * x).sum)
-      val u = if (n == 0) qv else qv.map(_ / n)
-      qid -> Array.tabulate(cb.m, cb.k) { (mi, ki) =>
-        var d = 0.0; var j = 0
-        while (j < dsub) { d += u(mi * dsub + j) * cb.centroids(mi)(ki)(j); j += 1 }
-        d
-      }
-    }
-    val bc = s.sparkContext.broadcast(tables)
-    // one pass over the codes: |queries| ADC scores per row, each M
-    // table lookups — no float vectors, no join, no shuffle before the
-    // bounded per-query top_k
-    val scored = codes.as[(Long, Seq[Int])].mapPartitions { it =>
-      val ts = bc.value
-      it.flatMap { case (id, cs) =>
-        ts.iterator.filter(t => !excludeSelf || t._1 != id).map { case (qid, table) =>
-          var sc = 0.0; var mi = 0
-          while (mi < table.length) { sc += table(mi)(cs(mi)); mi += 1 }
-          (qid, id, sc)
-        }
-      }
-    }.toDF("query_id", "vec_id", "ascore")
-    rerankExact(emb, scored, queries, k, rerank)
-  }
-
-  /** ADC over RESIDUAL codes carrying their IVF cell: the approximate
-    * cosine is q·centroid(cell) + Σ_m table(m)(code_m) — the decoded
-    * row is centroid + residual, and the dot distributes. Costs one
-    * extra broadcast array of nlist scalars per query next to the M×K
-    * table; everything else (one codes pass, bounded top_k, exact
-    * re-rank of survivors only) is [[adcTopK]]'s dataflow. */
+    * right when queries ARE corpus rows asking for their neighbors. Pass
+    * `false` when the queries live in their OWN id space: an external
+    * query_id that merely collides with an unrelated vec_id would
+    * otherwise silently lose a legitimate neighbor. */
   def adcTopKCells(emb: DataFrame, codes: DataFrame, cb: Codebook,
                    cellCenters: Array[Array[Double]],
                    queries: Array[(Long, Array[Double])],
@@ -233,8 +166,7 @@ object ProductQuantization {
   }
 
   /** Bounded per-query top-`rerank` over the ADC scores, then the exact
-    * float re-rank of the survivors only — the shared tail of both ADC
-    * paths (q28's two-phase discipline). */
+    * float re-rank of the survivors only (q28's two-phase discipline). */
   private def rerankExact(emb: DataFrame, scored: DataFrame,
                           queries: Array[(Long, Array[Double])],
                           k: Int, rerank: Int): DataFrame = {

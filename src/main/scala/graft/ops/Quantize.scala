@@ -180,7 +180,7 @@ object Quantize {
     * shares every stage downstream of assignment — this gate proves
     * that shared dataflow, including the cross-cell misses the
     * approximation legitimately accepts. nCells=8 is the tuned value
-    * for this corpus ([[AnnTuner.tuneSemDedupCells]]: 64 split most
+    * for this corpus ([[AnnTuner.pickSemDedup]]: 64 split most
     * near-dup pairs, 8 keeps them co-located at recall ≥ 0.7).
     *
     * `Diag plan` note: the BroadcastNestedLoopJoin it flags here is
@@ -251,21 +251,5 @@ object Quantize {
         when(col("nlist") === chosen.toLong, lit(nRemoved))
           .otherwise(lit(0L)).as("n_removed"))
       .orderBy(col("nlist"))
-  }
-
-  /** [[semanticDedupInCells]] with the cell count DERIVED from a bounded
-    * corpus sample instead of guessed: [[AnnTuner.tuneSemDedupCells]]
-    * picks the largest nlist (cheapest per-cell quadratic) whose sampled
-    * near-dup pairs stay co-located at the target recall — the knob the
-    * within-cell spec showed must track corpus size (64 cells over 500
-    * vectors split most pairs; 8 kept them together). Writes the int8
-    * cell layout at `dst` and returns the knobs with the decision frame. */
-  def semanticDedupCellsTuned(s: SparkSession, dir: String, dst: String,
-                              targetRecall: Double = 0.7)
-      : (AnnTuner.SemDedupKnobs, DataFrame) = {
-    val emb = Tables.embeddings(s, dir)
-    val knobs = AnnTuner.tuneSemDedupCells(AnnTuner.sampleUnit(emb), targetRecall)
-    Similarity.writeCellBucketed(emb, dst, nlist = knobs.nlist, int8 = true)
-    (knobs, semanticDedupInCells(s, dst))
   }
 }

@@ -510,35 +510,6 @@ object Retrieval {
     maskedProbeFrames(s, dst, tf0, dfreq0, totals0)
   }
 
-  /** [[probedPostings]] with the query-term set as a FRAME — the
-    * multi-query (hard-negative) probe, where the term union comes from
-    * anchor documents rather than a literal list. Partition pruning
-    * still happens: the distinct term BUCKETS collect driver-side
-    * (bounded by the layout's nBuckets whatever the term count) and
-    * prune the reads; term membership rides a broadcast semi-join
-    * instead of a pushed IN (thousands of literals would bloat the
-    * plan, and the bucket pruning already did the IO work). */
-  private[graft] def probedPostingsFor(s: SparkSession, dst: String,
-                                       qterms0: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    // no cache on qset: its three references re-run one distinct over
-    // the caller's (cached) term frame — cheap, and nothing to leak
-    val nBuckets = BucketStore.nBuckets(s, dst)
-    val qset = qterms0.select(col("term")).distinct()
-    val buckets = qset.select(termBucketCol(col("term"), nBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0))
-    val tf0 = s.read.parquet(dst)
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-      .join(broadcast(qset), "term")
-      .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-    val dfreq0 = s.read.parquet(dst + "_df")
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-      .join(broadcast(qset), "term")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val totals0 = s.read.parquet(dst + "_totals")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_total")).as("n_total"))
-    maskedProbeFrames(s, dst, tf0, dfreq0, totals0)
-  }
-
   /** Tombstone masking shared by every probe flavor: dead docs vanish
     * from the ranking AND from every statistic (df, n_docs, avgdl) — a
     * masked index must score exactly like one freshly built from the
@@ -571,51 +542,6 @@ object Retrieval {
             (col("n_total") - col("ddl")).as("n_total"))
         (tf, dfreq, totals)
     }
-  }
-
-  /** Hard negatives served FROM THE STANDING INDEXES — the 100 TB form
-    * of [[hardNegativesFor]]: scoring reads only the anchors' term
-    * buckets of the posting layout (never re-tokenizing the corpus),
-    * df/totals come from the index sidecars, and the near-dup exclusion
-    * arrives as a FRAME (the caller's [[NearDupIndex.probeNearDup]]
-    * pairs — O(anchors) against the standing dedup index). Scores are
-    * [[bm25Part]] — bit-identical to the scan path by construction. */
-  def hardNegativesIndexed(s: SparkSession, postingsDst: String,
-                           anchors: DataFrame, excl: DataFrame,
-                           k: Int = 10, dfCap: Long = 0L): DataFrame = {
-    val qterms = anchors
-      .select(col("doc_id").as("query_id"),
-        explode(array_distinct(TextAnalysis.tokens(col("text")))).as("term"))
-      .cache()
-    val (tf, dfreq, totals) = probedPostingsFor(s, postingsDst,
-      qterms.select(col("term")))
-    val inform0 = qterms.join(broadcast(dfreq), "term")
-    val inform = (if (dfCap > 0L) inform0.filter(col("df") <= dfCap)
-                  else inform0).select(col("term"), col("query_id"))
-    val parts = tf
-      .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(totals))
-      .withColumn("part", bm25Part)
-      .select(col("term"), col("doc_id"), col("part"))
-    val scored = parts
-      .join(broadcast(inform), Seq("term"))
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("part")).as("sc"))
-      .select(col("query_id"), col("doc_id"),
-        col("sc").cast("double").as("score"))
-    val kept = scored.join(
-      excl.select(col("query_id"), col("doc_id")),
-      Seq("query_id", "doc_id"), "left_anti")
-    val out = TopKPerGroup.topKPerKey(kept, "query_id", "score", "doc_id", k)
-      .select(col("key").as("query_id"), col("rank"),
-        col("id").as("doc_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
-    val rows =
-      try out.collect()
-      finally qterms.unpersist()
-    s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** q96: the postings DELETE path as a DECLARED query — the

@@ -150,15 +150,15 @@ object Selection {
     epochShuffle(Tables.documents(s, dir), epoch, docsPerShard)
 
   /** The reusable core over any frame with a doc_id column — also the
-    * shard-assignment half of `Sharding.materializeTrainingSet`.
+    * shard assignment `Sharding.writeShards` lays out (q98).
     *
     * Precondition: `docs` must be DETERMINISTIC across evaluations (a
     * table scan, or a pinned frame — `localCheckpoint` as
-    * `Sharding.materialize` does). The bucket totals are collected in
-    * one job and the ranking runs in a later one; a nondeterministic
-    * input (an unpinned `.sample`, a recomputed nondeterministic
-    * lineage) would let the two passes see different rows, yielding
-    * colliding or gapped positions with no error. */
+    * `Sharding.materializeContrastiveSet` does). The bucket totals are
+    * collected in one job and the ranking runs in a later one; a
+    * nondeterministic input (an unpinned `.sample`, a recomputed
+    * nondeterministic lineage) would let the two passes see different
+    * rows, yielding colliding or gapped positions with no error. */
   def epochShuffle(docs: DataFrame, epoch: Int,
                    docsPerShard: Long): DataFrame = {
     val s = docs.sparkSession

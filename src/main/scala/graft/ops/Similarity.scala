@@ -29,19 +29,10 @@ object Similarity {
   private def widen(df: DataFrame): DataFrame = Par.widen(df)
 
   /** Fast cosine similarity: the native CosineSimilarity expression — one
-    * fused codegen loop. Bit-identical to `cosineHof` (same accumulation
-    * order), which is kept as the built-ins-only formulation and for the
-    * equality spec. */
+    * fused codegen loop, bit-identical to the built-ins-only zip_with +
+    * aggregate formulation (same accumulation order; ParseSpec). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.exprs.cosine_similarity(a, b)
-
-  /** Built-ins-only cosine (zip_with + aggregate HOFs). */
-  def cosineHof(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, e) => acc + e)
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
 
   /** Exact-decimal dot product — engine-portable to the last bit: float
     * products are exact in double; each product is rounded once to
@@ -269,7 +260,7 @@ object Similarity {
     lshTopK(s, dir, planes = 4, radius = 2)
 
   /** [[q29LshTopK]] with the recall/IO knobs exposed — derive them per
-    * corpus with [[tunedLshTopK]] instead of inheriting q29's constants. */
+    * corpus with [[AnnTuner.tuneLsh]] instead of inheriting q29's constants. */
   def lshTopK(s: SparkSession, dir: String, planes: Int, radius: Int,
               k: Int = 10): DataFrame = {
     // len>0 filter: a zero-length vector can never score (0/0 cosine);
@@ -297,25 +288,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** [[lshTopK]] with (planes, radius) DERIVED from a bounded corpus
-    * sample by [[AnnTuner]] — the cheapest probe ring whose estimated
-    * recall clears `targetRecall` on THIS corpus's neighbor geometry.
-    * Returns the chosen knobs alongside the result so callers (and
-    * specs) can see what the tuner decided. */
-  def tunedLshTopK(s: SparkSession, dir: String, targetRecall: Double = 0.7,
-                   k: Int = 10): (DataFrame, AnnTuner.LshKnobs) = {
-    val knobs = AnnTuner.tuneLsh(AnnTuner.sampleUnit(Tables.embeddings(s, dir)), targetRecall, k)
-    (lshTopK(s, dir, knobs.planes, knobs.radius, k), knobs)
-  }
-
-  /** [[ivfTopK]] with (nlist, nprobe) DERIVED from a bounded corpus
-    * sample by [[AnnTuner]] — see [[tunedLshTopK]]. */
-  def tunedIvfTopK(s: SparkSession, dir: String, targetRecall: Double = 0.7,
-                   k: Int = 10): (DataFrame, AnnTuner.IvfKnobs) = {
-    val knobs = AnnTuner.tuneIvf(AnnTuner.sampleUnit(Tables.embeddings(s, dir)), targetRecall, k)
-    (ivfTopK(s, dir, knobs.nlist, knobs.nprobe, k), knobs)
-  }
-
   /** Write-time LSH-bucketed corpus layout — the 100 TB read path the
     * q29 scaladoc promises, made real. The corpus is written ONCE,
     * hive-partitioned by its `planes`-bit signature (`sig=<n>/` dirs);
@@ -335,10 +307,10 @@ object Similarity {
       .option("compression", "snappy")
       .partitionBy("sig")
       .parquet(dst)
-    // persist the write-time plane count next to the data (the IVF
-    // `_knobs` pattern): a probe whose planes disagree with the layout
-    // computes signatures in a different bucket space and silently
-    // collapses recall — the sidecar turns that into a hard error
+    // persist the write-time plane count next to the data: a probe
+    // whose planes disagree with the layout computes signatures in a
+    // different bucket space and silently collapses recall — the
+    // sidecar turns that into a hard error
     val s = emb.sparkSession
     import s.implicits._
     Seq(planes).toDF("planes").coalesce(1)
@@ -464,44 +436,15 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst + "_centroids")
   }
 
-  /** [[writeCellBucketed]] with nlist DERIVED from a bounded corpus
-    * sample ([[AnnTuner]]), and the tuner's recommended nprobe PERSISTED
-    * next to the centroids (`<dst>_knobs`) — the layout carries its own
-    * probe recipe, so any later reader gets the tuned recall/IO point
-    * without refitting or guessing ([[bucketedIvfTopK]] with nprobe=0
-    * reads it back). Returns the chosen knobs. */
-  def writeCellBucketedTuned(emb: DataFrame, dst: String,
-                             targetRecall: Double = 0.7,
-                             int8: Boolean = false): AnnTuner.IvfKnobs = {
-    val knobs = AnnTuner.tuneIvf(AnnTuner.sampleUnit(emb), targetRecall)
-    writeCellBucketed(emb, dst, knobs.nlist, int8)
-    val s = emb.sparkSession
-    import s.implicits._
-    Seq((knobs.nlist, knobs.nprobe, knobs.estRecall, knobs.estIoFrac))
-      .toDF("nlist", "nprobe", "est_recall", "est_io_frac")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst + "_knobs")
-    knobs
-  }
-
   /** IVF top-k over a [[writeCellBucketed]] layout: per query, the
     * nprobe nearest cells (by centroid distance on the unit sphere —
     * driver-side over the tiny persisted centroid table and the small
     * query batch) become a static `cell IN (...)` partition filter;
     * candidates in those cells are exact-reranked. Scan cost is
-    * |probed cells| / nlist of the layout, asserted in PlanSpec.
-    *
-    * nprobe <= 0 means "use the layout's own recipe": the knob persisted
-    * by [[writeCellBucketedTuned]], falling back to 12 for layouts
-    * written without one. */
+    * |probed cells| / nlist of the layout, asserted in PlanSpec. */
   def bucketedIvfTopK(s: SparkSession, bucketedDir: String, queries: DataFrame,
                       nprobe: Int = 12, k: Int = 10): DataFrame = {
-    val np =
-      if (nprobe > 0) nprobe
-      else try s.read.parquet(bucketedDir + "_knobs")
-        .select(col("nprobe")).collect()(0).getInt(0)
-      catch { case _: org.apache.spark.sql.AnalysisException => 12 }
-    val (corpus, q) = probedCellCorpus(s, bucketedDir, queries, np)
+    val (corpus, q) = probedCellCorpus(s, bucketedDir, queries, nprobe)
     // an int8 layout carries `q` instead of `embedding`: quantize the
     // query batch the same way and score integer-vs-integer cosine —
     // scales cancel, no dequantization on the probe path
@@ -543,7 +486,7 @@ object Similarity {
       }.sortBy(_._1).take(nprobe).map(_._2).toSeq
     }
     val probes = queries.select(col("query_id"), col("qe"))
-      .as[(Long, Array[Float])].collect() // small query batch, like ivfTopK
+      .as[(Long, Array[Float])].collect() // small query batch
       .flatMap { case (qid, qe) => nearestCells(qe).map(cell => (qid, qe, cell)) }
     val q = probes.toSeq.toDF("query_id", "qe", "qcell")
     val cells = probes.map(_._3).distinct.map(Int.box)
@@ -692,65 +635,6 @@ object Similarity {
       .filter(col("cos") >= threshold)
       .select(col("d1"), col("d2"), col("cos"))
       .orderBy(col("d1"), col("d2"))
-  }
-
-  /** IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
-    * corpus into nlist cells; a query probes only its nprobe nearest
-    * cells and exact-reranks those candidates. The other classic ANN
-    * scale path next to LSH (q29): at 100 TB the corpus is written
-    * bucketed by cell id, so a probe reads nprobe/nlist of the data.
-    * Centroids are a tiny model (nlist × dim) — computed once, broadcast
-    * via the closure; only the assignment and rerank are distributed.
-    *
-    * Vectors are L2-NORMALIZED before clustering and assignment
-    * (spherical k-means): the query metric is cosine, and on the unit
-    * sphere euclidean distance is monotonic in cosine
-    * (‖a−b‖² = 2 − 2·cos), so cells align with cosine neighborhoods.
-    * Clustering raw magnitudes split cosine-close vectors across cells —
-    * measured recall 0.2-0.4 raw vs ≥0.6 normalized at the same
-    * nlist/nprobe. */
-  def ivfTopK(s: SparkSession, dir: String, nlist: Int = 16, nprobe: Int = 6,
-              k: Int = 10): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val emb = Tables.embeddings(s, dir)
-      .withColumn("nrm", sqrt(aggregate(
-        transform(col("embedding"), x => x.cast("double") * x.cast("double")),
-        lit(0.0), (acc, e) => acc + e)))
-      .withColumn("features",
-        array_to_vector(transform(col("embedding"), x => x.cast("double") / col("nrm"))))
-    val model = new KMeans().setK(nlist).setSeed(42).setMaxIter(20).fit(emb)
-    val centers = model.clusterCenters.map(_.toArray)
-    val assigned = model.transform(emb).withColumnRenamed("prediction", "cell")
-
-    def nearestCells(v: Array[Double]): Seq[Int] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      val u = if (n == 0) v else v.map(_ / n)
-      centers.zipWithIndex.map { case (c, i) =>
-        var d = 0.0; var j = 0
-        while (j < u.length) { val t = u(j) - c(j); d += t * t; j += 1 }
-        (d, i)
-      }.sortBy(_._1).take(nprobe).map(_._2).toSeq
-    }
-    import s.implicits._
-    val queries = assigned.filter(col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect() // 5 query vectors — not corpus data
-      .map { case (id, e) => (id, e, nearestCells(e.map(_.toDouble))) }
-    val probeCells = queries.flatMap { case (qid, qe, cells) =>
-      cells.map(c => (qid, qe, c))
-    }.toSeq.toDF("query_id", "qe", "qcell")
-
-    // bounded-heap top-k per query (hot cells hold a large corpus slice;
-    // see q29)
-    val scored = assigned.join(broadcast(probeCells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("qe"), col("embedding")).as("cos"))
-    TopKPerGroup.topKPerKey(scored, "query_id", "cos", "vec_id", k)
-      .select(col("key").as("query_id"), col("rank"),
-        col("id").as("neighbor_id"), col("score").as("cos"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Embedding-cosine near-duplicate pairs over a BANDED multi-table LSH

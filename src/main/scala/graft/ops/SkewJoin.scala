@@ -1,40 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Salted join for skewed keys — the manual fallback when AQE's runtime
-  * skew splitting isn't available (e.g. non-shuffle-join plans, or a key
-  * so hot a single salt range still overflows a task). The left (skewed)
-  * side gets a random salt in [0, salts); the right side is replicated
-  * once per salt value; the join key becomes (key, salt), spreading one
-  * hot key over `salts` tasks.
-  *
-  * Replication multiplies the right side by `salts`, so this fits the
-  * fact-⋈-medium-dim case where the dim is too big to broadcast but
-  * cheap to duplicate a handful of times.
-  */
+/** Hot-key-safe joins: a per-key total attached to every row without
+  * routing a whole key through one task. */
 object SkewJoin {
-
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String, salts: Int,
-                 joinType: String = "inner"): DataFrame = {
-    // deterministic salt: hash of the whole left row spreads rows evenly
-    // without an RNG (reproducible across retries — a rand() salt is not)
-    val saltedLeft = left.withColumn("__salt",
-      pmod(hash(left.columns.map(col): _*), lit(salts)))
-    val saltedRight = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    saltedLeft.join(saltedRight,
-        saltedLeft(key) === saltedRight(key) &&
-          saltedLeft("__salt") === saltedRight("__salt"), joinType)
-      .drop(saltedRight(key)).drop("__salt")
-  }
-
-  /** Diagnostic: per-key row counts above a threshold — the keys that
-    * need salting (or AQE skew handling) at scale. */
-  def skewedKeys(df: DataFrame, key: String, threshold: Long): DataFrame =
-    df.groupBy(col(key)).count().filter(col("count") >= threshold)
-      .orderBy(col("count").desc, col(key))
 
   /** Per-key total attached to every row WITHOUT a window over the key —
     * the document-frequency idiom (tf-idf, unigram LM, cross-doc

@@ -46,8 +46,8 @@ import org.apache.spark.sql.functions._
   * Caveat (documented, not hidden): equal-width TIME chunking assumes a
   * hot key's events spread over its time span. A key that emits its
   * whole history in one timestamp tick lands in one chunk — for such
-  * data route by a composite (t, tie-hash) range or use the streaming
-  * sessionizer (`Streaming.sessionize`, O(1) state per key).
+  * data route by a composite (t, tie-hash) range or use the streamed
+  * session windows (q147, `StreamingGates`).
   */
 object SkewWindows {
 

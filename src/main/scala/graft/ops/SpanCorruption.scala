@@ -40,7 +40,7 @@ object SpanCorruption {
 
   /** Gate wrapper: the raw transform plus the deterministic global sort
     * the hash gate needs. At scale use [[spanCorruptRaw]] — augmented
-    * examples feed a sharded write (`Sharding.materializeTrainingSet`'s
+    * examples feed a sharded write (`Sharding.writeShards`'
     * per-task sort), never a global order. */
   def spanCorrupt(docs: DataFrame): DataFrame =
     spanCorruptRaw(docs).orderBy(col("doc_id"))

@@ -179,8 +179,8 @@ object TextAnalysis {
     filterVerdicts(Tables.documents(s, dir)).orderBy(col("doc_id"))
 
   /** The verdict projection alone (no sort): stateless narrow
-    * expressions, so the SAME operator runs over a document STREAM
-    * (Streaming.qualityFilterStream) — parity spec-checked.
+    * expressions, so the SAME operator runs over a document STREAM —
+    * parity spec-checked.
     * `passThrough` carries extra input columns (e.g. source/lang) into
     * the output so consumers like q67's data card never re-join the
     * corpus just to recover attributes the scan already had. */

@@ -64,7 +64,7 @@ object Web {
 
   /** Canonical path: "" → "/", otherwise the trailing slash dropped
     * (the `(.+)/$` group keeps the bare root intact). */
-  def canonicalPath(url: Column): Column = {
+  private def canonicalPath(url: Column): Column = {
     val p = urlPath(url)
     when(p === "", "/").otherwise(regexp_replace(p, "(.+)/$", "$1"))
   }

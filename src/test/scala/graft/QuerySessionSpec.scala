@@ -69,7 +69,7 @@ class QuerySessionSpec extends SparkSpec {
     // job but leaves an entry nothing in a session ever releases
     val dir = "/root/testdata/sf0.001"
     spark.catalog.clearCache()
-    QuerySession.registerPipelineViews(spark,
+    TestViews.registerPipelineViews(spark,
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
     assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty)
@@ -77,7 +77,7 @@ class QuerySessionSpec extends SparkSpec {
 
   test("dedup/similarity pipelines reachable purely via spark.sql") {
     val dir = "/root/testdata/sf0.001"
-    QuerySession.openTestTables(spark, dir)
+    TestViews.openTestTables(spark, dir)
     // pipeline-view registration over already-read tables must be
     // metadata-only: ZERO Spark jobs (the ADVICE r7 session-startup
     // finding — view construction used to train k-means and checkpoint
@@ -85,12 +85,12 @@ class QuerySessionSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
     val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    QuerySession.registerPipelineViews(spark, docs, emb)
+    TestViews.registerPipelineViews(spark, docs, emb)
     val jobsAfter = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     assert(jobsAfter == jobsBefore,
       s"registerPipelineViews ran ${jobsAfter - jobsBefore} Spark job(s)")
-    QuerySession.registerPipelineViews(spark, dir) // + event analytics views
-    QuerySession.registerMaterializedViews(spark, dir)
+    TestViews.registerPipelineViews(spark, dir) // + event analytics views
+    TestViews.registerMaterializedViews(spark, dir)
 
     // the event-analytics views are total and internally consistent
     val ev = spark.sql(
@@ -258,17 +258,6 @@ class QuerySessionSpec extends SparkSpec {
         |        FROM cluster_sample GROUP BY cluster)) <= 20""".stripMargin)
       .collect()(0).getBoolean(0)
     assert(cs, "cluster_sample malformed")
-    // the topic-rebalancing weights are total over the assignment,
-    // normalized, and temperature-compressed vs the raw mass share
-    val cm = spark.sql(
-      """SELECT abs((SELECT sum(weight) FROM cluster_mix) - 1.0) < 1e-9
-        |   AND (SELECT sum(n_vectors) FROM cluster_mix) =
-        |       (SELECT count(*) FROM embeddings)
-        |   AND (SELECT max(weight) FROM cluster_mix) <
-        |       (SELECT max(n_vectors) * 1.0 / sum(n_vectors) FROM cluster_mix)
-        |       + 1e-12""".stripMargin)
-      .collect()(0).getBoolean(0)
-    assert(cm, "cluster_mix not normalized or not compressed")
     // the rollup view reconciles with a direct SQL aggregate over events;
     // the day-count equality makes the check total (an inner join alone
     // would let a silently-dropped day pass)
@@ -339,8 +328,8 @@ class QuerySessionSpec extends SparkSpec {
 
   test("wave-6 views: filled series, anomalies, k-anon release, canonical urls — cross-consistent in pure SQL") {
     val dir = "/root/testdata/sf0.001"
-    QuerySession.openTestTables(spark, dir)
-    QuerySession.registerPipelineViews(spark, dir)
+    TestViews.openTestTables(spark, dir)
+    TestViews.registerPipelineViews(spark, dir)
     val ok = spark.sql(
       """SELECT
         |  -- filled series: active-hour event counts reconcile with raw
@@ -380,8 +369,8 @@ class QuerySessionSpec extends SparkSpec {
 
   test("wave-7 views: overlaps, transition matrix, frequent pairs, exact jaccard, triangles — cross-consistent in pure SQL") {
     val dir = "/root/testdata/sf0.001"
-    QuerySession.openTestTables(spark, dir)
-    QuerySession.registerPipelineViews(spark, dir)
+    TestViews.openTestTables(spark, dir)
+    TestViews.registerPipelineViews(spark, dir)
     val ok = spark.sql(
       """SELECT
         |  -- overlaps are genuine: positive length, even-odd ids only
@@ -417,8 +406,8 @@ class QuerySessionSpec extends SparkSpec {
 
   test("wave-8 views: labeling, split audit, z-scores, hashed features — cross-consistent in pure SQL") {
     val dir = "/root/testdata/sf0.001"
-    QuerySession.openTestTables(spark, dir)
-    QuerySession.registerPipelineViews(spark, dir)
+    TestViews.openTestTables(spark, dir)
+    TestViews.registerPipelineViews(spark, dir)
     def one(sql: String): Long = spark.sql(sql).collect()(0).getLong(0)
     // every vote triple aggregates: one row per doc, 3 votes each,
     // majority count consistent with unanimity
@@ -513,8 +502,9 @@ class QuerySessionSpec extends SparkSpec {
         |""".stripMargin) === 0L)
   }
 
-  test("driver contract: entry() yields rows; every query has a runnable fn") {
-    assert(SparkEntry.entry(spark).count() > 0)          // driver's t1 smoke
+  test("driver contract: q01 yields rows; every query has a runnable fn") {
+    assert(SparkEntry.queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
+      .count() > 0)                                      // t1 smoke
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     // every declared query at least constructs its plan on sf0.001
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -1,7 +1,6 @@
 package graft.etl
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions.input_file_name
 import graft.{Fixtures, SparkSpec}
 
 /** Golden end-to-end (SURVEY.md §5.2): fixture hour of raw lines →
@@ -74,12 +73,27 @@ class ExportJobSpec extends SparkSpec {
     val wd = ExportJob.startWatchdog(spark, 3600).get
     wd.interrupt(); wd.join(5000)
     assert(!wd.isAlive)
+  }
 
-    // filename-time extraction (reference parse_time): first 19 chars
-    val ft = spark.read.text(s"$src/2021-07-18-05-00-12-ABCDEF0123456789")
-      .select(ExportJob.fileTime(input_file_name()).cast("string"))
-      .collect()(0).getString(0)
-    assert(ft == "2021-07-18 05:00:12")
+  test("a malformed HOUR is refused before anything is listed or written") {
+    val base = Files.createTempDirectory("graft-hour").toFile.getAbsolutePath
+    val src = s"$base/in"; val dst = s"$base/out"; val tracking = s"$base/track"
+    new java.io.File(src).mkdirs()
+    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-ABCDEF0123456789"),
+      Fixtures.happyLine.getBytes)
+    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-06-00-01-0123456789ABCDEF"),
+      Fixtures.roleLine.getBytes)
+    // a day globs every hour of it; a one-digit hour globs hours 00-09;
+    // the rest are not calendar hours at all
+    Seq("2021-07-18", "2021-07-18-0", "2021-07-18-5", "2021-07-18-24",
+      "2021-02-30-05", "2021-7-18-05", "2021-07-18-05x", "").foreach { h =>
+      intercept[IllegalArgumentException](
+        ExportJob.exportHour(spark, src, dst, tracking, h))
+      assert(!new java.io.File(dst).exists, s"HOUR '$h' wrote under dst")
+      assert(!new java.io.File(tracking).exists, s"HOUR '$h' wrote a marker")
+    }
+    ExportJob.requireHour("2021-07-18-05")
+    ExportJob.requireHour("2024-02-29-23")
   }
 
   test("malformed-input counters: truncated, bad-time and bad-IP lines reach the marker") {

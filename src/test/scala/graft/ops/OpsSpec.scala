@@ -150,95 +150,6 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("multimodal: mapPartitions decode stub preserves schema and values") {
-    val meta = Multimodal.extractFeatures(Multimodal.mediaTable(spark, dir))
-    val rows = meta.collect()
-    assert(rows.length == 500)
-    val byId = rows.map(m => m.doc_id -> m).toMap
-    val doc0 = graft.Tables.documents(spark, dir)
-      .where(col("doc_id") === 0).select("text").collect()(0).getString(0)
-    assert(byId(0L).n_bytes == doc0.getBytes("UTF-8").length)
-    assert(byId(0L).width >= 64 && byId(0L).width < 192)
-    assert(byId(0L).media_type == "image")
-    assert(byId(1L).media_type == "audio")
-    // md5 agrees with the SQL-side md5 of the same payload
-    val sqlMd5 = graft.Tables.documents(spark, dir)
-      .where(col("doc_id") === 0).select(md5(col("text").cast("binary"))).collect()(0).getString(0)
-    assert(byId(0L).payload_md5 == sqlMd5)
-  }
-
-  test("multimodal: real javax.imageio decode of PNG/JPEG payloads through the pipeline") {
-    import spark.implicits._
-    // deterministic 8x4 checkerboard: half pure white (luma 255), half
-    // pure black (0) → true mean luma exactly 127.5
-    val img = new java.awt.image.BufferedImage(8, 4,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 4; x <- 0 until 8)
-      img.setRGB(x, y, if ((x + y) % 2 == 0) 0xFFFFFF else 0x000000)
-    def encode(fmt: String): Array[Byte] = {
-      val b = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, fmt, b)
-      b.toByteArray
-    }
-    val png = encode("png"); val jpg = encode("jpg")
-    val df = Seq(
-      (1L, "image", png), (2L, "image", jpg),
-      (3L, "audio", png), // non-image media: stays on the stub path
-      (4L, "image", Array[Byte](1, 2, 3)) // corrupt image: degrades to stub, no crash
-    ).toDF("doc_id", "media_type", "payload")
-    val m = Multimodal.extractFeatures(df).collect().map(r => r.doc_id -> r).toMap
-
-    assert(m(1L).width == 8 && m(1L).height == 4)
-    assert(math.abs(m(1L).mean_luma - 127.5) < 1e-9) // PNG is lossless
-    assert(m(2L).width == 8 && m(2L).height == 4)
-    assert(math.abs(m(2L).mean_luma - 127.5) < 40.0) // JPEG is lossy
-    assert(m(3L).width == 64 + (png(0) & 0x7f)) // stub's byte-derived "width"
-    assert(m(4L).width == 64 + 1)
-    assert(m(1L).payload_md5 != m(2L).payload_md5)
-
-    // real resize: decode → scale → PNG re-encode roundtrips to the
-    // target dims
-    val resized = Multimodal.resizeImage(png, 4, 2)
-    val rd = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(resized))
-    assert(rd.getWidth == 4 && rd.getHeight == 2)
-  }
-
-  test("multimodal: real javax.sound.sampled WAV decode through the pipeline") {
-    import spark.implicits._
-    // 1 s of a 440 Hz sine at amplitude 0.5, 8 kHz mono 16-bit PCM:
-    // true duration exactly 1.0 s, true RMS = 0.5/sqrt(2)
-    val rate = 8000f
-    val fmt = new javax.sound.sampled.AudioFormat(rate, 16, 1, true, false)
-    val samples = Array.tabulate(8000) { i =>
-      (0.5 * math.sin(2 * math.Pi * 440 * i / rate) * 32767).toInt.toShort
-    }
-    val bytes = new Array[Byte](samples.length * 2)
-    samples.zipWithIndex.foreach { case (s, i) =>
-      bytes(2 * i) = (s & 0xff).toByte
-      bytes(2 * i + 1) = ((s >> 8) & 0xff).toByte
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(
-      new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(bytes), fmt, samples.length),
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, baos)
-    val wav = baos.toByteArray
-
-    val df = Seq(
-      (1L, "audio", wav),
-      (2L, "audio", Array[Byte](9, 9, 9)), // not a WAV: degrades to stub
-      (3L, "video", wav)                   // video never hits the audio decoder
-    ).toDF("doc_id", "media_type", "payload")
-    val m = Multimodal.extractFeatures(df).collect().map(r => r.doc_id -> r).toMap
-
-    assert(m(1L).sample_rate == 8000.0 && m(1L).channels == 1)
-    assert(math.abs(m(1L).duration_s - 1.0) < 1e-9)
-    assert(math.abs(m(1L).rms - 0.5 / math.sqrt(2)) < 1e-3,
-      f"WAV RMS ${m(1L).rms}%.4f != ${0.5 / math.sqrt(2)}%.4f")
-    assert(m(2L).sample_rate == 0.0 && m(2L).rms == 0.0) // stub fallback
-    assert(m(3L).sample_rate == 0.0)                     // stub (video)
-  }
-
   test("multimodal: frame sampling explodes rows partition-locally") {
     val frames = Multimodal.sampleFrames(Multimodal.mediaTable(spark, dir), frameSize = 64, everyN = 2)
     val f0 = frames.filter(_.doc_id == 0L).collect().sortBy(_.frame_idx)
@@ -274,11 +185,23 @@ class OpsSpec extends SparkSpec {
     assert(exact.isEmpty || lsh.nonEmpty) // bands catch at least some true pairs
   }
 
+  /** (query, neighbor) top-10 of the q28 queries (vec_id < 5) probed
+    * over a fresh IVF cell layout of `d`'s embeddings. */
+  private def layoutIvfTopK(d: String, nlist: Int, nprobe: Int): Set[(Long, Long)] = {
+    val dst = java.nio.file.Files.createTempDirectory("graft-ivf")
+      .toFile.getAbsolutePath + "/emb"
+    val emb = graft.Tables.embeddings(spark, d)
+    Similarity.writeCellBucketed(emb, dst, nlist = nlist)
+    val queries = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    Similarity.bucketedIvfTopK(spark, dst, queries, nprobe = nprobe).collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+  }
+
   test("IVF ANN: probes a fraction of cells, recalls a useful share of true neighbors") {
     val bf = Similarity.q28BruteForceTopK(spark, dir).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val ivf = Similarity.ivfTopK(spark, dir, nlist = 16, nprobe = 8).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+    val ivf = layoutIvfTopK(dir, nlist = 16, nprobe = 8)
     assert(ivf.nonEmpty)
     val recall = bf.intersect(ivf).size.toDouble / bf.size
     // same bar as the q29 multi-probe LSH path: spherical k-means cells
@@ -566,33 +489,14 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("tuned cell layout persists its own probe recipe; recipe probe clears the bar") {
-    val dst = java.nio.file.Files.createTempDirectory("graft-celltuned")
-      .toFile.getAbsolutePath + "/emb"
-    val knobs = Similarity.writeCellBucketedTuned(
-      graft.Tables.embeddings(spark, dir), dst, targetRecall = 0.7)
-    // the layout carries the tuner's pick
-    val stored = spark.read.parquet(dst + "_knobs").collect()(0)
-    assert(stored.getAs[Int]("nlist") == knobs.nlist &&
-      stored.getAs[Int]("nprobe") == knobs.nprobe)
-    // nprobe=0 = "use the layout's recipe" — no caller-side guessing
-    val queries = graft.Tables.embeddings(spark, dir).filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val ivf = Similarity.bucketedIvfTopK(spark, dst, queries, nprobe = 0).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val bf = Similarity.q28BruteForceTopK(spark, dir).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val recall = bf.intersect(ivf).size.toDouble / bf.size
-    assert(recall >= 0.6, f"recipe-probe recall $recall%.2f < 0.6 ($knobs)")
-  }
-
   test("auto-tuned ANN knobs: derived from a corpus sample, recall bars hold on both SFs") {
     for (d <- Seq(dir, "/root/testdata/sf0.01")) {
       val bf = Similarity.q28BruteForceTopK(spark, d).collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
 
-      val (lshDf, lshKnobs) = Similarity.tunedLshTopK(spark, d, targetRecall = 0.7)
-      val lsh = lshDf.collect()
+      val sample = AnnTuner.sampleUnit(graft.Tables.embeddings(spark, d))
+      val lshKnobs = AnnTuner.tuneLsh(sample, targetRecall = 0.7)
+      val lsh = Similarity.lshTopK(spark, d, lshKnobs.planes, lshKnobs.radius).collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
       val lshRecall = bf.intersect(lsh).size.toDouble / bf.size
       // the knobs are DERIVED (sample-estimated), not this corpus's
@@ -603,9 +507,8 @@ class OpsSpec extends SparkSpec {
       // prunes, not the probe-everything corner
       assert(lshKnobs.estIoFrac < 0.9, s"tuned LSH knobs degenerate: $lshKnobs")
 
-      val (ivfDf, ivfKnobs) = Similarity.tunedIvfTopK(spark, d, targetRecall = 0.7)
-      val ivf = ivfDf.collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+      val ivfKnobs = AnnTuner.tuneIvf(sample, targetRecall = 0.7)
+      val ivf = layoutIvfTopK(d, ivfKnobs.nlist, ivfKnobs.nprobe)
       val ivfRecall = bf.intersect(ivf).size.toDouble / bf.size
       assert(ivfRecall >= 0.6, f"tuned IVF $ivfKnobs recall $ivfRecall%.2f < 0.6 at $d")
       assert(ivfKnobs.estIoFrac < 0.6, s"tuned IVF knobs degenerate: $ivfKnobs")
@@ -769,22 +672,28 @@ class OpsSpec extends SparkSpec {
   test("tuned within-cell SemDeDup: derived cell count clears the recall bar") {
     val emb = graft.Tables.embeddings(spark, dir)
     val sample = AnnTuner.sampleUnit(emb)
-    val knobs = AnnTuner.tuneSemDedupCells(sample, targetRecall = 0.7)
+    // q226's rule: the largest cell count whose sampled co-location
+    // recall clears the target
+    def tune(smp: Array[Array[Double]]) =
+      AnnTuner.pickSemDedup(AnnTuner.semDedupCandidates(smp), targetRecall = 0.7)
+    val knobs = tune(sample)
     // at sf0.001 the sample IS the corpus, so the estimate is exact-ish:
     // the tuner must not hand back the recall-killing fine grid
     assert(knobs.nlist >= 1 && knobs.estRecall >= 0.5, s"bad knobs: $knobs")
+    assert(tune(AnnTuner.sampleUnit(emb)) == knobs,
+      "tuner must be deterministic for a fixed corpus")
     val dst = java.nio.file.Files.createTempDirectory("graft-semtune")
       .toFile.getAbsolutePath + "/emb"
-    val (k2, decisions) = Quantize.semanticDedupCellsTuned(spark, dir, dst)
-    assert(k2 == knobs, "tuner must be deterministic for a fixed corpus")
-    val cellDrops = decisions.collect().map(_.getLong(0)).toSet
+    Similarity.writeCellBucketed(emb, dst, nlist = knobs.nlist, int8 = true)
+    val cellDrops = Quantize.semanticDedupInCells(spark, dst)
+      .collect().map(_.getLong(0)).toSet
     val exact = Quantize.q47SemanticDedup(spark, dir)
       .collect().map(_.getLong(0)).toSet
     val recall = cellDrops.count(exact.contains).toDouble / exact.size
-    assert(recall >= 0.5, s"tuned recall $recall below 0.5 at $k2")
-    // the degenerate corner: a tiny sample degrades to one cell (exact)
-    val tiny = AnnTuner.tuneSemDedupCells(sample.take(4), 0.7)
-    assert(tiny.nlist == 1 && tiny.estRecall == 1.0)
+    assert(recall >= 0.5, s"tuned recall $recall below 0.5 at $knobs")
+    // the degenerate corner: a tiny sample yields no candidate grid, so
+    // q226 falls back to one cell (exact)
+    assert(AnnTuner.semDedupCandidates(sample.take(4)).isEmpty)
   }
 
   test("IP anonymization: /24 mask drops the host octet, pseudonyms are stable and collision-free") {

@@ -296,7 +296,8 @@ class RetrievalSpec extends SparkSpec {
     }
     // redaction is idempotent: placeholders carry no identifier shapes
     val redacted = Privacy.piiScan(
-      df.select(col("id"), Privacy.redactText(col("text")).as("text")), col("text"))
+      df.select(col("id"), Privacy.redactDigitRuns(Privacy.redactIps(
+        Privacy.redactEmails(col("text")))).as("text")), col("text"))
       .collect().map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(redacted.forall(_ == ((0L, 0L, 0L))))
   }
@@ -395,18 +396,18 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("shard writer: files hold exactly the keepers, in exact permutation order") {
-    val base = java.nio.file.Files.createTempDirectory("graft-shards").toString
-    val verdicts = Sharding.materializeTrainingSet(spark, dir, base,
-      budget = 5000L, nEpochs = 1, docsPerShard = 16L)
-    val dst = s"$base/epoch=1"
-    val keptIds = verdicts.collect()
-      .filter(_.getBoolean(2)).map(_.getLong(0)).toSet
+    val dst = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/epoch=1"
+    // the keepers: q57's verdict cascade at a 5000-token budget
+    val keptIds = Pipeline.q57PipelineDecision(spark, dir, 5000L)
+      .filter(col("selected")).collect().map(_.getLong(0)).toSet
     assert(keptIds.nonEmpty)
+    val kept = graft.Tables.documents(spark, dir)
+      .filter(col("doc_id").isin(keptIds.toSeq.map(Long.box): _*))
     // expected order: the q56 permutation restricted to the keepers
-    val expected = Selection.epochShuffle(
-        graft.Tables.documents(spark, dir)
-          .filter(col("doc_id").isin(keptIds.toSeq.map(Long.box): _*))
-          .select(col("doc_id")), epoch = 1, docsPerShard = 16L)
+    val assignment = Selection.epochShuffle(
+      kept.select(col("doc_id")), epoch = 1, docsPerShard = 16L).localCheckpoint()
+    Sharding.writeShards(kept, assignment, dst)
+    val expected = assignment
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
     val byShard = expected.groupBy(_._2)
     // read each shard dir back: same doc set, and file row order == the
@@ -462,75 +463,23 @@ class RetrievalSpec extends SparkSpec {
     val shardIds = spark.read.parquet(s"$base/epoch=1")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(shardIds == expectAnchors)
-    assert(Sharding.validateManifest(spark, base).count() == 0)
-  }
-
-  test("indexed contrastive set ≡ the scan flavor when the draw covers every doc") {
-    val base = java.nio.file.Files.createTempDirectory("graft-contrastive-idx").toString
-    val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val pDst = s"$base/postings"
-    val mDst = s"$base/minhash"
-    Retrieval.writePostingsBucketed(docs, pDst, nBuckets = 16)
-    NearDupIndex.writeMinhashLayout(docs, mDst)
-
-    def triples(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](3))).toSeq
-    // a draw bound above the corpus size makes BOTH flavors' anchor set
-    // "every doc with a partner" — the whole dataflow must then agree
-    // row-for-row: positives (probe pairs ≡ full pairs restricted),
-    // negatives (index BM25 ≡ scan BM25, same exclusions), layout
-    val scan = triples(Sharding.materializeContrastiveSet(
-      spark, dir, s"$base/scan", kNeg = 4, maxAnchors = 10000))
-    val idx = triples(Sharding.materializeContrastiveSetIndexed(
-      spark, dir, pDst, mDst, s"$base/idx", kNeg = 4, maxCandidates = 10000))
-    assert(scan.nonEmpty)
-    assert(idx == scan, s"indexed flavor diverged:\nidx=${idx.take(3)}\nscan=${scan.take(3)}")
-    assert(Sharding.validateManifest(spark, s"$base/idx").count() == 0)
-  }
-
-  test("tokenized shards: rows carry ids that re-derive from the persisted tokenizer tables") {
-    val base = java.nio.file.Files.createTempDirectory("graft-tokshards").toString
-    val verdicts = Sharding.materializeTokenizedTrainingSet(spark, dir, base,
-      budget = 5000L, nEpochs = 1, docsPerShard = 16L, nMerges = 80, vocabCap = 1000)
-    val keptIds = verdicts.collect()
-      .filter(_.getBoolean(2)).map(_.getLong(0)).toSet
-    assert(keptIds.nonEmpty)
-
-    // the tokenizer is DATA next to the shards — re-derive every row's
-    // ids from the persisted merges + vocab and demand equality
-    val merges = Bpe.readMerges(spark, s"$base/_tokenizer/merges")
-    assert(merges.nonEmpty)
-    val vocab = spark.read.parquet(s"$base/_tokenizer/vocab")
-      .orderBy(col("id")).collect().map(_.getString(1))
-    val enc = new Bpe.IdEncoder(merges, vocab)
-    val rows = spark.read.parquet(s"$base/epoch=1")
-      .select("doc_id", "text", "token_ids").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getSeq[Int](2)))
-    assert(rows.map(_._1).toSet == keptIds, "shards must hold exactly the keepers")
-    rows.foreach { case (id, text, ids) =>
-      val expect = enc.idsText(
-          org.apache.spark.unsafe.types.UTF8String.fromString(text))
-        .toIntArray().toSeq
-      assert(ids == expect, s"doc $id shard ids diverge from the persisted tokenizer")
-      assert(ids.nonEmpty)
-    }
-    // the manifest machinery is shared — a clean materialization validates
-    assert(Sharding.validateManifest(spark, base).count() == 0)
+    assert(ShardManifestCheck.validateManifest(spark, base).count() == 0)
   }
 
   test("mixed shards: concatenation is the stride stream; every shard holds the mixture") {
     val base = java.nio.file.Files.createTempDirectory("graft-mixshards").toString
-    val verdicts = Sharding.materializeMixedTrainingSet(spark, dir, base,
-      budget = 5000L, nEpochs = 1, docsPerShard = 16L)
-    val keptIds = verdicts.collect()
-      .filter(_.getBoolean(2)).map(_.getLong(0)).toSet
+    val keptIds = Pipeline.q57PipelineDecision(spark, dir, 5000L)
+      .filter(col("selected")).collect().map(_.getLong(0)).toSet
     assert(keptIds.nonEmpty)
     val keptDocs = graft.Tables.documents(spark, dir)
       .filter(col("doc_id").isin(keptIds.toSeq.map(Long.box): _*))
-    // expected: the deterministic mixed assignment over the keepers
-    val expected = Mixing.mixedShardAssignment(
+    // the deterministic mixed assignment over the keepers, laid out by
+    // the shard writer
+    val assignment = Mixing.mixedShardAssignment(
         keptDocs.select(col("doc_id"), col("source"), col("text")),
-        epoch = 1, docsPerShard = 16L)
+        epoch = 1, docsPerShard = 16L).localCheckpoint()
+    Sharding.writeShards(keptDocs, assignment, s"$base/epoch=1")
+    val expected = assignment
       .collect().map(r => (r.getLong(0), r.getDouble(3), r.getLong(4), r.getLong(5)))
     val byShard = expected.groupBy(_._3)
     val shardDirs = new java.io.File(s"$base/epoch=1").listFiles()
@@ -580,10 +529,11 @@ class RetrievalSpec extends SparkSpec {
 
   test("multi-epoch shards: decorrelated permutations, manifest certifies the files") {
     val base = java.nio.file.Files.createTempDirectory("graft-epochs").toString
-    val verdicts = Sharding.materializeTrainingSet(spark, dir, base,
-      budget = 5000L, nEpochs = 2, docsPerShard = 16L)
-    val keptIds = verdicts.collect()
-      .filter(_.getBoolean(2)).map(_.getLong(0)).toSet
+    // q98's contrastive materialization, two epochs of every anchor
+    val keptIds = Sharding.materializeContrastiveSet(spark, dir, base,
+        maxAnchors = 10000, docsPerShard = 16L, nEpochs = 2)
+      .collect().map(_.getLong(0)).toSet
+    assert(keptIds.size > 16, s"too few anchors to shard: ${keptIds.size}")
 
     // both epochs hold exactly the keeper set, in their own q56 orders
     def epochOrder(e: Int): Seq[Long] = {
@@ -610,7 +560,7 @@ class RetrievalSpec extends SparkSpec {
     assert(o1 == expected1)
 
     // the manifest matches the files exactly...
-    assert(Sharding.validateManifest(spark, base).isEmpty)
+    assert(ShardManifestCheck.validateManifest(spark, base).isEmpty)
     val manifest = spark.read.parquet(s"$base/_manifest")
     assert(manifest.select(sum(col("n_rows"))).collect()(0).getLong(0)
       == 2L * keptIds.size)
@@ -618,7 +568,7 @@ class RetrievalSpec extends SparkSpec {
     val victim = new java.io.File(s"$base/epoch=2").listFiles()
       .filter(_.getName.startsWith("shard_id=")).maxBy(_.getName)
     victim.listFiles().foreach(_.delete()); victim.delete()
-    val bad = Sharding.validateManifest(spark, base).collect()
+    val bad = ShardManifestCheck.validateManifest(spark, base).collect()
     assert(bad.length == 1 && bad(0).getInt(0) == 2 &&
       bad(0).get(1).toString == victim.getName.stripPrefix("shard_id="),
       s"validator missed the lost shard: ${bad.toSeq}")
@@ -628,7 +578,7 @@ class RetrievalSpec extends SparkSpec {
     val e2 = new java.io.File(s"$base/epoch=2")
     val e9 = new java.io.File(s"$base/epoch=9")
     assert(e2.renameTo(e9))
-    val worse = Sharding.validateManifest(spark, base).collect()
+    val worse = ShardManifestCheck.validateManifest(spark, base).collect()
     val missing2 = worse.filter(r => r.getInt(0) == 2)
     val stray9 = worse.filter(r => r.getInt(0) == 9)
     assert(missing2.nonEmpty && missing2.forall(_.isNullAt(3)),
@@ -644,11 +594,15 @@ class RetrievalSpec extends SparkSpec {
     // re-encoding the identical codes (pure function of seed + data)
     val cb2 = ProductQuantization.train(emb)
     assert(cb.centroids.flatten.flatten.toSeq == cb2.centroids.flatten.flatten.toSeq)
-    val codes = ProductQuantization.encode(emb, cb).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val codes2 = ProductQuantization.encode(emb, cb).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(codes == codes2)
+    val root = java.nio.file.Files.createTempDirectory("graft-pqcodes").toString
+    def codesOf(dst: String) = {
+      ProductQuantization.writeCellBucketedPq(emb, dst, nlist = 16)
+      spark.read.parquet(dst).collect()
+        .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Int](r.fieldIndex("codes"))).toMap
+    }
+    val codes = codesOf(s"$root/a")
+    val codes2 = codesOf(s"$root/b")
+    assert(codes.nonEmpty && codes == codes2)
     // every vector gets M codes in [0, K): 8 byte-sized codes vs 64
     // floats — the 32x compression claim
     assert(codes.values.forall(cs => cs.length == 8 && cs.forall(c => c >= 0 && c < 16)))
@@ -669,8 +623,8 @@ class RetrievalSpec extends SparkSpec {
 
   test("pq ann: excludeSelf=false keeps a corpus row whose id merely collides with an external query id") {
     val emb = graft.Tables.embeddings(spark, dir)
-    val cb = ProductQuantization.train(emb)
-    val codes = ProductQuantization.encode(emb, cb).localCheckpoint()
+    val dst = java.nio.file.Files.createTempDirectory("graft-pqself").toString + "/layout"
+    ProductQuantization.writeCellBucketedPq(emb, dst, nlist = 16)
     // planted collision: an EXTERNAL query that happens to reuse corpus
     // id 7 but asks with row 7's own vector — its true top-1 IS corpus
     // row 7 (cosine 1). Under the q28/q64 self-query convention
@@ -681,8 +635,8 @@ class RetrievalSpec extends SparkSpec {
       .select(col("embedding")).head().getSeq[Float](0).toArray.map(_.toDouble)
     val queries = Array(collidingId -> qv)
     def topIds(excludeSelf: Boolean): Seq[Long] =
-      ProductQuantization.adcTopK(emb, codes, cb, queries,
-          k = 5, rerank = 50, excludeSelf = excludeSelf)
+      ProductQuantization.bucketedPqTopK(spark, dst, emb, queries,
+          nprobe = 16, k = 5, rerank = 50, excludeSelf = excludeSelf)
         .collect().map(_.getAs[Long]("neighbor_id")).toSeq
     val kept = topIds(excludeSelf = false)
     assert(kept.contains(collidingId),

@@ -2,37 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.etl.Bucketing
 
 class ScaleOpsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  test("bucketed tables join without a shuffle exchange") {
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS o_b")
-    // a previously-failed run can leave the managed-table dir behind
-    // after the metastore entry is gone; clear it or CTAS refuses
-    Seq("li_b", "o_b").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    Bucketing.writeBucketed(
-      graft.Tables.lineitem(spark, dir).withColumnRenamed("l_orderkey", "orderkey"),
-      "li_b", "orderkey", 8)
-    Bucketing.writeBucketed(
-      graft.Tables.orders(spark, dir).withColumnRenamed("o_orderkey", "orderkey"),
-      "o_b", "orderkey", 8)
-    val joined = Bucketing.colocatedJoin(spark, "li_b", "o_b", "orderkey")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"expected exchange-free bucketed join, got:\n$plan")
-    // correctness: same result as the plain join
-    val expected = graft.Tables.lineitem(spark, dir).join(
-      graft.Tables.orders(spark, dir),
-      col("l_orderkey") === col("o_orderkey")).count()
-    assert(joined.count() == expected)
-  }
 
   test("SpaceSaving heavy hitters: exact on small domains, frequency guarantee") {
     import spark.implicits._
@@ -314,19 +287,6 @@ class ScaleOpsSpec extends SparkSpec {
       .collect().map(x => (Option(x.get(0)), x.getLong(1), x.getLong(2)))
     assert(sc.exists(x => x._1.isEmpty && x._3 == 5000L),
       s"null-key session counts missing: ${sc.mkString(",")}")
-  }
-
-  test("salted join equals plain join on skewed data") {
-    import spark.implicits._
-    val left = (1 to 10000).map(i => (if (i % 100 == 0) 1L else i.toLong, s"v$i"))
-      .toDF("k", "payload") // key 1 is hot
-    val right = (1L to 200L).map(k => (k, s"dim$k")).toDF("k", "attr")
-    val salted = SkewJoin.saltedJoin(left, right, "k", salts = 8)
-      .select(col("k"), col("payload"), col("attr"))
-    val plain = left.join(right, "k").select(col("k"), col("payload"), col("attr"))
-    assert(salted.count() == plain.count())
-    assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
-    assert(SkewJoin.skewedKeys(left, "k", 50L).collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("withKeyTotal conserves rows with a planted NULL key (both routing branches)") {

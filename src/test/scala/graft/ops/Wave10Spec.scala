@@ -63,10 +63,9 @@ class Wave10Spec extends SparkSpec {
         .as("m")).head().getSeq[Double](0)
     assert(unionSketch === mergedViaArrays)
     // intersection: true overlap 5000 of union 18000
-    val wide = sk.groupBy().pivot("key").agg(first("minK"))
-    val inter = wide.select(
-      KmvSketch.intersectionEstimate(col("a"), col("b"), k).as("i"))
-      .head().getDouble(0)
+    val inter = KmvSketch.overlapMatrix(sk, k)
+      .filter(col("s1") === "a" && col("s2") === "b")
+      .select(col("inter_est")).head().getDouble(0)
     assert(math.abs(inter - 5000) / 5000.0 < 0.5, inter.toString)
   }
 }

@@ -216,7 +216,7 @@ class Wave6Spec extends SparkSpec {
     assert(java.lang.Long.bitCount(hm(1L) ^ hm(3L)) <= 3)
     assert(java.lang.Long.bitCount(hm(1L) ^ hm(4L)) > 3)
     assert(!hm.contains(5L))
-    val pairs = Multimodal.imageNearDupPairs(hashes.toDF())
+    val pairs = Multimodal.imageNearDupPairsCollapsed(hashes.toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 3L)) &&
       pairs.contains((2L, 3L)))

@@ -2,143 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.{Fixtures, SparkSpec}
+import graft.SparkSpec
 
 class StreamingSpec extends SparkSpec {
-
-  test("streaming export: file source → parse → partitioned sink, exactly-once") {
-    val base = Files.createTempDirectory("graft-stream").toFile.getAbsolutePath
-    val src = s"$base/in"; val dst = s"$base/out"; val ckpt = s"$base/ckpt"
-    new java.io.File(src).mkdirs()
-    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-AAAA"),
-      (Fixtures.happyLine + "\n" + Fixtures.dashLine).getBytes)
-
-    Streaming.streamingExport(spark, src, dst, ckpt).awaitTermination()
-    assert(spark.read.parquet(dst).count() == 2)
-
-    // a late-arriving file is picked up by the next trigger; the first
-    // file is NOT reprocessed (checkpoint = exactly-once file progress)
-    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-06-00-01-BBBB"),
-      Fixtures.roleLine.getBytes)
-    Streaming.streamingExport(spark, src, dst, ckpt).awaitTermination()
-    val out = spark.read.parquet(dst)
-    assert(out.count() == 3)
-    assert(out.where("operation = 'REST.PUT.OBJECT' and hour = 6").count() == 1)
-  }
-
-  test("streaming/batch parity: streamingExport and runHour produce identical datasets") {
-    val base = Files.createTempDirectory("graft-parity").toFile.getAbsolutePath
-    val src = s"$base/in"
-    new java.io.File(src).mkdirs()
-    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-AAAA"),
-      (Fixtures.happyLine + "\n" + Fixtures.dashLine).getBytes)
-    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-30-44-BBBB"),
-      Fixtures.roleLine.getBytes)
-
-    val dstS = s"$base/out_stream"
-    Streaming.streamingExport(spark, src, dstS, s"$base/ckpt").awaitTermination()
-    val dstB = s"$base/out_batch"
-    graft.etl.ExportJob.runHour(spark, src, dstB, s"$base/track", "2021-07-18-05")
-
-    // both pipelines share Enrich.parseLines and the partition layout —
-    // the ONLY allowed differences are file naming and file count (the
-    // batch path repartitions per combo and renames; the streaming sink
-    // writes per micro-batch task). Same schema, same partition dirs,
-    // same full row set.
-    val s = spark.read.parquet(dstS)
-    val b = spark.read.parquet(dstB)
-    assert(s.columns.sorted.toSeq == b.columns.sorted.toSeq)
-    val cols = s.columns.sorted.map(col).toSeq
-    assert(s.select(cols: _*).exceptAll(b.select(cols: _*)).isEmpty &&
-           b.select(cols: _*).exceptAll(s.select(cols: _*)).isEmpty,
-      "streaming and batch exports diverge")
-    assert(s.count() == 3 && b.count() == 3)
-    def partDirs(root: String): Set[String] = {
-      val base = java.nio.file.Paths.get(root)
-      val out = scala.collection.mutable.Set[String]()
-      java.nio.file.Files.walk(base).forEach { p =>
-        val f = p.toFile
-        if (f.isFile && f.getName.endsWith(".parquet"))
-          out += base.relativize(p.getParent).toString
-      }
-      out.toSet
-    }
-    assert(partDirs(dstS) == partDirs(dstB), "partition dir layouts diverge")
-  }
-
-  test("watermarked hourly windowed aggregation over the parsed stream") {
-    val base = Files.createTempDirectory("graft-stream2").toFile.getAbsolutePath
-    val src = s"$base/in"
-    new java.io.File(src).mkdirs()
-    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-AAAA"),
-      (Fixtures.happyLine + "\n" + Fixtures.dashLine + "\n" + Fixtures.roleLine).getBytes)
-
-    val lines = spark.readStream.text(src)
-    val agg = Streaming.hourlyOperationCounts(graft.etl.Enrich.parseLines(lines))
-    val q = agg.writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName("hourly_counts").start()
-    q.processAllAvailable(); q.stop()
-
-    val res = spark.table("hourly_counts")
-      .select(col("window.start").cast("string").as("ws"), col("operation"), col("n"), col("bytes_sent"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
-    assert(res == Set(
-      ("2021-07-18 05:00:00", "REST.GET.OBJECT", 1L, 2662992L),
-      ("2021-07-18 05:00:00", "REST.GET.LOGGING_STATUS", 1L, 242L),
-      ("2021-07-18 06:00:00", "REST.PUT.OBJECT", 1L, 0L)))
-  }
-
-  test("streaming dedup drops duplicate request ids within the watermark") {
-    val base = Files.createTempDirectory("graft-dedup").toFile.getAbsolutePath
-    val src = s"$base/in"
-    new java.io.File(src).mkdirs()
-    // the same requestid three ways: verbatim duplicate, AND a retry 10
-    // minutes later (same id, different event_time — the normal duplicate
-    // shape); plus one genuinely distinct line. Only id-keyed state
-    // (dropDuplicatesWithinWatermark) drops the retry.
-    Files.write(java.nio.file.Paths.get(s"$src/2021-07-18-05-00-12-AAAA"),
-      (Fixtures.happyLine + "\n" + Fixtures.happyLine + "\n" +
-        Fixtures.happyRetryLine + "\n" + Fixtures.dashLine).getBytes)
-    val lines = spark.readStream.text(src)
-    val deduped = Streaming.dedupStream(graft.etl.Enrich.parseLines(lines))
-    val q = deduped.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("dedup_sink").start()
-    q.processAllAvailable(); q.stop()
-    val ids = spark.table("dedup_sink").select("requestid").collect().map(_.getString(0))
-    assert(ids.sorted.toSeq == Seq("3E57427F3EXAMPLE", "891CE47D2EXAMPLE"))
-  }
-
-  test("stateful sessionization matches the batch lag+cumsum operator") {
-    import spark.implicits._
-    val hour = 3600000L
-    val events = Seq(
-      Streaming.Event(1L, 0L, 1.0),            // session 1
-      Streaming.Event(1L, 60000L, 1.0),        // +1 min → same session
-      Streaming.Event(1L, hour, 1.0),          // +59 min gap → session 2
-      Streaming.Event(2L, 0L, 1.0)).toDS()     // separate user
-    // mapGroupsWithState runs in batch mode too (single-batch state)
-    val result = Streaming.sessionize(events)
-    val rows = result.collect().map(u => (u.user_id, u.n_sessions, u.n_events)).toSet
-    assert(rows == Set((1L, 2L, 3L), (2L, 1L, 1L)))
-  }
-
-  test("streaming sessionize ≡ batch q14 over the real events fixture") {
-    import spark.implicits._
-    // q14's scaladoc points bot-heavy corpora at Streaming.sessionize as
-    // the skew-safe alternative — this proves the two operators agree on
-    // the actual events table, not just a toy sequence
-    val dir = "/root/testdata/sf0.001"
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("user_id"), expr("ts DIV 1000000").as("ts_ms"), col("value"))
-      .as[Streaming.Event]
-    val streamed = Streaming.sessionize(ev).collect()
-      .map(u => (u.user_id, u.n_sessions, u.n_events)).toSet
-    val batch = graft.queries.Relational.q14Sessionize(spark, dir).collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_sessions"),
-        r.getAs[Long]("n_events"))).toSet
-    assert(streamed.nonEmpty && streamed == batch)
-  }
 
   test("streaming quality filter ≡ batch q39 over the documents fixture") {
     val dir = "/root/testdata/sf0.001"
@@ -149,7 +15,7 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       watched.resolve("documents.parquet"))
     val stream = spark.readStream.schema(schema).parquet(watched.toString)
-    val q = Streaming.qualityFilterStream(stream)
+    val q = graft.ops.TextAnalysis.filterVerdicts(stream)
       .writeStream.format("memory").queryName("quality_sink")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -175,7 +41,8 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       watched.resolve("documents.parquet"))
     val stream = spark.readStream.schema(schema).parquet(watched.toString)
-    val q = Streaming.qualityScoreStream(stream, w)
+    val q = graft.ops.QualityModel.score(
+        graft.ops.QualityModel.features(stream, widen = false), w)
       .writeStream.format("memory").queryName("score_sink")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -187,48 +54,6 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSet
     assert(streamed.nonEmpty && streamed == batch)
     assert(streamed.exists(_._3) && streamed.exists(!_._3))
-  }
-
-  test("streaming ingest dedup: corpus-first, min-id within batch, keepers extend the index") {
-    import spark.implicits._
-    import graft.ops.NearDupIndex
-    def mk(rows: (Long, Seq[String])*) =
-      rows.map { case (id, ws) => (id, ws.mkString(" ")) }.toSeq.toDF("doc_id", "text")
-    val w1 = (1 to 12).map(i => s"alpha$i")
-    val w2 = (1 to 12).map(i => s"beta$i")
-    val n1 = (1 to 12).map(i => s"gamma$i")
-    val n2 = (1 to 12).map(i => s"delta$i")
-    val root = java.nio.file.Files.createTempDirectory("graft-ingest")
-    val idx = root.resolve("idx").toString
-    NearDupIndex.writeMinhashLayout(mk(1L -> w1, 2L -> w2), idx)
-    val watched = java.nio.file.Files.createDirectory(root.resolve("in"))
-    def stage(name: String, df: org.apache.spark.sql.DataFrame, mtime: Long): Unit = {
-      val tmpd = root.resolve(name + "_tmp").toString
-      df.coalesce(1).write.parquet(tmpd)
-      val part = new java.io.File(tmpd).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = watched.resolve(name).toFile
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      assert(target.setLastModified(mtime))
-    }
-    // batch 1: 101 dups the corpus, 102 is novel, 103 dups 102 in-batch;
-    // batch 2 (later mtime): 201 dups the APPENDED 102, 202 is novel
-    val t0 = System.currentTimeMillis()
-    stage("b1.parquet", mk(101L -> w1, 102L -> n1, 103L -> n1), t0 - 120000)
-    stage("b2.parquet", mk(201L -> n1, 202L -> n2), t0 - 60000)
-    val stream = spark.readStream.schema(mk(1L -> w1).schema)
-      .option("maxFilesPerTrigger", 1).parquet(watched.toString)
-    val verdicts = root.resolve("verdicts").toString
-    val q = Streaming.nearDupIngestStream(stream, idx, verdicts)
-    q.awaitTermination()
-    val v = spark.read.parquet(verdicts).collect()
-      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    assert(v == Map(101L -> true, 102L -> false, 103L -> true,
-      201L -> true, 202L -> false), s"verdicts drifted: $v")
-    // the index now answers for a keeper appended mid-stream
-    val hits = NearDupIndex.probeNearDup(spark, idx, mk(301L -> n2)).collect()
-    assert(hits.exists(r => r.getLong(0) == 202L && r.getLong(1) == 301L),
-      s"appended keeper 202 not indexed: ${hits.mkString(",")}")
   }
 
   test("streaming rollup maintenance ≡ batch: partials from micro-batches serve identically") {
@@ -342,47 +167,6 @@ class StreamingSpec extends SparkSpec {
       "replayed append changed a served estimate — idempotence broken")
   }
 
-  test("streaming source quota: the admission counter survives micro-batch boundaries") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-quota")
-    val watched = java.nio.file.Files.createDirectory(root.resolve("in"))
-    def stage(name: String, rows: Seq[(Long, String)], mtime: Long): Unit = {
-      val tmpd = root.resolve(name + "_tmp").toString
-      rows.toDF("doc_id", "source").coalesce(1).write.parquet(tmpd)
-      val part = new java.io.File(tmpd).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = watched.resolve(name).toFile
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      assert(target.setLastModified(mtime))
-    }
-    val t0 = System.currentTimeMillis()
-    // batch 1: a fills its quota of 2 (doc 12 arrives "before" 11 by id
-    // order? no — admission is doc_id-ordered within the batch); batch 2:
-    // a is already full, b still has room
-    stage("b1.parquet", Seq((12L, "a"), (11L, "a"), (13L, "a"), (21L, "b")),
-      t0 - 120000)
-    stage("b2.parquet", Seq((14L, "a"), (22L, "b")), t0 - 60000)
-    val stream = spark.readStream
-      .schema(Seq((1L, "x")).toDF("doc_id", "source").schema)
-      .option("maxFilesPerTrigger", 1).parquet(watched.toString)
-      .as[Streaming.DocIn]
-    val out = root.resolve("out").toString
-    val q = Streaming.sourceQuotaStream(stream, quota = 2L)
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val v = spark.read.parquet(out).collect()
-      .map(r => r.getLong(0) -> (r.getBoolean(2), r.getLong(3))).toMap
-    assert(v == Map(
-      11L -> (true, 1L), 12L -> (true, 2L), 13L -> (false, -1L),
-      21L -> (true, 1L),
-      14L -> (false, -1L),   // source a was filled in batch 1
-      22L -> (true, 2L)), s"verdicts drifted: $v")
-  }
-
   test("streaming PII scrub ≡ batch q60 over the synthesized log lines") {
     val dir = "/root/testdata/sf0.001"
     // stage the synthesized raw lines as a text file the stream watches
@@ -391,7 +175,7 @@ class StreamingSpec extends SparkSpec {
     val watched = java.nio.file.Files.createTempDirectory("graft-pii-stream")
     lines.coalesce(1).write.mode("overwrite").text(watched.toString)
     val stream = spark.readStream.text(watched.toString)
-    val q = Streaming.piiScrubStream(stream)
+    val q = graft.ops.Privacy.piiScan(stream, col("value"))
       .select(org.apache.spark.sql.functions.col("redacted_md5"),
         org.apache.spark.sql.functions.col("n_ips"))
       .writeStream.format("memory").queryName("pii_sink")
@@ -415,7 +199,7 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       watched.resolve("documents.parquet"))
     val stream = spark.readStream.schema(schema).parquet(watched.toString)
-    val q = Streaming.chunkStream(stream)
+    val q = graft.ops.Chunking.chunkUnsorted(stream, 64, 48)
       .writeStream.format("memory").queryName("chunk_sink")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -471,7 +255,8 @@ class StreamingSpec extends SparkSpec {
     // the stream applies the PERSISTED tables — frozen rules, the
     // operator's contract (a mid-stream retrain would invalidate every
     // previously emitted sequence)
-    val merges = graft.ops.Bpe.readMerges(spark, graft.ops.Bpe.MergesPath)
+    val merges = spark.read.parquet(graft.ops.Bpe.MergesPath)
+      .orderBy(col("rank")).collect().map(r => (r.getString(1), r.getString(2)))
     val vocab = spark.read.parquet(graft.ops.Bpe.VocabPath)
       .orderBy(org.apache.spark.sql.functions.col("id"))
       .collect().map(_.getString(1))
@@ -481,8 +266,8 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       watched.resolve("documents.parquet"))
     val stream = spark.readStream.schema(schema).parquet(watched.toString)
-    val q = Streaming.tokenizeStream(stream, merges, vocab)
-      .select("doc_id", "token_ids")
+    val q = stream
+      .select(col("doc_id"), graft.ops.Bpe.bpeIds(col("text"), merges, vocab).as("token_ids"))
       .writeStream.format("memory").queryName("tok_sink")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
